@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Self-similar full-board scale-up generator (VERDICT r10 item 2: the
   * whole query board had never run above sf0.1). Replicates EVERY testdata
   * table N× with disjoint key spaces, so the generated dir serves the
-  * complete SparkEntry board through graft.Bench at an sf1-equivalent
+  * complete SparkEntry board through graft.Verify at an sf1-equivalent
   * size, drawn from the REAL sf0.1 distributions (replication preserves
   * them exactly — no synthetic-generator drift):
   *
@@ -35,7 +35,8 @@ import org.apache.spark.sql.functions._
   * scale. Usage:
   *
   *   sbt "runMain graft.GenScaled /root/testdata/sf0.1 /tmp/graft-sf1 10"
-  *   SPARK_GRAFT_SF_DIR=/tmp/graft-sf1 sbt "runMain graft.Bench"
+  *   sbt "runMain graft.Verify /tmp/graft-sf1 /tmp/graft-sf1-out"
+  *   python3 tools/check.py /tmp/graft-sf1 /tmp/graft-sf1-out
   */
 object GenScaled {
 

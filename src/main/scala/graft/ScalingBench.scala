@@ -306,7 +306,7 @@ object ScalingBench {
     // cluster pays for — the one-scan-vs-two-scan A/B is adjudicated on
     // this, not on local latency. (Records, not bytes: the vectorized
     // parquet reader bypasses the Hadoop byte statistics — see
-    // ShuffleAudit's trust-boundary note.)
+    // StageMetrics' trust-boundary note.)
     val sm = core.StageMetrics.attach(spark)
     val Runs = 3
     val timed: Map[Int, Seq[(String, (Double, Long))]] = scales.map { s =>

@@ -2,8 +2,9 @@ package graft.core
 
 import org.apache.spark.sql.SparkSession
 
-/** The one local-session recipe every runnable main shares (Verify, Bench,
-  * ScalingBench, StreamBench, RecallBench, Explain, FeatureApiMain) — the
+/** The one local-session recipe every runnable main shares (Verify,
+  * RunnerVerify, GenScaled, Explain, ScalingBench, StreamBench, RecallBench,
+  * FeatureApiMain, GrpcServerMain) — the
   * settings are load-bearing, so they live in exactly one place:
   *
   *   - GraftExtensions registers the native codegen expressions;
@@ -44,10 +45,10 @@ object Sessions {
       // fit instead of always preferring sort-merge (guide §3.1/§9): the
       // full-outer key-reconciliation joins (migration_checks,
       // snapshot_diff) and the pit/asof probes pay two wide sorts under
-      // SMJ that SHJ skips. Measured interleaved (TfidfAB smj, conf
-      // toggled per iteration in one JVM) on the join-heavy board members:
-      // ~8% at sf0.1 (2.91→2.66), ~5% at x10 (6.02→5.70), ~11% at x100
-      // (36.8→32.8). NOT a local[32] tune: the decision stays per-join and
+      // SMJ that SHJ skips. Measured interleaved (conf toggled per
+      // iteration in one JVM; OPTIMIZATION_r17.md §7) on the join-heavy
+      // board members: ~8% at sf0.1 (2.91→2.66), ~5% at x10 (6.02→5.70),
+      // ~11% at x100 (36.8→32.8). NOT a local[32] tune: the decision stays per-join and
       // size-gated by the planner (a build side that can't fit a local map
       // still gets SMJ), and AQE skew-split handles SHJ like SMJ.
       .config("spark.sql.join.preferSortMergeJoin", "false")

@@ -22,7 +22,8 @@ import org.apache.spark.sql.SparkSession
   * feed `inputMetrics.bytesRead`, so a full 150k-row scan reports ~3.5 KB
   * (footer traffic only). Consumers must therefore never ratio shuffle
   * bytes against input BYTES; scale claims compare shuffle bytes across
-  * scale factors against input ROW growth instead (graft.ShuffleAudit).
+  * scale factors against input ROW growth instead (PERF.md, "Shuffle-economy
+  * audit: bytes moved vs data growth").
   */
 final class StageMetrics private (spark: SparkSession) {
   private val inputBytes = new AtomicLong

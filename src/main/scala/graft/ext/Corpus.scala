@@ -617,7 +617,8 @@ object Corpus {
         // — byte-equal to transform(sequence(0, n-2),
         //   i -> concat_ws(" ", __toks[i+1], __toks[i+2]))
         explode(call_function("span_hashes", col("__toks"), lit(2), lit(1),
-          lit(graft.plans.SpanHashes.FmtStr))).as("bigram"))
+          lit(graft.plans.SpanHashes.FmtStr), lit(graft.plans.SpanHashes.Sliding)))
+          .as("bigram"))
       .withColumn("__h", md5(col("bigram")))
       .select(col("doc_id"), col("is_target"),
         (hexv(substring(col("__h"), 1, 1)) * 16 +

@@ -529,7 +529,8 @@ object Dedup {
       // to posexplode(transform(sequence(0, ceil(n/k)-1),
       //   i -> unhex(md5(concat_ws(" ", slice(__toks, i*k+1, k))))))
       .select(col("doc_id"), posexplode(
-        call_function("span_hashes", col("__toks"), lit(spanTokens), lit(spanTokens))))
+        call_function("span_hashes", col("__toks"), lit(spanTokens), lit(spanTokens),
+          lit(graft.plans.SpanHashes.FmtBin), lit(graft.plans.SpanHashes.Clamped))))
       .toDF("doc_id", "span_idx", "h")
     val first = spans.groupBy("h")
       .agg(min(struct(col("doc_id"), col("span_idx"))).as("first"))
@@ -568,7 +569,8 @@ object Dedup {
       // byte-equal to posexplode(transform(sequence(0, n-k),
       //   i -> unhex(md5(concat_ws(" ", slice(__toks, i+1, k))))))
       .select(col("doc_id"), posexplode(
-        call_function("span_hashes", col("__toks"), lit(k), lit(1))))
+        call_function("span_hashes", col("__toks"), lit(k), lit(1),
+          lit(graft.plans.SpanHashes.FmtBin), lit(graft.plans.SpanHashes.Sliding))))
       .toDF("doc_id", "pos", "h")
       // k rides the hash column's metadata so a consumer can detect a
       // window table built at a different k than its own argument

@@ -314,7 +314,8 @@ object TextAnalysis {
     //   i -> concat_ws(" ", toks[i], toks[i+1])) under the n >= 2 filter
     val bigrams = withT.select(col("doc_id"), col("n_tokens"),
       explode(call_function("span_hashes", col("toks"), lit(2), lit(1),
-        lit(graft.plans.SpanHashes.FmtStr))).as("bigram"))
+        lit(graft.plans.SpanHashes.FmtStr), lit(graft.plans.SpanHashes.Sliding)))
+        .as("bigram"))
     bigrams.groupBy("doc_id", "n_tokens", "bigram")
       .agg(count(lit(1)).as("c"))
       .groupBy("doc_id", "n_tokens")
@@ -411,11 +412,12 @@ object TextAnalysis {
     // r17 note: the window-over-repartition form (doc_len as sum(tf) over
     // a doc_id window fused with the rank's exchange, VERDICT r16 #4) was
     // built and measured INTERLEAVED against this form at sf0.1, x10 and
-    // x100 (graft.TfidfAB): 12% SLOWER at sf0.1 (0.716 vs 0.639 median of
-    // 8) and statistically flat at both rungs (x10: 2.02 vs 1.99; x100:
-    // 19.2 vs 19.3) — the corpus-sized window exchange it adds costs
-    // exactly what the docs-sized doc_len branch saves, and the tokenize
-    // dominates at every rung. Rejected; this join form stays.
+    // x100 (OPTIMIZATION_r17.md, rejected levers): 12% SLOWER at sf0.1
+    // (0.716 vs 0.639 median of 8) and statistically flat at both rungs
+    // (x10: 2.02 vs 1.99; x100: 19.2 vs 19.3) — the corpus-sized window
+    // exchange it adds costs exactly what the docs-sized doc_len branch
+    // saves, and the tokenize dominates at every rung. Rejected; this join
+    // form stays.
     val docLen = tf.groupBy("doc_id").agg(sum("tf").as("doc_len"))
     val dfreq = tf.groupBy("term")
       .agg(count(when(col("tf") >= 1, 1)).as("df"))
@@ -596,7 +598,7 @@ object TextAnalysis {
     // is the explicit otherwise branch (SpanHashesSpec pins row equality)
     val minShingle = when(size(col("__toks")) >= 3,
       array_min(call_function("span_hashes", col("__toks"), lit(3), lit(1),
-        lit(graft.plans.SpanHashes.FmtHex))))
+        lit(graft.plans.SpanHashes.FmtHex), lit(graft.plans.SpanHashes.Sliding))))
       .otherwise(md5(col("text")))
     docs.withColumn("__toks", t)
       .select(col("doc_id"), prefix.as("prefix_fp"), minShingle.as("min_shingle_fp"))

@@ -163,24 +163,17 @@ object Vocab {
     *
     * Worst case (all boundary ties, or self-pair-heavy corpora) degrades
     * to one merge per round — exactly bpeLearn; Zipfian natural-text
-    * corpora accept most of the batch (BpeBench measures both). VocabSpec
+    * corpora accept most of the batch (round counts for both shapes:
+    * PERF.md, "Batched-exact BPE: the merge-round ladder"). VocabSpec
     * pins list-equality across batch sizes on three corpus shapes incl.
     * the self-pair and tie-storm fixtures. */
-  def bpeLearnBatched(docs: DataFrame, merges: Int, batch: Int): Seq[(String, String)] =
-    bpeLearnBatchedCounted(docs, merges, batch)._1
-
-  /** bpeLearnBatched plus its Spark-round count — the number BpeBench
-    * reports, since rounds (not data) are the cost at corpus scale. */
-  private[graft] def bpeLearnBatchedCounted(
-      docs: DataFrame, merges: Int, batch: Int): (Seq[(String, String)], Int) = {
+  def bpeLearnBatched(docs: DataFrame, merges: Int, batch: Int): Seq[(String, String)] = {
     require(batch >= 1, s"batch must be >= 1: $batch")
     val words = wordFreq(docs).cache()
     words.count(): Unit
-    var rounds = 0
     val learned = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
     var done = false
     while (learned.length < merges && !done) {
-      rounds += 1
       val want = math.min(batch, merges - learned.length)
       val cand = pairStats(words.withColumn("syms",
           encodeSyms(col("word"), learned.toSeq)))
@@ -205,6 +198,6 @@ object Vocab {
       }
     }
     words.unpersist()
-    (learned.toSeq, rounds)
+    learned.toSeq
   }
 }

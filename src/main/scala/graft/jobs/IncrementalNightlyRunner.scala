@@ -30,7 +30,8 @@ import graft.sinks.MergeByKey
   *   - reading features re-aggregates day-pruned SUMMARY rows (bounded by
   *     active users × their in-grain distinct values per day), never the
   *     raw 31/91-day windows — the read-economy that makes a 100 TB
-  *     nightly feasible (measured by IncrementalNightBench; PERF.md row).
+  *     nightly feasible (PERF.md r14, "Nightly read economy, one more
+  *     decade (×100)": 48.7× fewer raw records per night).
   *
   * The whole flow is driven by injected `Sources` rather than raw paths so
   * the measurement harness can hand it date-partitioned landings (the

@@ -38,7 +38,7 @@ object MigrationValidationJob {
     * an orphan probe and leaned on ReuseExchange to run each scan once —
     * the plan SHOWED one scan per table, but at runtime AQE re-executed
     * every shared subtree (each table scanned ~2×, each groupBy shuffled
-    * 2×: ShuffleAudit input_records 45.45M at ×30 vs 22.95M of table
+    * 2×: input_records 45.45M at ×30 vs 22.95M of table
     * rows), and the ×30→×60 A/B measured ×2.7 shuffle records for ×2 rows
     * with the orphan probe's broadcast flipping to SMJ as the key set
     * outgrew the threshold. The full-outer form needs no reuse to be
@@ -47,7 +47,8 @@ object MigrationValidationJob {
     * broadcast at any scale, and the six checks cost exactly four
     * key-grouped shuffles of (key, count) rows — never raw fact rows.
     * ScaleShapeSpec pins the scan counts; the runtime record economy is
-    * in the ShuffleAudit ledger. */
+    * PERF.md r12's "migration_checks: the reuse-dependent shape replaced
+    * by full-outer single passes" table. */
   def checks(spark: SparkSession, dir: String): DataFrame = {
     val customer = Tables.customer(spark, dir)
     val orders   = Tables.orders(spark, dir)

@@ -154,7 +154,7 @@ object PitJoin {
   }
 
   /** The SEGMENTED-SCAN form of fillBanded — the hot-key fix that works
-    * for ANY probe/fact mix (PitSaltBench: probe-salting LOSES on
+    * for ANY probe/fact mix (PERF.md r11 PIT table: probe-salting LOSES on
     * fact-heavy hot keys because every salt partition replicates all the
     * key's facts; this splits by TIME instead). The classic distributed
     * prefix-scan, three steps:
@@ -273,9 +273,10 @@ object PitJoin {
     * pins salted ≡ unsalted), but the hot key's sort now runs on `salts`
     * tasks.
     *
-    * WHEN it pays (PitSaltBench, measured both ways): only when PROBES
-    * dominate the hot timeline. Each salt partition carries probes/salts
-    * but ALL of the key's facts (the replication), so per-task work is
+    * WHEN it pays (measured both ways, PERF.md r11 "Wide PIT matrix and
+    * the salted window"): only when PROBES dominate the hot timeline.
+    * Each salt partition carries probes/salts but ALL of the key's facts
+    * (the replication), so per-task work is
     * facts + probes/salts — a probe-heavy hot key (many labels, few
     * feature updates) parallelizes (39→15 s at salts=8 on a 95%-hot
     * frame), while a FACT-heavy one gets SLOWER (112→184 s — the
@@ -420,7 +421,7 @@ object PitJoin {
     * per-key (count, ts span) with map-side partial aggregation, top-1 by
     * count — the histogram is keys-sized, never rows-sized.
     *
-    * Decision rule, from PitSaltBench's measured A/B (PERF.md r11 table):
+    * Decision rule, from the measured A/B (PERF.md r11 PIT table):
     * the segmented scan beats plain 4.4× on probe-heavy AND 3.3× on
     * fact-heavy 95%-hot frames — the probe/fact mix picks between
     * salting and ranged (salting loses fact-heavy), but NEVER between

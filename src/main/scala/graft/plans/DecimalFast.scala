@@ -140,24 +140,4 @@ object DecimalFast {
     val total = if (accB == null) tail else accB.add(tail)
     java.lang.Double.valueOf(total.doubleValue())
   }
-
-  /** The pre-r17.2 per-element BigDecimal loop, verbatim — the reference
-    * `decimalDot15` must match bit-for-bit (DecimalFastSpec) and the slow
-    * arm of the TfidfAB `dot` harness. */
-  def refDot15(x: ArrayData, y: ArrayData,
-               leftFloat: Boolean, rightFloat: Boolean): java.lang.Double = {
-    val n = x.numElements()
-    if (n != y.numElements()) return null
-    var acc = JBigDecimal.ZERO
-    var i = 0
-    while (i < n) {
-      if (x.isNullAt(i) || y.isNullAt(i)) return null
-      val p = (if (leftFloat) x.getFloat(i).toDouble else x.getDouble(i)) *
-        (if (rightFloat) y.getFloat(i).toDouble else y.getDouble(i))
-      if (!java.lang.Double.isFinite(p)) return null
-      acc = acc.add(refTerm(p, 15))
-      i += 1
-    }
-    java.lang.Double.valueOf(acc.doubleValue())
-  }
 }

@@ -35,16 +35,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
   *
   * Inputs may be array<float> or array<double> independently (floats are
   * widened per element, identical to casting the array first — without
-  * materializing the cast copy per row). `ref=true` pins the original
-  * per-element BigDecimal loop (dev A/B + test reference only).
+  * materializing the cast copy per row).
   */
-case class DecimalVectorDot(left: Expression, right: Expression,
-                            ref: Boolean = false)
+case class DecimalVectorDot(left: Expression, right: Expression)
   extends BinaryExpression {
 
   override def dataType: DataType = DoubleType
-  override def prettyName: String =
-    if (ref) "decimal_vector_dot_ref" else "decimal_vector_dot"
+  override def prettyName: String = "decimal_vector_dot"
   // nullable even over non-null inputs: a non-finite product nulls the sum
   // (also keeps ev.isNull a real variable in the generated code)
   override def nullable: Boolean = true
@@ -67,16 +64,14 @@ case class DecimalVectorDot(left: Expression, right: Expression,
   override protected def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[ArrayData]
     val y = b.asInstanceOf[ArrayData]
-    if (ref) DecimalFast.refDot15(x, y, isFloat(left.dataType), isFloat(right.dataType))
-    else DecimalFast.decimalDot15(x, y, isFloat(left.dataType), isFloat(right.dataType))
+    DecimalFast.decimalDot15(x, y, isFloat(left.dataType), isFloat(right.dataType))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (x, y) => {
       val r = ctx.freshName("r")
-      val fn = if (ref) "refDot15" else "decimalDot15"
       s"""
-         |java.lang.Double $r = graft.plans.DecimalFast.$fn(
+         |java.lang.Double $r = graft.plans.DecimalFast.decimalDot15(
          |  $x, $y, ${isFloat(left.dataType)}, ${isFloat(right.dataType)});
          |${ev.isNull} = $r == null;
          |${ev.value} = $r == null ? -1.0 : $r.doubleValue();

@@ -126,13 +126,11 @@ final class DecVecSumBuffer(val n: Int) {
 case class DecimalVectorSum(
     child: Expression,
     dim: Int,
-    ref: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[DecVecSumBuffer] with UnaryLike[Expression] {
 
-  override def prettyName: String =
-    if (ref) "decimal_vector_sum_ref" else "decimal_vector_sum"
+  override def prettyName: String = "decimal_vector_sum"
   override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(DecimalType(37, 10), containsNull = true)
 
@@ -161,7 +159,7 @@ case class DecimalVectorSum(
           if (!java.lang.Double.isFinite(d))
             throw new ArithmeticException(
               s"$prettyName: $d cannot be represented as DECIMAL(27,10)")
-          if (!ref && d > -DecimalFast.Fast10 && d < DecimalFast.Fast10) {
+          if (d > -DecimalFast.Fast10 && d < DecimalFast.Fast10) {
             // allocation-free HALF_UP decimal parse (DecimalFast) — the
             // guard also guarantees precision ≤ 19 < 27, so the slow
             // path's precision check is subsumed

@@ -1,9 +1,7 @@
 package graft.plans
 
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -68,123 +66,4 @@ case class FloatVectorDot(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-/** Session extension registering the engine's native functions —
-  * `SparkSession.builder.withExtensions(new GraftExtensions)`, or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("float_vector_dot"),
-      new ExpressionInfo(classOf[FloatVectorDot].getName, "float_vector_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "float_vector_dot(a, b) takes two arguments")
-        FloatVectorDot(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("decimal_vector_dot"),
-      new ExpressionInfo(classOf[DecimalVectorDot].getName, "decimal_vector_dot"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "decimal_vector_dot(a, b) takes two arguments")
-        DecimalVectorDot(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("decimal_vector_sum"),
-      new ExpressionInfo(classOf[DecimalVectorSum].getName, "decimal_vector_sum"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "decimal_vector_sum(vec, dim) takes two arguments")
-        val dim = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(i: Int,
-            org.apache.spark.sql.types.IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"decimal_vector_sum: dim must be an int literal, got $other")
-        }
-        DecimalVectorSum(args(0), dim)
-      }))
-    // *_ref variants pin the pre-r17.2 per-element BigDecimal paths — dev
-    // A/B (TfidfAB dot) and bit-equality test references only; no query
-    // path uses them
-    ext.injectFunction((
-      new FunctionIdentifier("decimal_vector_dot_ref"),
-      new ExpressionInfo(classOf[DecimalVectorDot].getName, "decimal_vector_dot_ref"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "decimal_vector_dot_ref(a, b) takes two arguments")
-        DecimalVectorDot(args(0), args(1), ref = true)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("decimal_vector_sum_ref"),
-      new ExpressionInfo(classOf[DecimalVectorSum].getName, "decimal_vector_sum_ref"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "decimal_vector_sum_ref(vec, dim) takes two arguments")
-        val dim = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(i: Int,
-            org.apache.spark.sql.types.IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"decimal_vector_sum_ref: dim must be an int literal, got $other")
-        }
-        DecimalVectorSum(args(0), dim, ref = true)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bitstring_hamming"),
-      new ExpressionInfo(classOf[BitStringHamming].getName, "bitstring_hamming"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "bitstring_hamming(a, b) takes two arguments")
-        BitStringHamming(args(0), args(1))
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgrams].getName, "word_ngrams"),
-      (args: Seq[Expression]) => {
-        require(args.length == 3, "word_ngrams(toks, text, n) takes three arguments")
-        val n = args(2) match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(i: Int,
-            org.apache.spark.sql.types.IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"word_ngrams: n must be an int literal, got $other")
-        }
-        WordNgrams(args(0), args(1), n)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("span_hashes"),
-      new ExpressionInfo(classOf[SpanHashes].getName, "span_hashes"),
-      (args: Seq[Expression]) => {
-        require(args.length >= 3 && args.length <= 5,
-          "span_hashes(toks, k, stride[, format[, clamped]]) takes three to five arguments")
-        def intLit(e: Expression, name: String): Int = e match {
-          case org.apache.spark.sql.catalyst.expressions.Literal(i: Int,
-            org.apache.spark.sql.types.IntegerType) => i
-          case other => throw new IllegalArgumentException(
-            s"span_hashes: $name must be an int literal, got $other")
-        }
-        val stride = intLit(args(2), "stride")
-        val fmt = if (args.length >= 4) intLit(args(3), "format") else SpanHashes.FmtBin
-        // default keeps the historical dispatch: stride 1 slides, else spans
-        val clamped = if (args.length == 5) intLit(args(4), "clamped") != 0
-                      else stride != 1
-        SpanHashes(args(0), intLit(args(1), "k"), stride, fmt, clamped)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("count_in"),
-      new ExpressionInfo(classOf[CountIn].getName, "count_in"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "count_in(arr, array('w1', ...)) takes two arguments")
-        val words = args(1) match {
-          case org.apache.spark.sql.catalyst.expressions.CreateArray(es, _)
-            if es.forall(_.isInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]) =>
-            es.map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.Literal]
-              .value.toString)
-          case other => throw new IllegalArgumentException(
-            s"count_in: the word list must be an array of string literals, got $other")
-        }
-        CountIn(args(0), words)
-      }))
-    ext.injectFunction((
-      new FunctionIdentifier("bpe_encode"),
-      new ExpressionInfo(classOf[BpeEncode].getName, "bpe_encode"),
-      (args: Seq[Expression]) => {
-        require(args.length == 2, "bpe_encode(word, merges_spec) takes two arguments")
-        BpeEncode(args(0), args(1))
-      }))
-  }
 }

@@ -15,6 +15,8 @@ object SpanHashKernel {
   }
   private val SP = Array[Byte](' ')
 
+  private val HEX = "0123456789abcdef".toCharArray
+
   /** MD5 digests (raw 16 bytes = `unhex(md5(...))`) of the space-joined
     * token windows `toks[i·stride, i·stride + k)`:
     *
@@ -32,13 +34,9 @@ object SpanHashKernel {
     * produce: null tokens contribute neither bytes nor a separator; one
     * single-space separator between surviving tokens. A null token array
     * returns null (`transform(null)` semantics — posexplode then emits
-    * nothing). */
-  def hashes(toks: ArrayData, k: Int, stride: Int): ArrayData =
-    windows(toks, k, stride, 0, stride != 1)
-
-  private val HEX = "0123456789abcdef".toCharArray
-
-  /** format: 0 = raw 16-byte digest (`unhex(md5(...))`), 1 = lowercase hex
+    * nothing).
+    *
+    * format: 0 = raw 16-byte digest (`unhex(md5(...))`), 1 = lowercase hex
     * digest (`md5(...)` — commons-codec md5Hex byte-for-byte), 2 = the
     * joined window string itself (`concat_ws(" ", slice(...))`, no hash). */
   def windows(toks: ArrayData, k: Int, stride: Int, format: Int,
@@ -95,9 +93,9 @@ object SpanHashKernel {
   }
 }
 
-/** Native Catalyst expression: `span_hashes(toks, k, stride)` — the raw-MD5
-  * token-window hashes of ext/Dedup's span and substring-window builders,
-  * replacing
+/** Native Catalyst expression: `span_hashes(toks, k, stride, format,
+  * clamped)` — the raw-MD5 token-window hashes of ext/Dedup's span and
+  * substring-window builders, replacing
   *
   *   transform(sequence(0, <count-1>),
   *     i -> unhex(md5(concat_ws(" ", slice(toks, <i·stride>+1, k)))))
@@ -113,9 +111,8 @@ object SpanHashKernel {
   * (MD5 over identical bytes). Elementwise equality with the old tree is
   * pinned in WordNgramsSpec's sibling tests (SpanHashesSpec).
   */
-case class SpanHashes(child: Expression, k: Int, stride: Int,
-                      format: Int = SpanHashes.FmtBin,
-                      clamped: Boolean = false)
+case class SpanHashes(child: Expression, k: Int, stride: Int, format: Int,
+                      clamped: Boolean)
   extends UnaryExpression {
 
   override def prettyName: String = "span_hashes"
@@ -154,11 +151,10 @@ object SpanHashes {
   /** The two window-count semantics, as SQL-arg values (5th argument):
     * CLAMPED = ceil(n/stride) windows, the tail shortened at the array end
     * (span/chunk form); SLIDING = floor((n−k)/stride)+1 full-k windows
-    * (substring/bigram form, caller guards n ≥ k). When the argument is
-    * omitted the span form is inferred from stride == k and stride 1 means
-    * sliding — the historical dispatch, which chunk_windows' strided-hex
-    * caller must override (its stride-1 shape is CLAMPED: n windows, the
-    * last k−1 shortened — the r17 session-3 fix; AnalyticsOpsSpec pins it). */
+    * (substring/bigram form, caller guards n ≥ k). Every caller names its
+    * mode: the stride alone does not decide it (chunk_windows at stride 1
+    * is CLAMPED — n windows, the last k−1 shortened; AnalyticsOpsSpec pins
+    * it). */
   val Clamped = 1
   val Sliding = 0
 }

@@ -297,8 +297,9 @@ object Compaction {
     *
     * Depth guard (r16, VERDICT r15 #4): an UNPRUNED read over more than
     * `FlatScanWarnAt` stores logs a loud warning naming the pruned paths —
-    * PointeredPlanBench measured the flat path's plan analysis at 27 s for
-    * 1000 stores vs 0.11 s pruned, a silent driver tax a caller that
+    * the flat path's plan analysis measured 27 s for 1000 stores vs
+    * 0.11 s pruned (PERF.md r15, "Pointered warehouse: listing-level
+    * pruning measured at 1000 stores"), a silent driver tax a caller that
     * forgot `onlyValues`/`readPointeredWhere` on a years-deep warehouse
     * would pay on every query. Full-scan semantics are legitimate
     * (backfills, audits), so the guard warns rather than refuses;
@@ -378,10 +379,10 @@ object Compaction {
   // different bytes across a store's expire/reland or compaction cycles —
   // the cache is sound for the JVM's lifetime, and repeat reads of a deep
   // warehouse pay the footer parse once per version (measured ~14 ms/store
-  // uncached at 1000 stores, PointeredPlanBench). BOUNDED (review r16):
-  // compaction swings mint a new part-file UUID per store per night, so a
-  // resident serving JVM over a large warehouse would otherwise pin one
-  // dead-path entry per swing forever; at the cap the cache is cleared
+  // uncached at 1000 stores, PERF.md r16 footer-schema drift row).
+  // BOUNDED (review r16): compaction swings mint a new part-file UUID per
+  // store per night, so a resident serving JVM over a large warehouse would
+  // otherwise pin one dead-path entry per swing forever; at the cap the cache is cleared
   // whole — a full rebuild costs ~14 ms/store once, against unbounded heap
   // growth in exactly the always-on session the cache exists for.
   private val FooterCacheMax = 4096

@@ -14,7 +14,7 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession => ClassicSession}
   * lookup). For the incremental-ladder states the build tree is thousands
   * of nodes (a 3-day backfill/step/tail fold per source), and the walk cost
   * recurs on EVERY consumer query — measured 0.3–0.7 s of pure driver time
-  * per bench run (BenchOne build/plan split, r16). Substituting the
+  * per bench run (PERF.md, round 16 OPTIMIZATION pass). Substituting the
   * `InMemoryRelation` leaf is exactly what `QueryExecution.withCachedData`
   * would do anyway at execution; doing it once at cache-publish time makes
   * the per-consumer analysis O(consumer), not O(build lineage).

@@ -546,7 +546,7 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     val base = Files.createTempDirectory("graft-flat-guard").toString
     // one real store, cloned through the filesystem into N day stores —
-    // the PointeredPlanBench fixture recipe, sized just past the threshold
+    // the 1000-store measurement's fixture recipe, sized just past the threshold
     val seed = s"$base/seed"
     Seq((1L, "x")).toDF("id", "payload").coalesce(1).write.parquet(s"$seed/v1")
     graft.jobs.MigrationRunner.publish(spark, seed, "v1")

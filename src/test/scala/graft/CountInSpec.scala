@@ -51,7 +51,7 @@ class CountInSpec extends SparkSpec {
       ext.Dedup.shinglesOf(col("__toks"), col("text")), x => md5(x)))
     val newMin = when(size(col("__toks")) >= 3,
       array_min(call_function("span_hashes", col("__toks"), lit(3), lit(1),
-        lit(graft.plans.SpanHashes.FmtHex))))
+        lit(graft.plans.SpanHashes.FmtHex), lit(graft.plans.SpanHashes.Sliding))))
       .otherwise(md5(col("text")))
     val bad = rows.select(newMin.as("n"), oldMin.as("o"))
       .filter(!(col("n") <=> col("o")))

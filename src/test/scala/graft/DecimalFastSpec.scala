@@ -2,7 +2,9 @@ package graft
 
 import java.math.{BigDecimal => JBigDecimal}
 
-import org.apache.spark.sql.catalyst.util.GenericArrayData
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.plans.DecimalFast
@@ -11,13 +13,24 @@ import graft.plans.DecimalFast
   * (plans/DecimalFast): `scaledLong` against the
   * `BigDecimal.valueOf(d).setScale(s, HALF_UP)` reference it replaces, the
   * dot kernel against the pre-r17.2 per-element BigDecimal loop (kept
-  * verbatim as refDot15 / the *_ref expressions), and the full
-  * embedding_outliers pipeline fast-vs-ref on real data. A single-ulp
+  * verbatim below as refDot15), and the full embedding_outliers pipeline
+  * against the builtin expression trees the two kernels replaced. A single-ulp
   * divergence anywhere fails loud — these kernels sit inside queries whose
   * outputs the DuckDB oracle hashes.
   */
+object DecimalFastSpec {
+  /** The builtin fold decimal_vector_dot replaced: decimal(30,15) terms,
+    * exact decimal accumulation, double out. */
+  def foldDot(a: Column, b: Column): Column =
+    aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
+        (p, q) => (p * q).cast("decimal(30,15)")),
+      lit(0).cast("decimal(32,15)"),
+      (acc, e) => (acc + e).cast("decimal(32,15)")).cast("double")
+}
+
 class DecimalFastSpec extends SparkSpec {
   import spark.implicits._
+  import DecimalFastSpec.foldDot
 
   private val rnd = new java.util.Random(0xD2C1)
 
@@ -90,6 +103,47 @@ class DecimalFastSpec extends SparkSpec {
     intercept[ArithmeticException](DecimalFast.scaledLong(9.3e4, 15))
   }
 
+  /** The pre-r17.2 per-element BigDecimal loop, verbatim — the reference
+    * `decimalDot15` must match bit-for-bit. */
+  private def refDot15(x: ArrayData, y: ArrayData,
+                       leftFloat: Boolean, rightFloat: Boolean): java.lang.Double = {
+    val n = x.numElements()
+    if (n != y.numElements()) return null
+    var acc = JBigDecimal.ZERO
+    var i = 0
+    while (i < n) {
+      if (x.isNullAt(i) || y.isNullAt(i)) return null
+      val p = (if (leftFloat) x.getFloat(i).toDouble else x.getDouble(i)) *
+        (if (rightFloat) y.getFloat(i).toDouble else y.getDouble(i))
+      if (!java.lang.Double.isFinite(p)) return null
+      acc = acc.add(DecimalFast.refTerm(p, 15))
+      i += 1
+    }
+    java.lang.Double.valueOf(acc.doubleValue())
+  }
+
+  /** The builtin per-element sums decimal_vector_sum replaced. */
+  private def columnSums(vec: Column, dim: Int): Seq[Column] =
+    (0 until dim).map(i => sum(vec.getItem(i).cast("double").cast("decimal(27,10)")))
+
+  /** ext/Similarity.embeddingOutliers (k = 5, 64 dims) with its two kernels
+    * as parameters. */
+  private def embOutliersWith(embeddings: DataFrame, dot: (Column, Column) => Column,
+                              sums: Column => Column): DataFrame = {
+    val x = col("embedding")
+    val centArr = embeddings.groupBy("label")
+      .agg(count(lit(1)).as("__n"), sums(x).as("__sums"))
+      .select(col("label"), array((0 until 64).map(i =>
+        col("__sums").getItem(i).cast("double") / col("__n")): _*).as("__c"))
+      .withColumn("__nc", dot(col("__c"), col("__c")))
+    embeddings.join(broadcast(centArr), Seq("label"))
+      .select(col("vec_id"), col("label"), graft.ops.Ops.rnd(
+        dot(x, col("__c")) / sqrt(dot(x, x) * col("__nc")), 6).as("cos_to_centroid"))
+      .withColumn("outlier_rank", row_number().over(Window.partitionBy("label")
+        .orderBy(col("cos_to_centroid").asc, col("vec_id").asc)))
+      .filter(col("outlier_rank") <= 5)
+  }
+
   private def floatArr(xs: Seq[java.lang.Float]): GenericArrayData =
     new GenericArrayData(xs.toArray[Any])
 
@@ -103,7 +157,7 @@ class DecimalFastSpec extends SparkSpec {
       })
       val (x, y) = (mk(), mk())
       val fast = DecimalFast.decimalDot15(x, y, true, true)
-      val ref = DecimalFast.refDot15(x, y, true, true)
+      val ref = refDot15(x, y, true, true)
       assert(fast == ref, s"dot mismatch at iteration $it: $fast vs $ref")
       it += 1
     }
@@ -114,7 +168,7 @@ class DecimalFastSpec extends SparkSpec {
     // non-finite product nulls (matches ref)
     val inf = floatArr(Seq(java.lang.Float.MAX_VALUE, 1.0f))
     assert(DecimalFast.decimalDot15(inf, inf, true, true) ==
-      DecimalFast.refDot15(inf, inf, true, true))
+      refDot15(inf, inf, true, true))
   }
 
   test("decimalDot15 long-lane overflow escalates exactly; slow terms mix with fast") {
@@ -124,22 +178,26 @@ class DecimalFastSpec extends SparkSpec {
     val ones = new GenericArrayData(Array.fill[Any](3000)(
       java.lang.Double.valueOf(1.0)))
     assert(DecimalFast.decimalDot15(big, ones, false, false) ==
-      DecimalFast.refDot15(big, ones, false, false))
+      refDot15(big, ones, false, false))
     // alternating fast (|p| < 9e3) and slow (|p| ≥ 9e3) terms, mixed signs
     val mixed = new GenericArrayData((0 until 500).map { i =>
       java.lang.Double.valueOf(if (i % 3 == 0) 12345.678 else if (i % 3 == 1) -8999.99 else 0.25)
     }.toArray[Any])
     val ones500 = new GenericArrayData(Array.fill[Any](500)(java.lang.Double.valueOf(1.0)))
     assert(DecimalFast.decimalDot15(mixed, ones500, false, false) ==
-      DecimalFast.refDot15(mixed, ones500, false, false))
+      refDot15(mixed, ones500, false, false))
   }
 
   test("embedding_outliers fast kernels == *_ref kernels end-to-end on real embeddings") {
     val emb = core.Tables.embeddings(spark, sf0001)
-    val fast = TfidfAB.embOutliersWith(emb, "decimal_vector_dot", "decimal_vector_sum")
-    val ref = TfidfAB.embOutliersWith(emb, "decimal_vector_dot_ref", "decimal_vector_sum_ref")
+    val fast = embOutliersWith(emb, call_function("decimal_vector_dot", _, _),
+      call_function("decimal_vector_sum", _, lit(64)))
+    val ref = embOutliersWith(emb, foldDot, v => array(columnSums(v, 64): _*))
     assert(fast.exceptAll(ref).isEmpty && ref.exceptAll(fast).isEmpty,
-      "fast and reference kernels must produce identical embedding_outliers rows")
+      "the kernels and the builtin trees must produce identical embedding_outliers rows")
+    val prod = ext.Similarity.embeddingOutliers(emb)
+    assert(fast.exceptAll(prod).isEmpty && prod.exceptAll(fast).isEmpty,
+      "the copy above must track the production query")
   }
 
   test("decimal_vector_sum fast lane == ref lane cell-exactly, incl. guard-crossing magnitudes") {
@@ -151,11 +209,12 @@ class DecimalFastSpec extends SparkSpec {
       (100, Seq(9.5e8f, 1.0e10f, -3.25f)), // beyond Fast10: slow path
       (101, Seq(0.125f, -0.25f, 0.0078125f))
     ).toDF("label", "embedding")
+      .coalesce(1) // one buffer sees all of a label's terms, so update overflows
     val agg = synth.groupBy("label").agg(
       call_function("decimal_vector_sum", col("embedding"), lit(3)).as("fast"),
-      call_function("decimal_vector_sum_ref", col("embedding"), lit(3)).as("ref"))
+      array(columnSums(col("embedding"), 3): _*).as("ref"))
     val bad = agg.filter((0 until 3).map(i =>
       !(col("fast").getItem(i) <=> col("ref").getItem(i))).reduce(_ || _))
-    assert(bad.count() == 0, "fast sum lane must equal the BigDecimal reference exactly")
+    assert(bad.count() == 0, "both sum lanes must equal the per-element decimal sums exactly")
   }
 }

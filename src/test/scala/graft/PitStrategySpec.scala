@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.PitJoin
 
-/** Pins for PitJoin.recommendStrategy on the four PitSaltBench frame
+/** Pins for PitJoin.recommendStrategy on the four measured frame
   * shapes (scaled ÷100 with the threshold scaled alongside — the
   * recommendation depends on rows-per-hot-key vs targetRowsPerTask, both
   * scaled linearly, so the decisions are the ones the full-size bench
@@ -14,7 +14,7 @@ import graft.ops.PitJoin
   * the plain fill's output (the strategy must never trade correctness). */
 class PitStrategySpec extends SparkSpec {
 
-  // PitSaltBench's deterministic generator, scaled down
+  // the measured frames' deterministic generator, scaled down
   private def u(tag: String) = conv(substring(md5(concat(lit(tag + "|"),
     col("id").cast("string"))), 1, 8), 16, 10).cast("double") / 4.294967296e9
 

@@ -205,14 +205,8 @@ class SinksAndExtSpec extends SparkSpec {
 
   test("DecimalVectorDot matches the decimal fold bit-for-bit; non-finite nulls the sum") {
     import org.apache.spark.sql.functions._
-    import org.apache.spark.sql.Column
-    // the expression-tree form it replaced: per-element decimal(30,15)
-    // terms, exact decimal accumulation, double out
-    def fold(a: Column, b: Column): Column =
-      aggregate(zip_with(a.cast("array<double>"), b.cast("array<double>"),
-          (p, q) => (p * q).cast("decimal(30,15)")),
-        lit(0).cast("decimal(32,15)"),
-        (acc, e) => (acc + e).cast("decimal(32,15)")).cast("double")
+    // the expression-tree form it replaced
+    val fold = DecimalFastSpec.foldDot _
     val emb = graft.core.Tables.embeddings(spark, sf0001).limit(100)
       .select(col("embedding"), col("embedding").cast("array<double>").as("d"))
     // float x float, float x double (mixed widths), double x double

@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
+import graft.plans.SpanHashes.{Clamped, FmtBin, Sliding}
+
 /** Byte-equality pins for the r17 native window-digest kernel
   * (plans/SpanHashes) against the interpreted trees it replaced in
   * ext/Dedup.spanDedup (stride = k) and ext/Dedup.substringWindows
@@ -10,6 +12,11 @@ import org.apache.spark.sql.functions._
   * changes oracle-checked counts. */
 class SpanHashesSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The raw-digest form at an explicit window mode. */
+  private def spanHashes(toks: org.apache.spark.sql.Column, k: Int, stride: Int,
+                         mode: Int) =
+    call_function("span_hashes", toks, lit(k), lit(stride), lit(FmtBin), lit(mode))
 
   private def oldSpanTree(toks: org.apache.spark.sql.Column, k: Int) =
     transform(
@@ -26,7 +33,7 @@ class SpanHashesSpec extends SparkSpec {
       .withColumn("__toks", split(col("text"), " "))
     Seq(3, 16).foreach { k =>
       val bad = docs.select(
-          call_function("span_hashes", col("__toks"), lit(k), lit(k)).as("native"),
+          spanHashes(col("__toks"), k, k, Clamped).as("native"),
           oldSpanTree(col("__toks"), k).as("old"))
         .filter(!(col("native") <=> col("old")))
       assert(bad.count() == 0, s"span_hashes(k=$k, stride=$k) must equal the old tree")
@@ -38,7 +45,7 @@ class SpanHashesSpec extends SparkSpec {
       .withColumn("__toks", split(col("text"), " "))
     Seq(2, 8, 12).foreach { k =>
       val bad = docs.filter(size(col("__toks")) >= k).select(
-          call_function("span_hashes", col("__toks"), lit(k), lit(1)).as("native"),
+          spanHashes(col("__toks"), k, 1, Sliding).as("native"),
           oldSlideTree(col("__toks"), k).as("old"))
         .filter(!(col("native") <=> col("old")))
       assert(bad.count() == 0, s"span_hashes(k=$k, stride=1) must equal the old tree")
@@ -49,15 +56,21 @@ class SpanHashesSpec extends SparkSpec {
     val rows = Seq(null, "", " ", "  a  b ", "one", "one two three four five")
       .toDF("text").withColumn("__toks", split(col("text"), " "))
     val both = rows.select(
-      call_function("span_hashes", col("__toks"), lit(3), lit(3)).as("native"),
+      spanHashes(col("__toks"), 3, 3, Clamped).as("native"),
       oldSpanTree(col("__toks"), 3).as("old"))
     assert(both.filter(!(col("native") <=> col("old"))).count() == 0)
     // sliding form with n < k yields an EMPTY array (the operator always
     // filters n >= k first; the old tree was undefined under the guard)
     val short = rows.filter(col("text").isNotNull)
-      .select(call_function("span_hashes", col("__toks"), lit(50), lit(1)).as("h"))
+      .select(spanHashes(col("__toks"), 50, 1, Sliding).as("h"))
       .collect()
     assert(short.forall(_.getSeq[Array[Byte]](0).isEmpty))
+  }
+
+  test("the window mode is explicit: the three-argument form fails naming span_hashes") {
+    val msg = failureOf("SELECT span_hashes(array('a', 'b', 'c'), 2, 1)")
+    assert(msg.contains("span_hashes(toks, k, stride, format, clamped) takes five arguments"),
+      msg)
   }
 
   test("hex format (chunk_windows) equals the interpreted strided md5-hex tree") {
@@ -97,7 +110,7 @@ class SpanHashesSpec extends SparkSpec {
         element_at(col("__toks"), i + 1)))
     val bad = docs.select(
         call_function("span_hashes", col("__toks"), lit(2), lit(1),
-          lit(graft.plans.SpanHashes.FmtStr)).as("native"),
+          lit(graft.plans.SpanHashes.FmtStr), lit(Sliding)).as("native"),
         old0.as("o0"), old1.as("o1"))
       .filter(!(col("native") <=> col("o0")) || !(col("native") <=> col("o1")))
     assert(bad.count() == 0, "string span_hashes(k=2) must equal both bigram trees")

@@ -27,6 +27,11 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   lazy val sf0001 = "/root/testdata/sf0.001"
 
+  /** The messages of the failure `sql` raises, with all its causes. */
+  def failureOf(sql: String): String =
+    Iterator.iterate[Throwable](intercept[Exception](spark.sql(sql).collect()))(_.getCause)
+      .takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
+
   /** Count SQLExecutionStart events while `body` runs: drains the async
     * listener bus first (prior work's events keep arriving after their
     * actions return), then polls until the count stops moving. The shared

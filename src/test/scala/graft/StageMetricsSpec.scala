@@ -2,8 +2,8 @@ package graft
 
 import graft.core.StageMetrics
 
-/** Pins the task-metric accounting that ShuffleAudit's 100 TB
-  * shuffle-economy report is built on: deltas attribute bytes to the
+/** Pins the task-metric accounting that the 100 TB shuffle-economy
+  * audit (PERF.md) is built on: deltas attribute bytes to the
   * measured body only, shuffling queries show write+read bytes, map-only
   * queries show zero, and input ROWS (the counter the audit's growth
   * yardstick trusts — input BYTES are known-unreliable on local parquet,

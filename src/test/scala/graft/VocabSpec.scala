@@ -70,7 +70,7 @@ class VocabSpec extends SparkSpec {
 
   test("bpeLearnBatched self-pair barrier: (a,a) merges spawn (aa,a) at full " +
       "count — the batch must close behind them") {
-    // the live-caught divergence (BpeBench zipf corpus): sequential learns
+    // the live-caught divergence (the zipf bench corpus): sequential learns
     // (a,a) then the DERIVED (aa,a) then (aa,aaa); a batch that keeps
     // accepting disjoint pairs after (a,a) leapfrogs both derived merges
     val corpus = Seq((("aaaaaa " * 20) + ("fg " * 15) + ("hi " * 12)).trim)
