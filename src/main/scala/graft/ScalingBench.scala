@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.Tables
@@ -11,9 +11,10 @@ import graft.ext.{Corpus, Similarity, TextAnalysis}
   * prediction — the evidence (vs. assertion) that the plan shapes pinned in
   * ScaleShapeSpec actually hold as data grows. Published in PERF.md.
   *
-  * The corpora are SELF-SIMILAR synthetic tables (deterministic md5-derived
-  * text with shared vocabulary across docs, DataGen.clusteredVectors
-  * embeddings with fixed cluster size), so every scale point draws from the
+  * The corpora are SELF-SIMILAR synthetic tables (DataGen.scalingDocs,
+  * scalingOrders and scalingEvents, all md5-derived, and
+  * DataGen.clusteredVectors embeddings with fixed cluster size), so every
+  * scale point draws from the
   * identical distribution and the ratio t(×s)/t(×1) isolates data growth
   * from distribution shift. Sub-linear measured growth is expected where a
   * fixed-size side exists (contamination's probe set, capped LSH buckets);
@@ -26,94 +27,9 @@ import graft.ext.{Corpus, Similarity, TextAnalysis}
   */
 object ScalingBench {
 
-  /** Deterministic documents table: ~20-100 tokens per doc, every 5th token
-    * a stopword, word identity keyed on (doc_id % 1000, position) so
-    * documents share n-grams across the corpus (contamination and quality
-    * signals have realistic structure at every scale). */
-  private def genDocs(spark: SparkSession, n: Long): DataFrame = {
-    val len = (lit(20) + pmod(col("id"), lit(80))).cast("int")
-    val words = transform(sequence(lit(0), len - 1), k =>
-      when(pmod(k, lit(5)) === 0, lit("the"))
-        .otherwise(substring(md5(concat(
-          pmod(col("id"), lit(1000)).cast("string"), lit("|"),
-          k.cast("string"))), 1, 6)))
-    spark.range(n).select(
-      col("id").as("doc_id"),
-      concat_ws(" ", words).as("text"),
-      lit("en").as("lang"),
-      concat(lit("src"), pmod(col("id"), lit(5)).cast("string")).as("source"),
-      length(concat_ws(" ", words)).cast("long").as("n_chars"))
-  }
-
   private def genEmb(spark: SparkSession, n: Long): DataFrame =
     core.DataGen.clusteredVectors(spark, n, clusterSize = 5, dim = 64)
       .withColumn("label", pmod(col("vec_id"), lit(8)).cast("int"))
-
-  /** md5 hex → uniform [0, 1) keyed on (tag, id) — the shared
-    * deterministic-randomness primitive of every generator here (one
-    * definition, so the "identical distribution at every scale point"
-    * claim can never silently diverge between tables). */
-  private def u(tag: String): Column =
-    conv(substring(md5(concat(lit(tag + "|"), col("id").cast("string"))),
-      1, 8), 16, 10).cast("double") / 4.294967296e9
-
-  /** Deterministic TPC-H-shaped orders for the dq-monitor ladder (the dq
-    * monitors and the percentile family read `orders`, not `documents`):
-    * near-unique 2-dp lognormal totals (the hard case for the
-    * count-by-value decomposition — the distinct-value frame grows ≈ rows,
-    * exactly like real o_totalprice), TPC-H status weights, uniform dates
-    * over 1995-1998 so the drift monitor's default 1998-07-01 split yields
-    * ~87% reference / ~13% current mass. md5-keyed (no rand()) so every
-    * scale point draws from the identical distribution. Base 150k = the
-    * sf0.1 orders row count, so ×10 is the sf1-equivalent rung.
-    *
-    * `card` > 0 quantizes totals to ~card distinct price points — the
-    * COLLAPSE regime for the count-by-value decomposition (fee/price-point
-    * data), vs the default near-unique continuum where the distinct-value
-    * frame grows ≈ rows (real o_totalprice's shape, the decomposition's
-    * hard case). The one-scan-vs-two-scan A/B runs in both regimes. */
-  private def genOrders(spark: SparkSession, n: Long, card: Int): DataFrame = {
-    // Box-Muller normal from two independent uniforms (libm is fine here:
-    // bench-only data, never oracle-compared)
-    val z = sqrt(lit(-2.0) * log(greatest(u("a"), lit(1e-9)))) *
-      cos(lit(2.0 * math.Pi) * u("b"))
-    spark.range(n).select(
-      col("id").as("o_orderkey"),
-      pmod(col("id"), lit(math.max(n / 10, 1L))).as("o_custkey"),
-      when(u("s") < 0.49, "F").when(u("s") < 0.98, "O").otherwise("P")
-        .as("o_orderstatus"),
-      round(exp(
-        if (card > 0)
-          // quantize in log-space: ~card/8 grid points per unit over the
-          // ±4σ ≈ 8-unit log-price range → ≈ card distinct price points,
-          // same lognormal mass profile
-          round((z * 0.8 + 10.0) * lit(card / 8.0), 0) / lit(card / 8.0)
-        else z * 0.8 + 10.0), 2).as("o_totalprice"),
-      date_add(lit("1995-01-01").cast("date"), (u("d") * 1460).cast("int"))
-        .cast("timestamp").as("o_orderdate"))
-  }
-
-  /** Deterministic events table for the PIT/skew/funnel/cohort ladder —
-    * the testdata shape (event_id, ts, user_id, event_type, value) with
-    * realistic type weights and second-resolution timestamps over one
-    * month. Users scale with the corpus (n/50 — ~50 events per user at
-    * every rung, so per-user window work stays fixed while the user-hash
-    * exchange and scan scale linearly: exactly the PIT shape's scaling
-    * contract). Base 100k = sf0.1's events row count. */
-  private def genEvents(spark: SparkSession, n: Long): DataFrame = {
-    val et = u("t")
-    spark.range(n).select(
-      col("id").as("event_id"),
-      // 1704067200 = 2024-01-01T00:00:00Z; spread over 30 days
-      timestamp_seconds(lit(1704067200L) +
-        (u("s") * 2592000.0).cast("long")).as("ts"),
-      pmod(col("id"), lit(math.max(n / 50, 1L))).as("user_id"),
-      when(et < 0.40, "view").when(et < 0.65, "click")
-        .when(et < 0.80, "purchase").when(et < 0.90, "error")
-        .otherwise("login").as("event_type"),
-      round(u("v") * 500.0, 2).as("value"),
-      lit("{}").as("props"))
-  }
 
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -137,7 +53,7 @@ object ScalingBench {
       if (!new java.io.File(s"$dir/documents.parquet").exists()) {
         genEmb(spark, baseVecs * s).write.mode("overwrite")
           .parquet(s"$dir/embeddings.parquet")
-        genDocs(spark, baseDocs * s).write.mode("overwrite")
+        core.DataGen.scalingDocs(spark, baseDocs * s).write.mode("overwrite")
           .parquet(s"$dir/documents.parquet")
       }
     }
@@ -147,12 +63,11 @@ object ScalingBench {
     // never silently benchmark stale tables. _SUCCESS is the completion
     // marker (a run killed mid-write leaves no passing dir).
     val baseOrders = sys.env.getOrElse("SPARK_GRAFT_SCALE_ORDERS", "150000").toLong
-    val priceCard = sys.env.getOrElse("SPARK_GRAFT_ORDER_PRICE_CARD", "0").toInt
-    def orderDir(s: Int) = s"$root/o$baseOrders-c$priceCard/x$s"
+    def orderDir(s: Int) = s"$root/o$baseOrders/x$s"
     scales.foreach { s =>
       val dir = orderDir(s)
       if (!new java.io.File(s"$dir/orders.parquet/_SUCCESS").exists())
-        genOrders(spark, baseOrders * s, priceCard).write.mode("overwrite")
+        core.DataGen.scalingOrders(spark, baseOrders * s).write.mode("overwrite")
           .parquet(s"$dir/orders.parquet")
     }
     val baseEvents = sys.env.getOrElse("SPARK_GRAFT_SCALE_EVENTS", "100000").toLong
@@ -160,7 +75,7 @@ object ScalingBench {
     scales.foreach { s =>
       val dir = eventDir(s)
       if (!new java.io.File(s"$dir/events.parquet/_SUCCESS").exists())
-        genEvents(spark, baseEvents * s).write.mode("overwrite")
+        core.DataGen.scalingEvents(spark, baseEvents * s).write.mode("overwrite")
           .parquet(s"$dir/events.parquet")
     }
 
@@ -198,67 +113,11 @@ object ScalingBench {
         Tables.documents(spark, d), "n_chars", 10)))
 
     // round-10 additions: the dq monitors + percentile family over the
-    // orders ladder, each shipped ONE-SCAN form next to an otherwise-
-    // identical TWO-SCAN variant — the A/B that turns PERF's "one shared
-    // count-by-value exchange is a strict I/O win at scale" from an
-    // argument into a measurement. The variants differ ONLY in scan
-    // economy: same bucket lambda, same count-by-value collapse, same
-    // percentile/envelope arithmetic.
-    val cut = to_timestamp(lit("1998-07-01 00:00:00"))
-    def driftTwoScan(d: String): DataFrame = {
-      val orders = Tables.orders(spark, d).filter(col("o_totalprice").isNotNull)
-      // scan 1: reference histogram over the date-filtered period (the
-      // pushed-filter plan the shipped form deliberately gives up)
-      val bnds = graft.jobs.DataQualityJob
-        .equiDepthOf(orders.filter(col("o_orderdate") < cut), "o_totalprice", 10)
-        .agg(array_sort(collect_list(struct(col("bucket"), col("hi_value")))).as("a"))
-        .select(expr(
-          "slice(transform(a, x -> x.hi_value), 1, greatest(size(a) - 1, 0))")
-          .as("bnds"))
-      // scan 2: (period, value) collapse + bucket masses over the full table
-      orders.groupBy(
-          when(col("o_orderdate") < cut, lit(1L)).otherwise(lit(0L)).as("__is_ref"),
-          col("o_totalprice").cast("double").as("__v"))
-        .agg(count(lit(1)).as("__c"))
-        .crossJoin(broadcast(bnds))
-        .select(expr("CAST(size(filter(bnds, x -> __v > x)) AS INT)").as("bucket"),
-          col("__is_ref"), col("__c"))
-        .groupBy("bucket")
-        .agg(sum(when(col("__is_ref") === 1, col("__c")).otherwise(lit(0L))).as("n_ref"),
-          sum(when(col("__is_ref") === 0, col("__c")).otherwise(lit(0L))).as("n_cur"))
-    }
-    def pctxTwoScan(d: String): DataFrame = {
-      import graft.ops.BoundedPercentile
-      val o = Tables.orders(spark, d).select("o_orderstatus", "o_totalprice")
-      // scan 1: the sketch straight off the source (the plan a naive
-      // percentile_approx call produces); scan 2: the count-by-value
-      // collapse feeding the exact witness + envelope ranks
-      val sk = o.groupBy("o_orderstatus").agg(
-        percentile_approx(col("o_totalprice"), lit(0.5), lit(1000)).as("__p50a"),
-        percentile_approx(col("o_totalprice"), lit(0.95), lit(1000)).as("__p95a"))
-      val cnt = BoundedPercentile.countByValue(o, "o_orderstatus", "o_totalprice")
-      def rank(cmp: Column): Column = coalesce(max(when(cmp, col("__hi"))), lit(0L))
-      BoundedPercentile.exactFromCounts(
-        cnt, "o_orderstatus",
-        Seq(0.5 -> "p50_exact", 0.95 -> "p95_exact"), 2,
-        joined = Seq(sk),
-        extraAggs = Seq(
-          rank(col("__v") < col("__p50a")).as("__lt50"),
-          rank(col("__v") <= col("__p50a")).as("__le50"),
-          rank(col("__v") < col("__p95a")).as("__lt95"),
-          rank(col("__v") <= col("__p95a")).as("__le95")),
-        extraOut = Seq(
-          (col("__lt50") <= lit(0.52) * col("__n") &&
-            col("__le50") >= lit(0.48) * col("__n")).as("p50_in_envelope"),
-          (col("__lt95") <= lit(0.97) * col("__n") &&
-            col("__le95") >= lit(0.93) * col("__n")).as("p95_in_envelope")))
-    }
+    // orders ladder
     val orderQueries: Seq[(String, String => DataFrame)] = Seq(
       "dq_robust_outliers" -> (d => graft.jobs.DataQualityJob.robustOutliers(spark, d)),
       "dq_drift" -> (d => graft.jobs.DataQualityJob.distributionDrift(spark, d)),
-      "dq_drift_twoscan" -> (d => driftTwoScan(d)),
-      "percentiles_approx" -> (d => graft.serving.Lookups.percentilesApprox(spark, d)),
-      "percentiles_approx_twoscan" -> (d => pctxTwoScan(d)))
+      "percentiles_approx" -> (d => graft.serving.Lookups.percentilesApprox(spark, d)))
 
     // round-10 additions: the events-based operator family — the PIT
     // matrix and skew audit (one scan + one user-hash exchange + one

@@ -82,4 +82,81 @@ object DataGen {
           .otherwise("declined").as("status"),
         expr(s"timestampadd(SECOND, CAST(rand(${seed + 3}) * 86400 * 30 AS INT), " +
           "timestamp'2024-01-01 00:00:00')").as("created_at"))
+
+  // ---- self-similar scaling tables (ScalingBench's ladders) ----
+  // md5-keyed, no rand(): every scale point draws from the identical
+  // distribution, so t(×s)/t(×1) isolates data growth from distribution
+  // shift.
+
+  /** md5 hex → uniform [0, 1) keyed on (tag, id) — the shared
+    * deterministic-randomness primitive of the scaling tables (one
+    * definition, so the "identical distribution at every scale point"
+    * claim can never silently diverge between tables). */
+  private def u(tag: String): Column =
+    conv(substring(md5(concat(lit(tag + "|"), col("id").cast("string"))),
+      1, 8), 16, 10).cast("double") / 4.294967296e9
+
+  /** Deterministic documents table: ~20-100 tokens per doc, every 5th token
+    * a stopword, word identity keyed on (doc_id % 1000, position) so
+    * documents share n-grams across the corpus (contamination and quality
+    * signals have realistic structure at every scale). */
+  def scalingDocs(spark: SparkSession, n: Long): DataFrame = {
+    val len = (lit(20) + pmod(col("id"), lit(80))).cast("int")
+    val words = transform(sequence(lit(0), len - 1), k =>
+      when(pmod(k, lit(5)) === 0, lit("the"))
+        .otherwise(substring(md5(concat(
+          pmod(col("id"), lit(1000)).cast("string"), lit("|"),
+          k.cast("string"))), 1, 6)))
+    spark.range(n).select(
+      col("id").as("doc_id"),
+      concat_ws(" ", words).as("text"),
+      lit("en").as("lang"),
+      concat(lit("src"), pmod(col("id"), lit(5)).cast("string")).as("source"),
+      length(concat_ws(" ", words)).cast("long").as("n_chars"))
+  }
+
+  /** Deterministic TPC-H-shaped orders for the dq-monitor ladder (the dq
+    * monitors and the percentile family read `orders`, not `documents`):
+    * near-unique 2-dp lognormal totals (the hard case for the
+    * count-by-value decomposition — the distinct-value frame grows ≈ rows,
+    * exactly like real o_totalprice), TPC-H status weights, uniform dates
+    * over 1995-1998 so the drift monitor's default 1998-07-01 split yields
+    * ~87% reference / ~13% current mass. Base 150k = the sf0.1 orders row
+    * count, so ×10 is the sf1-equivalent rung. */
+  def scalingOrders(spark: SparkSession, n: Long): DataFrame = {
+    // Box-Muller normal from two independent uniforms (libm is fine here:
+    // bench-only data, never oracle-compared)
+    val z = sqrt(lit(-2.0) * log(greatest(u("a"), lit(1e-9)))) *
+      cos(lit(2.0 * math.Pi) * u("b"))
+    spark.range(n).select(
+      col("id").as("o_orderkey"),
+      pmod(col("id"), lit(math.max(n / 10, 1L))).as("o_custkey"),
+      when(u("s") < 0.49, "F").when(u("s") < 0.98, "O").otherwise("P")
+        .as("o_orderstatus"),
+      round(exp(z * 0.8 + 10.0), 2).as("o_totalprice"),
+      date_add(lit("1995-01-01").cast("date"), (u("d") * 1460).cast("int"))
+        .cast("timestamp").as("o_orderdate"))
+  }
+
+  /** Deterministic events table for the PIT/skew/funnel/cohort ladder —
+    * the testdata shape (event_id, ts, user_id, event_type, value) with
+    * realistic type weights and second-resolution timestamps over one
+    * month. Users scale with the corpus (n/50 — ~50 events per user at
+    * every rung, so per-user window work stays fixed while the user-hash
+    * exchange and scan scale linearly: exactly the PIT shape's scaling
+    * contract). Base 100k = sf0.1's events row count. */
+  def scalingEvents(spark: SparkSession, n: Long): DataFrame = {
+    val et = u("t")
+    spark.range(n).select(
+      col("id").as("event_id"),
+      // 1704067200 = 2024-01-01T00:00:00Z; spread over 30 days
+      timestamp_seconds(lit(1704067200L) +
+        (u("s") * 2592000.0).cast("long")).as("ts"),
+      pmod(col("id"), lit(math.max(n / 50, 1L))).as("user_id"),
+      when(et < 0.40, "view").when(et < 0.65, "click")
+        .when(et < 0.80, "purchase").when(et < 0.90, "error")
+        .otherwise("login").as("event_type"),
+      round(u("v") * 500.0, 2).as("value"),
+      lit("{}").as("props"))
+  }
 }

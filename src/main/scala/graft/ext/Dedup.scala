@@ -97,8 +97,7 @@ object Dedup {
     * equi-join on (band, signature)), then shingle Jaccard verifies only
     * those. This candidates→verify pipeline is the shape that survives
     * 100 TB — the quadratic work is bounded by LSH collisions, and the
-    * expensive set-intersection runs on a few hundred pairs, not n²/2.
-    * (An exhaustive blocked variant is `jaccardPairsBlocked`.) */
+    * expensive set-intersection runs on a few hundred pairs, not n²/2. */
   def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
     jaccardPairsPre(withShingles(docs).select("doc_id", "sh"), threshold)
 
@@ -137,23 +136,6 @@ object Dedup {
       .filter(col("jaccard") >= threshold)
   }
 
-  /** Exhaustive Jaccard with (lang, length-band) blocking — exact recall on
-    * bounded corpora; quadratic within blocks, so NOT the 100 TB path. */
-  def jaccardPairsBlocked(docs: DataFrame, threshold: Double): DataFrame = {
-    val sh = withShingles(docs).select(col("doc_id"), col("lang"), col("n_chars"), col("sh"))
-    val a = sh.as("a"); val b = sh.as("b")
-    val inter = size(array_intersect(col("a.sh"), col("b.sh")))
-    val union = size(col("a.sh")) + size(col("b.sh")) - inter
-    a.join(b,
-        col("a.lang") === col("b.lang") &&
-        col("a.doc_id") < col("b.doc_id") &&
-        abs(col("a.n_chars") - col("b.n_chars")) <= 40)
-      .select(
-        col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        graft.ops.Ops.rnd(inter.cast("double") / union, 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-  }
-
   private val NumBands = 4
 
   /** Band buckets larger than this are excluded from candidate generation
@@ -163,11 +145,9 @@ object Dedup {
     * dedupSimhashPairs}. */
   private[graft] val MaxBucket = 256
 
-  /** Per-doc MinHash signature: for band i, min over shingles of
-    * md5("i|" + shingle). Explode → groupBy, map-side combinable. */
-  def minhashSignatures(docs: DataFrame): DataFrame =
-    minhashSignaturesPre(withShingles(docs).select("doc_id", "sh"))
-
+  /** Per-doc MinHash signature over a pre-shingled (doc_id, sh) table: for
+    * band i, min over shingles of md5("i|" + shingle). Explode → groupBy,
+    * map-side combinable. */
   def minhashSignaturesPre(sh: DataFrame): DataFrame = {
     val toks = sh.select(col("doc_id"), explode(col("sh")).as("sh"))
     val aggs = (0 until NumBands).map(i =>

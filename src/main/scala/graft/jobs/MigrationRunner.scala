@@ -30,16 +30,15 @@ object MigrationRunner {
   private def fs(spark: SparkSession, root: String): FileSystem =
     new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readPointer(spark: SparkSession, root: String): Option[String] = {
-    val p = new Path(s"$root/CURRENT")
-    val f = fs(spark, root)
-    if (!f.exists(p)) None
-    else {
+  /** A small UTF-8 file's whole content, or None if it does not exist. */
+  private[graft] def readText(f: FileSystem, p: Path): Option[String] =
+    try {
       val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim)
-      finally in.close()
-    }
-  }
+      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  private def readPointer(spark: SparkSession, root: String): Option[String] =
+    readText(fs(spark, root), new Path(s"$root/CURRENT")).map(_.trim)
 
   /** Write-tmp-then-rename, atomic on every supported scheme: HDFS renames
     * via FileContext Rename.OVERWRITE; for `file://` the local ChecksumFs
@@ -83,17 +82,9 @@ object MigrationRunner {
     * successful switchover, creation-ordered — the lineage rollback() walks
     * backward. Failed migrations never reach it (their directory is deleted
     * before the pointer moves). */
-  private def readHistory(spark: SparkSession, root: String): Seq[String] = {
-    val p = new Path(s"$root/HISTORY")
-    val f = fs(spark, root)
-    if (!f.exists(p)) Seq.empty
-    else {
-      val in = f.open(p)
-      try new String(in.readAllBytes(), "UTF-8").split("\n").toSeq
-        .map(_.trim).filter(_.nonEmpty)
-      finally in.close()
-    }
-  }
+  private def readHistory(spark: SparkSession, root: String): Seq[String] =
+    readText(fs(spark, root), new Path(s"$root/HISTORY")).fold(Seq.empty[String])(
+      _.split("\n").toSeq.map(_.trim).filter(_.nonEmpty))
 
   private def appendHistory(spark: SparkSession, root: String, name: String): Unit =
     writeFileAtomic(spark, root, "HISTORY",
@@ -200,10 +191,7 @@ object MigrationRunner {
     s"$owner\nacquired=${java.time.Instant.now()}"
 
   private def readLockRaw(f: FileSystem, p: Path): Option[String] =
-    try {
-      val in = f.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+    try readText(f, p) catch { case scala.util.control.NonFatal(_) => None }
 
   private def parseLock(raw: String): (String, Option[java.time.Instant]) = {
     val lines = raw.linesIterator.toSeq
@@ -386,6 +374,38 @@ object MigrationRunner {
       f.delete(root, true)
   }
 
+  /** The UNATTENDED-sweep lock over a LIVE store: runs `body` under the
+    * store's lock and returns Some(result), or returns None without
+    * running it when the store's directory is gone (a concurrent sweep
+    * expired it; acquiring would resurrect it as a shell), another
+    * maintainer holds the lock (next sweep's work), or the store has no
+    * CURRENT pointer under the lock. In that last case the store either
+    * vanished between the check and the acquisition — the shell the
+    * acquisition re-created is reaped (reapResurrectedShell), since an
+    * empty dir without CURRENT breaks readers and blocks relanding — or
+    * it holds other content (a pre-atomic remnant), which is skipped with
+    * a loud warning and left for the manual contract. Interactive callers
+    * use withMaintenanceLock, which fails loud instead. */
+  def withLiveStoreLockIfFree[T](spark: SparkSession, storeRoot: String,
+                                 owner: String)(body: => T): Option[T] =
+    if (!fs(spark, storeRoot).exists(new Path(storeRoot))) None
+    else stampMaintenanceLock(spark, storeRoot, owner).flatMap { mine =>
+      var shellReaped = false
+      try {
+        if (readPointer(spark, storeRoot).nonEmpty) Some(body)
+        else {
+          shellReaped = reapResurrectedShell(spark, storeRoot, mine)
+          if (!shellReaped)
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"store $storeRoot has no CURRENT pointer and is not an empty " +
+                s"shell — skipping '$owner' (inspect manually; see " +
+                "Compaction.initPointered on pre-atomic remnants)")
+          None
+        }
+      } finally if (!shellReaped)
+        releaseMaintenanceLockIfMine(spark, storeRoot, mine): Unit
+    }
+
   /** Explicit recovery from a dead maintainer's leftover lock. Returns
     * whether a lock existed. */
   def breakMaintenanceLock(spark: SparkSession, storeRoot: String): Boolean =
@@ -505,6 +525,52 @@ object MigrationRunner {
       .map(k => if (k == 0) base else s"$base-$k")
       .find(n => !live.contains(n) && !f.exists(new Path(s"$storeRoot/$n")))
       .get
+  }
+
+  /** The retention policy of a pointer store, stated once. A version
+    * directory is retained iff it is live (CURRENT), among the last three
+    * names in the switchover HISTORY, or named in `keep`; every other
+    * directory is returned, name-ordered, for the caller to reap.
+    *
+    * Three: with the pointer at the head of HISTORY that is the live
+    * version plus the two most recently superseded, so a reader that
+    * resolved the pointer must stall across three swings of the store to
+    * lose its version (longer-lived readers need time-based retention, a
+    * policy knob, not a correctness gap). `keep`: a committing maintainer
+    * passes the version live before its swap, since the pointer need not
+    * sit at the head of HISTORY (rollback moves it without appending; a
+    * HISTORY may predate its pointer) and a racing reader may just have
+    * resolved it. Crash leftovers (written, never published) are in no set
+    * and are returned. With no CURRENT pointer, or no store directory, the
+    * result is empty. Delete only under the store's maintenance lock: a
+    * concurrent writer's unpublished version looks like a crash leftover. */
+  def supersededVersions(spark: SparkSession, storeRoot: String,
+                         keep: Set[String] = Set.empty): Seq[Path] =
+    readPointer(spark, storeRoot).fold(Seq.empty[Path]) { live =>
+      val retained = readHistory(spark, storeRoot).takeRight(3).toSet ++ keep + live
+      try fs(spark, storeRoot).listStatus(new Path(storeRoot)).toSeq
+        .filter(_.isDirectory).map(_.getPath)
+        .filterNot(p => retained(p.getName)).sortBy(_.getName)
+      catch { case _: java.io.FileNotFoundException => Nil }
+    }
+
+  /** The commit of a pointer-store maintenance rewrite: a fresh version
+    * name from `base`, the caller's `write` of that version's directory
+    * (it receives the path), publish, then reap of every superseded
+    * version — the version live before the swap is kept explicitly (see
+    * supersededVersions). A crash before publish leaves only an
+    * unreferenced directory that a later reap removes; the pointer only
+    * ever references complete writes. The caller holds the store's
+    * maintenance lock. Returns the new version name. */
+  def swapIn(spark: SparkSession, storeRoot: String, base: String)
+            (write: String => Unit): String = {
+    val prevLive = readPointer(spark, storeRoot)
+    val name = freshVersionName(spark, storeRoot, base)
+    write(s"$storeRoot/$name")
+    publish(spark, storeRoot, name)
+    val f = fs(spark, storeRoot)
+    supersededVersions(spark, storeRoot, prevLive.toSet).foreach(f.delete(_, true))
+    name
   }
 
   /** Re-point CURRENT at a previous version — the reference's rollback path

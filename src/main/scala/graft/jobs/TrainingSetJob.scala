@@ -148,13 +148,11 @@ object TrainingSetJob {
   /** Generic-operator form of the wide matrix — PitJoin.trainingMatrixWide
     * over the three wide role frames as separate tables (4 events scans;
     * what a user with genuinely separate feature-group tables writes).
-    * Byte-identical to pitTrainingMatrixWide (Round11InvariantSpec), and
-    * the `salts` passthrough exposes the hot-key variant on the same
-    * shape. `rangeSecs` defaults to PitJoin.AutoRange: the hot-key
+    * Byte-identical to pitTrainingMatrixWide (Round11InvariantSpec).
+    * `rangeSecs` defaults to PitJoin.AutoRange: the hot-key
     * strategy is CONSULTED by default (recommendStrategy off the frames'
     * own key histogram, cached per frame identity) — pass 0 to opt out. */
   def pitTrainingMatrixWideGeneric(spark: SparkSession, dir: String,
-                                   salts: Int = 1,
                                    rangeSecs: Long = PitJoin.AutoRange): DataFrame = {
     import graft.core.Roles
     def band(d: Int) = expr(s"INTERVAL $d DAYS")
@@ -176,7 +174,7 @@ object TrainingSetJob {
         Seq("alert_type", "alert_severity", "alert_channel"),
         band(alertBandDays)))
     PitJoin.trainingMatrixWide(probes, "user_id", "probe_ts", "probe_id",
-        facts, salts, rangeSecs)
+        facts, rangeSecs)
       .select(
         col("probe_id") +: col("user_id") +:
           date_format(col("probe_ts"), "yyyy-MM-dd HH:mm:ss").as("probe_ts") +:

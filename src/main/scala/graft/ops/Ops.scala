@@ -93,29 +93,4 @@ object Ops {
     * Spark union is UNION ALL, so distinct() is mandatory (SURVEY §7.4.9). */
   def unionDistinct(dfs: DataFrame*): DataFrame =
     dfs.reduce(_ unionByName _).distinct()
-
-  /** Two-phase salted aggregation for skewed grouping keys: a hot key's rows
-    * are spread over `salts` partial groups (breaking the single-reducer
-    * bottleneck), then merged. The 100 TB answer when one user_id holds a
-    * disproportionate share of a fact table and AQE's skew handling isn't
-    * available (e.g. pre-AQE writers, or aggregation rather than join skew).
-    * Works for any commutative re-aggregable function — here sum.
-    *
-    * `rowIdCol` must be a stable per-row identifier (PK, event_id): the salt
-    * is derived from its hash, so the partial-sum grouping — and therefore
-    * the result for inexact types like double, where (a+b)+c ≠ a+(b+c) — is
-    * identical run to run regardless of partition layout. Salting from row
-    * POSITION (monotonically_increasing_id) would spread a constant-valued
-    * hot key too, but makes double sums layout-dependent; salting from the
-    * VALUE would collapse a constant hot key onto one salt. A stable unique
-    * column avoids both failure modes. */
-  def saltedSum(df: DataFrame, key: String, value: Column, salts: Int,
-                as: String, rowIdCol: String): DataFrame =
-    // pmod alone — already non-negative for negative hashes; abs(Int.MinValue)
-    // would throw under ANSI overflow checking (~2^-32 of rows)
-    df.withColumn("__salt", pmod(hash(col(rowIdCol)), lit(salts)))
-      .groupBy(col(key), col("__salt"))
-      .agg(sum(value).as("__partial"))
-      .groupBy(col(key))
-      .agg(sum(col("__partial")).as(as))
 }

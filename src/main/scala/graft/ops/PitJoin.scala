@@ -40,9 +40,8 @@ import org.apache.spark.sql.functions._
   * Scale: the exchange hashes on `key` alone, so a hot key's timeline sorts
   * on one task — the same per-user-window exposure as sessionization
   * (StreamAnalogJobs.eventSessions); AQE skew-join handling does not apply
-  * to windows, so a pathologically hot key needs probe-side salting with a
-  * per-salt fact replica (not built — no such key shape exists in any role
-  * table, where keys are users).
+  * to windows, so a pathologically hot key needs the segmented scan
+  * (fillBandedRanged, which trainingMatrixWide picks automatically).
   *
   * NULL fact values are treated as ABSENT (the fill skips them and an
   * older non-null value wins); callers with meaningful nulls must encode
@@ -88,9 +87,8 @@ object PitJoin {
     fillBanded(timeline, Seq(key), ts, prio, tb,
       valueCols.map(_ -> lookback))
 
-  /** The general fill: multiple partition keys (the salted variant
-    * partitions by (key, salt)) and a PER-COLUMN staleness band (per-fact
-    * freshness windows). All the last() expressions still share one
+  /** The general fill: multiple partition keys and a PER-COLUMN staleness
+    * band (per-fact freshness windows). All the last() expressions still share one
     * (partition, order) spec → a SINGLE WindowExec regardless of how many
     * columns or how many distinct bands ride it. */
   def fillBanded(timeline: DataFrame, keys: Seq[String], ts: String,
@@ -264,28 +262,13 @@ object PitJoin {
     * all bands; the structs are exploded back to flat columns on the way
     * out. Fact value names must be globally distinct.
     *
-    * `salts` > 1 engages the documented hot-key fix (the scaladoc above —
-    * a hot key's timeline sorts on ONE task, and AQE skew handling never
-    * applies to windows): probes spread over `salts` sub-partitions by a
-    * hash of their tiebreak, each fact row is replicated to EVERY salt,
-    * and the window partitions by (key, salt) — each probe still sees the
-    * key's complete fact timeline, so output is identical (PitJoinSpec
-    * pins salted ≡ unsalted), but the hot key's sort now runs on `salts`
-    * tasks.
-    *
-    * WHEN it pays (measured both ways, PERF.md r11 "Wide PIT matrix and
-    * the salted window"): only when PROBES dominate the hot timeline.
-    * Each salt partition carries probes/salts but ALL of the key's facts
-    * (the replication), so per-task work is
-    * facts + probes/salts — a probe-heavy hot key (many labels, few
-    * feature updates) parallelizes (39→15 s at salts=8 on a 95%-hot
-    * frame), while a FACT-heavy one gets SLOWER (112→184 s — the
-    * replicas outweigh the split). The general fix is `rangeSecs` (the
-    * fillBandedRanged segmented scan below): it beats salting on BOTH
-    * shapes (9.0 s and 33.9 s on the same frames) with no replication —
-    * prefer it; salting survives as the simpler strategy for purely
-    * probe-dominated skew. Both are opt-in: on uniform data each costs
-    * its machinery (PERF.md round-11 table). */
+    * A hot key's timeline sorts on ONE task (the scaladoc above), so
+    * `rangeSecs` picks the fill: the segmented scan (fillBandedRanged)
+    * splits a hot key by time with no row replication. It beat probe
+    * salting on both measured 95%-hot shapes (PERF.md r11 "Wide PIT
+    * matrix and the salted window": 9.0 vs 15.0 s probe-heavy, 33.9 vs
+    * 183.7 s fact-heavy), so salting is not offered. On uniform data the
+    * plain fill wins, which is what the auto consult picks there. */
   /** Sentinel for `rangeSecs`: consult `recommendStrategy` automatically
     * (the default since r13 — VERDICT r12 next #4: the strategy was built
     * and pinned but nothing called it). Pass 0 to opt OUT (force the
@@ -335,24 +318,20 @@ object PitJoin {
     *                   > 0 forces the segmented-scan form
     *                   (fillBandedRanged) — the hot-key strategy that
     *                   needs no row replication and works for fact-heavy
-    *                   keys; prefer it over `salts` unless probes
-    *                   massively dominate
+    *                   keys
     * @param autoTargetRowsPerTask threshold handed to recommendStrategy
     *                   in auto mode (ignored otherwise) */
   def trainingMatrixWide(probes: DataFrame, key: String, probeTs: String,
                          probeTb: String, facts: Seq[WideFact],
-                         salts: Int = 1, rangeSecs: Long = AutoRange,
+                         rangeSecs: Long = AutoRange,
                          autoTargetRowsPerTask: Long = 500000L): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
-    require(salts >= 1, s"salts must be >= 1: $salts")
     require(rangeSecs >= AutoRange,
       s"rangeSecs must be AutoRange (-1), 0 (plain) or positive: $rangeSecs")
-    // auto-consult only when the caller hasn't chosen a strategy at all —
-    // an explicit salts choice is a strategy
+    // auto-consult only when the caller hasn't chosen a strategy
     val resolvedRange =
       if (rangeSecs == AutoRange)
-        if (salts > 1) 0L
-        else recommendCached(probes, key, probeTs, facts,
+        recommendCached(probes, key, probeTs, facts,
           autoTargetRowsPerTask).rangeSecs
       else rangeSecs
     val allValues = facts.flatMap(_.values)
@@ -365,40 +344,26 @@ object PitJoin {
       .filterNot(c => c == key || c == probeTs)
 
     def nullS(i: Int): Column = lit(null).cast(structTypes(i)).as(structCols(i))
-    // coalesce: a null (or non-castable) tiebreak must land on a REAL salt
-    // — facts replicate only to salts 0..N-1, so a null salt would isolate
-    // those probes in a factless partition and break the salted ≡ unsalted
-    // contract (code-review finding, r11)
-    val probeSalt =
-      if (salts == 1) lit(0)
-      else coalesce(pmod(col(probeTb).cast("long"), lit(salts)).cast("int"), lit(0))
     val probeSide = probes.select(
       col(key).as("__key") +: col(probeTs).as("__ts") +: lit(1).as("__prio") +:
-        col(probeTb).cast("long").as("__tb") +: probeSalt.as("__salt") +:
+        col(probeTb).cast("long").as("__tb") +:
         (facts.indices.map(nullS) ++ probeCarry.map(col)): _*)
     val factSides = facts.zipWithIndex.map { case (f, i) =>
-      val base = f.df.select(
+      f.df.select(
         col(f.key).as("__key") +: col(f.ts).as("__ts") +: lit(0).as("__prio") +:
           col(f.tiebreak).cast("long").as("__tb") +:
           (facts.indices.map(j =>
             if (j == i) struct(f.values.map(col): _*).as(structCols(i))
             else nullS(j)) ++
             probeCarry.map(c => lit(null).cast(probes.schema(c).dataType).as(c))): _*)
-      // replicate each fact row to every salt so any probe sub-partition
-      // holds the key's COMPLETE timeline
-      if (salts == 1) base.select(lit(0).as("__salt") +: base.columns.map(col): _*)
-      else base.select(
-        explode(array((0 until salts).map(lit(_)): _*)).as("__salt") +:
-          base.columns.map(col): _*)
     }
     val timeline = factSides.foldLeft(probeSide)(_.unionByName(_))
     val bands = structCols.zip(facts.map(_.lookback))
     val filled =
       if (resolvedRange > 0)
-        fillBandedRanged(timeline, Seq("__key", "__salt"), "__ts", "__prio",
-          "__tb", bands, resolvedRange)
-      else fillBanded(timeline, Seq("__key", "__salt"), "__ts", "__prio",
-        "__tb", bands)
+        fillBandedRanged(timeline, Seq("__key"), "__ts", "__prio", "__tb",
+          bands, resolvedRange)
+      else fillBanded(timeline, Seq("__key"), "__ts", "__prio", "__tb", bands)
     filled
       .filter(col("__prio") === 1)
       .select(col("__key").as(key) +: col("__ts").as(probeTs) +:

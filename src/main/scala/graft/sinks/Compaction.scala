@@ -1,7 +1,9 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+
+import graft.jobs.MigrationRunner
 
 /** Small-file compaction for the partitioned warehouse layout — the
   * maintenance half of the S10/S11 sink story. The daily pattern
@@ -39,26 +41,42 @@ object Compaction {
 
   final case class Rewrite(value: String, filesBefore: Int, filesAfter: Int)
 
-  /** One FS listing per partition: (partition value, data-file count,
-    * total bytes). Hidden/metadata files (_SUCCESS, .crc) excluded. */
-  def stats(spark: SparkSession, path: String,
-            partitionCol: String): Seq[PartitionStat] = {
-    val root = new Path(path)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Nil
-    val prefix = s"$partitionCol="
-    fs.listStatus(root).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith(prefix))
-      .map { dir =>
-        val files = fs.listStatus(dir.getPath).toSeq.filter { f =>
-          val n = f.getPath.getName
-          f.isFile && !n.startsWith("_") && !n.startsWith(".")
-        }
-        PartitionStat(dir.getPath.getName.stripPrefix(prefix),
-          files.size, files.map(_.getLen).sum)
+  /** The data files directly under `dir`: hidden and metadata files
+    * (_SUCCESS, .crc) excluded. */
+  private def dataFiles(spark: SparkSession, dir: String): Seq[FileStatus] = {
+    val p = new Path(dir)
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p).toSeq
+      .filter { f =>
+        val n = f.getPath.getName
+        f.isFile && !n.startsWith("_") && !n.startsWith(".")
       }
-      .sortBy(_.value)
   }
+
+  private def stat(spark: SparkSession, value: String, dir: String): PartitionStat = {
+    val files = dataFiles(spark, dir)
+    PartitionStat(value, files.size, files.map(_.getLen).sum)
+  }
+
+  /** One FS listing per partition: (partition value, data-file count,
+    * total bytes). */
+  def stats(spark: SparkSession, path: String,
+            partitionCol: String): Seq[PartitionStat] =
+    partitionStores(spark, path, partitionCol).map { case (value, dir) =>
+      stat(spark, value, dir)
+    }
+
+  /** The layout rewrite both compactors share: `coalesce(k)` (narrow, no
+    * exchange), or with `layoutSort` a range exchange + within-partition
+    * sort on those keys (see `compact` for when each applies). */
+  private def relayout(frame: DataFrame, k: Int, layoutSort: Seq[Column]): DataFrame =
+    if (layoutSort.isEmpty) frame.coalesce(k)
+    else frame.repartitionByRange(k, layoutSort: _*)
+      .sortWithinPartitions(layoutSort: _*)
+
+  private def rewriteOf(spark: SparkSession, before: Seq[PartitionStat],
+                        value: String, dir: String): Rewrite =
+    Rewrite(value, before.find(_.value == value).map(_.files).getOrElse(0),
+      dataFiles(spark, dir).size)
 
   /** Partitions worth rewriting at `targetBytes`: those holding more
     * files than ceil(bytes/target). Returns (value, target file count). */
@@ -91,7 +109,7 @@ object Compaction {
     * parity contrast at the records level. */
   def compact(spark: SparkSession, path: String, partitionCol: String,
               targetBytes: Long,
-              layoutSort: Seq[org.apache.spark.sql.Column] = Nil): Seq[Rewrite] = {
+              layoutSort: Seq[Column] = Nil): Seq[Rewrite] = {
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val before = stats(spark, path, partitionCol)
@@ -101,12 +119,8 @@ object Compaction {
       // the frame carries exactly the data columns and writes back flat
       val tmp = new Path(root, s".compact-tmp-$partitionCol=$value")
       if (fs.exists(tmp)) fs.delete(tmp, true) // stale crash leftover
-      val frame = spark.read.parquet(dir.toString)
-      val rewritten =
-        if (layoutSort.isEmpty) frame.coalesce(k)
-        else frame.repartitionByRange(k, layoutSort: _*)
-          .sortWithinPartitions(layoutSort: _*)
-      rewritten.write.parquet(tmp.toString)
+      relayout(spark.read.parquet(dir.toString), k, layoutSort)
+        .write.parquet(tmp.toString)
       // two-rename swap: a racing reader sees the old files or the new,
       // never a mix — though between the renames the partition is briefly
       // ABSENT (dir renames aren't jointly atomic). This variant exists
@@ -120,12 +134,7 @@ object Compaction {
       require(fs.rename(dir, old), s"compaction swap failed: $dir -> $old")
       require(fs.rename(tmp, dir), s"compaction swap failed: $tmp -> $dir")
       fs.delete(old, true)
-      val after = fs.listStatus(dir).count { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
-      Rewrite(value, before.find(_.value == value).map(_.files).getOrElse(0),
-        after)
+      rewriteOf(spark, before, value, dir.toString)
     }
   }
 
@@ -135,9 +144,8 @@ object Compaction {
   // version inside the partition's store and swings that partition's
   // pointer atomically — a racing reader resolving through readPointered
   // always lands on a complete directory (CompactionSpec races a reader
-  // thread against repeated compactions). The previous version is retained
-  // one generation for readers that resolved just before a swing, then
-  // reaped on the partition's next compaction. The trade: the layout is no
+  // thread against repeated compactions). Superseded versions are reaped
+  // per MigrationRunner.supersededVersions. The trade: the layout is no
   // longer bare-path readable (spark.read.parquet(root) would see nested
   // version dirs) — readers resolve through the library. VERDICT r13 next
   // #4: this is the variant that DELETES the absence caveat instead of
@@ -179,7 +187,7 @@ object Compaction {
         if (!fs.exists(new Path(store)))
           landPointered(spark, spark.read.parquet(dir), pointeredPath,
             partitionCol, value)
-        else if (graft.jobs.MigrationRunner.currentVersion(spark, store).isEmpty)
+        else if (MigrationRunner.currentVersion(spark, store).isEmpty)
           sys.error(s"$store exists but has no CURRENT pointer — not a " +
             "landed store (atomic landing cannot leave this state); a " +
             "pre-atomic-landing remnant or external corruption. Inspect " +
@@ -235,7 +243,7 @@ object Compaction {
     * lease proves it dead; a crash between rename and lock release leaves
     * a complete, readable store holding a stale lock, which the same
     * lease sweep already recovers (it is a visible store). */
-  def landPointered(spark: SparkSession, df: org.apache.spark.sql.DataFrame,
+  def landPointered(spark: SparkSession, df: DataFrame,
                     pointeredPath: String, partitionCol: String,
                     value: String): Unit = {
     val store = new Path(s"$pointeredPath/$partitionCol=$value")
@@ -247,13 +255,13 @@ object Compaction {
     val hidden = s"$pointeredPath/$LandingPrefix$partitionCol=$value.$nonce"
     // stamp first, build second: any leftover dir a hard kill can leave
     // carries an adjudicable acquire stamp for the janitor's lease
-    val stamp = graft.jobs.MigrationRunner.stampMaintenanceLock(spark, hidden,
+    val stamp = MigrationRunner.stampMaintenanceLock(spark, hidden,
         s"landPointered $partitionCol=$value")
       .getOrElse(sys.error(s"fresh landing dir $hidden already locked — " +
         "nonce collision, retry the landing"))
     try {
       df.write.mode("overwrite").parquet(s"$hidden/v1")
-      graft.jobs.MigrationRunner.publish(spark, hidden, "v1")
+      MigrationRunner.publish(spark, hidden, "v1")
     } catch {
       case scala.util.control.NonFatal(e) =>
         fs.delete(new Path(hidden), true) // private dir: always safe
@@ -270,8 +278,7 @@ object Compaction {
         sys.error(s"landing swap lost a race: $hidden -> $store (" +
           s"${e.getMessage}) — doubled lander, the winner's store stands")
     }
-    graft.jobs.MigrationRunner
-      .releaseMaintenanceLockIfMine(spark, store.toString, stamp): Unit
+    MigrationRunner.releaseMaintenanceLockIfMine(spark, store.toString, stamp): Unit
   }
 
   /** Resolve every partition's live version and union them back into one
@@ -317,7 +324,7 @@ object Compaction {
                     partitionType: String = "string",
                     onlyValues: Option[Set[String]] = None,
                     mergeSchema: Boolean = false)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     val stores = partitionStores(spark, path, partitionCol)
       .filter { case (value, _) => onlyValues.forall(_.contains(value)) }
     onlyValues.foreach { req =>
@@ -365,7 +372,7 @@ object Compaction {
                          partitionCol: String, partitionType: String,
                          mergeSchema: Boolean = false)
                         (valuePred: String => Boolean)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     val stores = partitionStores(spark, path, partitionCol)
       .filter { case (value, _) => valuePred(value) }
     require(stores.nonEmpty,
@@ -399,12 +406,7 @@ object Compaction {
   private def footerSchema(spark: SparkSession, versionDir: String)
       : Option[org.apache.spark.sql.types.StructType] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(versionDir)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).toSeq.filter { f =>
-      val n = f.getPath.getName
-      f.isFile && !n.startsWith("_") && !n.startsWith(".")
-    }.sortBy(_.getPath.getName).headOption.flatMap { f =>
+    dataFiles(spark, versionDir).sortBy(_.getPath.getName).headOption.flatMap { f =>
       if (footerSchemaCache.size > FooterCacheMax) footerSchemaCache.clear()
       footerSchemaCache.computeIfAbsent(f.getPath.toString, { _ =>
         val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
@@ -443,7 +445,7 @@ object Compaction {
   private def unionStores(spark: SparkSession, stores: Seq[(String, String)],
                           partitionCol: String, partitionType: String,
                           missingOk: Boolean, mergeSchema: Boolean)
-      : org.apache.spark.sql.DataFrame = {
+      : DataFrame = {
     import org.apache.spark.sql.functions.lit
     var schema: Option[org.apache.spark.sql.types.StructType] = None
     def checkAgainstImposed(value: String, versionDir: String): Unit =
@@ -470,7 +472,7 @@ object Compaction {
         case _ => () // first store, matching store, or no footer to check
       }
     val parts = stores.flatMap { case (value, store) =>
-      graft.jobs.MigrationRunner.currentVersion(spark, store) match {
+      MigrationRunner.currentVersion(spark, store) match {
         case None =>
           val storePath = new Path(store)
           val fs = storePath
@@ -539,7 +541,7 @@ object Compaction {
     partitionStores(spark, path, partitionCol).flatMap { case (value, store) =>
       val storePath = new Path(store)
       val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.jobs.MigrationRunner.currentVersion(spark, store) match {
+      MigrationRunner.currentVersion(spark, store) match {
         case None =>
           if (!fs.exists(storePath)) None // expired between listing and here
           else if (lenient) {
@@ -550,13 +552,8 @@ object Compaction {
           }
           else sys.error(s"no CURRENT pointer in partition store $store")
         case Some(name) =>
-          try {
-            val files = fs.listStatus(new Path(s"$store/$name")).toSeq.filter { f =>
-              val n = f.getPath.getName
-              f.isFile && !n.startsWith("_") && !n.startsWith(".")
-            }
-            Some(PartitionStat(value, files.size, files.map(_.getLen).sum))
-          } catch {
+          try Some(stat(spark, value, s"$store/$name"))
+          catch {
             case scala.util.control.NonFatal(e) =>
               if (!fs.exists(storePath)) None // expired mid-listing
               else throw e
@@ -623,7 +620,7 @@ object Compaction {
         // (a false foreign-lock alarm at release; review r16)
         .filter { _ =>
           fs.exists(new Path(store)) &&
-          graft.jobs.MigrationRunner.withMaintenanceLockIfFree(spark, store,
+          MigrationRunner.withMaintenanceLockIfFree(spark, store,
             s"expirePointered $partitionCol=$value") {
             val tomb = new Path(root, s"$tombPrefix$value")
             if (fs.exists(tomb)) fs.delete(tomb, true)
@@ -669,96 +666,34 @@ object Compaction {
 
   /** Pointered compaction: rewrite each planned partition's live version
     * into a fresh version of the SAME partition store and swing its
-    * pointer — atomic per partition, no rename dance, no absence. Old
-    * generations (and crash leftovers — versions written but never
-    * published) are reaped down to {new live, previous live}.
+    * pointer (MigrationRunner.swapIn) — atomic per partition, no rename
+    * dance, no absence. Superseded generations and crash leftovers
+    * (versions written but never published) are reaped in the same commit.
     *
     * `skipHeld` (r15): interactive runs keep the default fail-loud-on-
     * contention; an UNATTENDED sweep (maintainPointered) passes true so
-    * one store held by another maintainer is skipped — left for the next
-    * sweep — instead of aborting the remaining partitions' rewrites. */
+    * one store held by another maintainer — or expired out from under the
+    * plan by a concurrent sweep — is skipped and left for the next sweep
+    * (MigrationRunner.withLiveStoreLockIfFree) instead of aborting the
+    * remaining partitions' rewrites. */
   def compactPointered(spark: SparkSession, path: String,
                        partitionCol: String, targetBytes: Long,
-                       layoutSort: Seq[org.apache.spark.sql.Column] = Nil,
+                       layoutSort: Seq[Column] = Nil,
                        skipHeld: Boolean = false)
       : Seq[Rewrite] = {
     val before = statsPointered(spark, path, partitionCol, lenient = skipHeld)
     plan(before, targetBytes).flatMap { case (value, k) =>
       val store = s"$path/$partitionCol=$value"
       val owner = s"compactPointered $partitionCol=$value"
-      val run: (=> Rewrite) => Option[Rewrite] =
-        if (skipHeld) body => {
-          // unattended sweeps tolerate a CONCURRENT sweep expiring stores
-          // out from under the plan (review r16): skip a store whose dir
-          // is already gone (acquiring would resurrect it as a shell),
-          // and if it vanishes between the check and the acquisition —
-          // currentVersion empty under OUR lock — reap the shell the
-          // acquisition just created instead of rewriting nothing into a
-          // dir readers would fail loud on and relandings could not
-          // replace (the no-clobber exposure rename refuses occupied
-          // paths). Interactive runs keep fail-loud semantics throughout.
-          val storePath = new Path(store)
-          val f = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!f.exists(storePath)) None
-          else graft.jobs.MigrationRunner
-            .stampMaintenanceLock(spark, store, owner) match {
-            case None => None // held: a live maintainer's store, next sweep's work
-            case Some(mine) =>
-              var shellReaped = false
-              try {
-                if (graft.jobs.MigrationRunner
-                    .currentVersion(spark, store).isEmpty) {
-                  shellReaped = graft.jobs.MigrationRunner
-                    .reapResurrectedShell(spark, store, mine)
-                  if (!shellReaped)
-                    org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                      s"store $store has no CURRENT pointer and is not an " +
-                        "empty shell — skipping its compaction (inspect " +
-                        "manually; see initPointered on pre-atomic remnants)")
-                  None
-                } else Some(body)
-              } finally if (!shellReaped)
-                graft.jobs.MigrationRunner
-                  .releaseMaintenanceLockIfMine(spark, store, mine): Unit
-          }
+      def rewrite: Rewrite = {
+        val name = MigrationRunner.swapIn(spark, store, "v1") { dst =>
+          relayout(MigrationRunner.current(spark, store), k, layoutSort)
+            .write.parquet(dst)
         }
-        else
-          body => Some(graft.jobs.MigrationRunner.withMaintenanceLock(
-            spark, store, owner)(body))
-      run {
-      val prevLive = graft.jobs.MigrationRunner.currentVersion(spark, store)
-      val name = graft.jobs.MigrationRunner.freshVersionName(spark, store, "v1")
-      val frame = graft.jobs.MigrationRunner.current(spark, store)
-      val rewritten =
-        if (layoutSort.isEmpty) frame.coalesce(k)
-        else frame.repartitionByRange(k, layoutSort: _*)
-          .sortWithinPartitions(layoutSort: _*)
-      rewritten.write.parquet(s"$store/$name")
-      graft.jobs.MigrationRunner.publish(spark, store, name)
-      // reap by switchover HISTORY: keep the live version plus the two
-      // most recently superseded ones (readers that resolved the pointer
-      // just before a swing finish their scan undisturbed; a reader would
-      // have to stall across THREE swings of the same partition to lose
-      // its version — longer-lived readers need time-based retention,
-      // which is a policy knob, not a correctness gap). The pre-publish
-      // live version is kept EXPLICITLY too, not only via history — a
-      // store whose HISTORY predates its pointer must never reap what a
-      // racing reader just resolved. Crash leftovers — written but never
-      // published — are in neither set and get reaped.
-      val keep = graft.jobs.MigrationRunner.versionHistory(spark, store)
-        .takeRight(3).toSet + name ++ prevLive
-      val storePath = new Path(store)
-      val fs = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.listStatus(storePath).filter(_.isDirectory).map(_.getPath)
-        .filterNot(p => keep.contains(p.getName))
-        .foreach(fs.delete(_, true))
-      val after = fs.listStatus(new Path(s"$store/$name")).count { f =>
-        val n = f.getPath.getName
-        f.isFile && !n.startsWith("_") && !n.startsWith(".")
+        rewriteOf(spark, before, value, s"$store/$name")
       }
-      Rewrite(value, before.find(_.value == value).map(_.files).getOrElse(0),
-        after)
-      }
+      if (skipHeld) MigrationRunner.withLiveStoreLockIfFree(spark, store, owner)(rewrite)
+      else Some(MigrationRunner.withMaintenanceLock(spark, store, owner)(rewrite))
     }
   }
 
@@ -804,14 +739,14 @@ object Compaction {
   def maintainPointered(spark: SparkSession, path: String,
                         partitionCol: String, targetBytes: Long,
                         asOf: java.time.LocalDate, retentionDays: Int,
-                        layoutSort: Seq[org.apache.spark.sql.Column] = Nil,
+                        layoutSort: Seq[Column] = Nil,
                         staleLockLease: Option[java.time.Duration] = None,
                         now: () => java.time.Instant =
                           () => java.time.Instant.now()): MaintenanceReport = {
     val broken = staleLockLease.fold(Seq.empty[String]) { lease =>
       val instant = now()
       partitionStores(spark, path, partitionCol).collect {
-        case (value, store) if graft.jobs.MigrationRunner
+        case (value, store) if MigrationRunner
             .breakMaintenanceLockIfStale(spark, store, lease, instant) => value
       }
     }
@@ -866,8 +801,7 @@ object Compaction {
       .filter(s => s.isDirectory && s.getPath.getName.startsWith(LandingPrefix))
       .sortBy(_.getPath.getName)
       .filter { dir =>
-        graft.jobs.MigrationRunner.maintenanceLockStale(spark,
-          dir.getPath.toString, lease, now) && {
+        MigrationRunner.maintenanceLockStale(spark, dir.getPath.toString, lease, now) && {
           val claimed = new Path(root, ReapingPrefix + dir.getPath.getName)
           fs.rename(dir.getPath, claimed) && { fs.delete(claimed, true); true }
         }
@@ -880,88 +814,50 @@ object Compaction {
     * only in partitions it rewrites — a maintainer that crashed between
     * write and publish in an already-compact store leaves its version dir
     * until that store next fragments, which may be never. Sweep every
-    * store: under its lock (acquire-if-free — a held store is a live
-    * maintainer whose in-flight version must NOT be reaped; next sweep's
-    * work), delete version dirs outside compaction's own keep policy
-    * (live + last three switchovers). A lock-free pre-scan skips the lock
-    * churn on the (typical) all-clean warehouse. */
+    * store: under its lock (MigrationRunner.withLiveStoreLockIfFree — a
+    * held store is a live maintainer whose in-flight version must NOT be
+    * reaped; next sweep's work), delete the versions
+    * MigrationRunner.supersededVersions returns. A lock-free pre-scan
+    * skips the lock churn on the (typical) all-clean warehouse. */
   private def reapUnpublishedVersions(spark: SparkSession, path: String,
-                                      partitionCol: String): Seq[String] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    // None = the store cannot be scanned right now: its dir VANISHED (a
-    // concurrent sweep's expiry — skip silently, it would not be listed a
-    // moment later) or it has no CURRENT (a shell or pre-atomic remnant —
-    // never abort the unattended sweep over one store; review r16, the
-    // lock-free pre-scan's sys.error aborted retention+compaction for the
-    // whole warehouse on a store expired mid-listing)
-    def reapable(store: String): Option[Seq[Path]] = {
-      val storePath = new Path(store)
-      val f = storePath.getFileSystem(conf)
-      graft.jobs.MigrationRunner.currentVersion(spark, store).map { live =>
-        val keep = graft.jobs.MigrationRunner.versionHistory(spark, store)
-          .takeRight(3).toSet + live
-        try f.listStatus(storePath).toSeq
-          .filter(_.isDirectory).map(_.getPath)
-          .filterNot(p => keep.contains(p.getName)).sortBy(_.getName)
-        catch { case _: java.io.FileNotFoundException => Nil } // expired mid-scan
-      }
-    }
+                                      partitionCol: String): Seq[String] =
     partitionStores(spark, path, partitionCol).flatMap { case (value, store) =>
-      reapable(store) match {
-        case None =>
-          // no CURRENT pointer. A COMPLETELY EMPTY dir is an unambiguous
-          // crash leftover (a resurrected shell whose reaping sweep died;
-          // its presence breaks readers and blocks relanding) — deleted
-          // and audited. A shell still holding a stale lock heals across
-          // the same sweep: the stale-lock pass runs first, emptying it.
-          // Anything with real content is skipped LOUDLY (the manual
-          // pre-atomic-remnant contract) — never an abort.
-          val storePath = new Path(store)
-          val f = storePath.getFileSystem(conf)
-          val entries =
-            try Some(f.listStatus(storePath))
-            catch { case _: java.io.FileNotFoundException => None }
-          entries match {
-            case Some(es) if es.isEmpty && f.delete(storePath, true) =>
-              Seq(s"$value/(empty shell)")
-            case Some(_) =>
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"store $store has no CURRENT pointer — skipping its " +
-                  "version reap (inspect manually; see initPointered on " +
-                  "pre-atomic remnants)")
-              Nil
-            case None => Nil // expired between listing and here
-          }
-        case Some(ps) if ps.isEmpty => Nil // advisory pre-scan, no lock
-        case Some(_) =>
-      graft.jobs.MigrationRunner.stampMaintenanceLock(spark, store,
-        s"maintainPointered reap $partitionCol=$value") match {
-        case None => Nil // held: live maintainer, next sweep's work
-        case Some(mine) =>
-          var shellReaped = false
-          try reapable(store) match { // re-scanned under the lock: authoritative
-            case Some(ps) =>
-              val fs = new Path(store).getFileSystem(conf)
-              ps.map { p =>
-                fs.delete(p, true)
-                s"$value/${p.getName}"
-              }
-            case None =>
-              // the store expired between pre-scan and acquisition and our
-              // lock resurrected its dir as a shell — remove it (an empty
-              // dir without CURRENT breaks readers and blocks relanding)
-              shellReaped = graft.jobs.MigrationRunner
-                .reapResurrectedShell(spark, store, mine)
-              if (!shellReaped)
-                org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                  s"store $store has no CURRENT pointer and is not an empty " +
-                    "shell — skipping its version reap (inspect manually)")
-              Nil
-          } finally if (!shellReaped)
-            graft.jobs.MigrationRunner
-              .releaseMaintenanceLockIfMine(spark, store, mine): Unit
+      if (MigrationRunner.currentVersion(spark, store).isEmpty) {
+        // no CURRENT pointer (never abort the unattended sweep over one
+        // store; review r16). A VANISHED dir was expired by a concurrent
+        // sweep — skip silently. A COMPLETELY EMPTY dir is an unambiguous
+        // crash leftover (a resurrected shell whose reaping sweep died;
+        // its presence breaks readers and blocks relanding) — deleted
+        // and audited. A shell still holding a stale lock heals across
+        // the same sweep: the stale-lock pass runs first, emptying it.
+        // Anything with real content is skipped LOUDLY (the manual
+        // pre-atomic-remnant contract).
+        val storePath = new Path(store)
+        val f = storePath.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val entries =
+          try Some(f.listStatus(storePath))
+          catch { case _: java.io.FileNotFoundException => None }
+        entries match {
+          case Some(es) if es.isEmpty && f.delete(storePath, true) =>
+            Seq(s"$value/(empty shell)")
+          case Some(_) =>
+            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+              s"store $store has no CURRENT pointer — skipping its " +
+                "version reap (inspect manually; see initPointered on " +
+                "pre-atomic remnants)")
+            Nil
+          case None => Nil // expired between listing and here
+        }
       }
-      }
+      else if (MigrationRunner.supersededVersions(spark, store).isEmpty) Nil
+      else MigrationRunner.withLiveStoreLockIfFree(spark, store,
+          s"maintainPointered reap $partitionCol=$value") {
+        // re-scanned under the lock: authoritative
+        val fs = new Path(store).getFileSystem(spark.sparkContext.hadoopConfiguration)
+        MigrationRunner.supersededVersions(spark, store).map { p =>
+          fs.delete(p, true)
+          s"$value/${p.getName}"
+        }
+      }.getOrElse(Nil)
     }
-  }
 }

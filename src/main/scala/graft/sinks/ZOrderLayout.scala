@@ -1,7 +1,9 @@
 package graft.sinks
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.jobs.MigrationRunner
 
 /** Z-order (Morton-curve) layout for two-dimensional scan locality — the
   * storage answer for a table probed on EITHER of two keys. BucketedLayout
@@ -59,12 +61,18 @@ object ZOrderLayout {
           require(lo >= 0 && hi < lim,
             s"$c range [$lo, $hi] must fit in $bits bits (quantize first)")
         }
-    df.withColumn("__z", zvalue(col(ca), col(cb), bits))
+    writeZSorted(df, zvalue(col(ca), col(cb), bits), path, files)
+  }
+
+  /** The z-sort write tail: range-partition `df` on `z` into `files`
+    * parquet files, each sorted on `z`. */
+  private def writeZSorted(df: DataFrame, z: Column, path: String,
+                           files: Int): Unit =
+    df.withColumn("__z", z)
       .repartitionByRange(files, col("__z"))
       .sortWithinPartitions("__z")
       .drop("__z")
       .write.mode("overwrite").parquet(path)
-  }
 
   /** Re-interleave a z-ordered path in place (r13 — the z-layout's
     * compaction): incremental appends land as stragglers OUTSIDE the
@@ -87,7 +95,7 @@ object ZOrderLayout {
     * have to live inside the directory being renamed); schedule at most
     * one compaction per table path — or use the versioned variant, whose
     * maintenance lock enforces it. */
-  def compactZOrdered(spark: org.apache.spark.sql.SparkSession, path: String,
+  def compactZOrdered(spark: SparkSession, path: String,
                       ca: String, cb: String, files: Int = 16,
                       bits: Int = 21): Unit = {
     import org.apache.hadoop.fs.Path
@@ -97,13 +105,6 @@ object ZOrderLayout {
     val old = new Path(dir.getParent, "." + dir.getName + ".z-compact-old")
     val marker = new Path(dir.getParent, "." + dir.getName + ".z-compact-params")
     val params = compactParams(ca, cb, files, bits)
-    def readMarker(): Option[String] =
-      if (!fs.exists(marker)) None
-      else {
-        val in = fs.open(marker)
-        try Some(new String(in.readAllBytes(), "UTF-8").trim)
-        finally in.close()
-      }
     // self-healing retry (review finding, r13): unlike Compaction's
     // per-partition swap, this one moves the WHOLE table root — a crash
     // between the two renames leaves the path absent until someone acts.
@@ -114,7 +115,8 @@ object ZOrderLayout {
     // must not silently install a layout built under the old ones
     // (r13 ADVICE); it rolls back via `old` and redoes the rewrite.
     if (!fs.exists(dir)) {
-      if (fs.exists(tmp) && readMarker().contains(params)) {
+      if (fs.exists(tmp) &&
+          MigrationRunner.readText(fs, marker).map(_.trim).contains(params)) {
         require(fs.rename(tmp, dir), s"z-compaction recovery failed: $tmp -> $dir")
         if (fs.exists(old)) fs.delete(old, true)
         fs.delete(marker, false)
@@ -148,8 +150,7 @@ object ZOrderLayout {
   // as version directories behind an atomically-swapped CURRENT pointer,
   // compaction writes a NEW version and swings the pointer, and a reader
   // resolving through readVersioned always lands on a complete directory.
-  // The previous version is retained ONE generation for readers that
-  // resolved just before a swing, then reaped on the next compaction.
+  // Superseded versions are reaped per MigrationRunner.supersededVersions.
   // The trade: readers must resolve through the pointer (this library),
   // not a bare spark.read.parquet(path) — the rename variant stays for
   // layouts that must remain plain-path readable.
@@ -160,52 +161,37 @@ object ZOrderLayout {
                              cb: String, files: Int = 16,
                              bits: Int = 21): Unit = {
     val spark = df.sparkSession
-    graft.jobs.MigrationRunner.withMaintenanceLock(spark, storeRoot,
+    MigrationRunner.withMaintenanceLock(spark, storeRoot,
         "writeZOrderedVersioned") {
-      val name = graft.jobs.MigrationRunner.freshVersionName(spark, storeRoot, "z")
+      val name = MigrationRunner.freshVersionName(spark, storeRoot, "z")
       writeZOrdered(df, s"$storeRoot/$name", ca, cb, files, bits)
-      graft.jobs.MigrationRunner.publish(spark, storeRoot, name)
+      MigrationRunner.publish(spark, storeRoot, name)
     }
   }
 
   /** Resolve the live version of a versioned z-store. */
-  def readVersioned(spark: org.apache.spark.sql.SparkSession,
+  def readVersioned(spark: SparkSession,
                     storeRoot: String): DataFrame =
-    graft.jobs.MigrationRunner.current(spark, storeRoot)
+    MigrationRunner.current(spark, storeRoot)
 
   /** Re-interleave a versioned z-store: one z-ordered rewrite of the live
-    * version into a fresh version dir, one atomic pointer swing — a racing
-    * reader sees the old version or the new, NEVER an absent table
-    * (ZOrderLayoutSpec races a reader thread against repeated compactions).
-    * Crash-safe with no marker machinery: a crash before publish leaves an
-    * unreferenced version dir that the next run's reap deletes; the
-    * pointer only ever references complete writes. */
-  def compactZOrderedVersioned(spark: org.apache.spark.sql.SparkSession,
-                               storeRoot: String, ca: String, cb: String,
+    * version into a fresh version dir, one atomic pointer swing
+    * (MigrationRunner.swapIn) — a racing reader sees the old version or
+    * the new, NEVER an absent table (ZOrderLayoutSpec races a reader
+    * thread against repeated compactions). Crash-safe with no marker
+    * machinery: a crash before publish leaves an unreferenced version dir
+    * that the next run's reap deletes. */
+  def compactZOrderedVersioned(spark: SparkSession, storeRoot: String,
+                               ca: String, cb: String,
                                files: Int = 16, bits: Int = 21): Unit =
-   graft.jobs.MigrationRunner.withMaintenanceLock(spark, storeRoot,
-       "compactZOrderedVersioned") {
-    import org.apache.hadoop.fs.Path
-    val prevLive = graft.jobs.MigrationRunner.currentVersion(spark, storeRoot)
-    require(prevLive.nonEmpty, s"no versioned z-store under $storeRoot")
-    val name = graft.jobs.MigrationRunner.freshVersionName(spark, storeRoot, "z")
-    writeZOrdered(readVersioned(spark, storeRoot), s"$storeRoot/$name",
-      ca, cb, files, bits)
-    graft.jobs.MigrationRunner.publish(spark, storeRoot, name)
-    // reap by switchover HISTORY: keep the live version plus the two most
-    // recently superseded (a reader would have to stall across three
-    // swings to lose its resolved version), and the pre-publish live
-    // EXPLICITLY (a store whose HISTORY predates its pointer must never
-    // reap what a racing reader just resolved); crash leftovers — written
-    // but never published — are in neither set and get reaped.
-    val keep = graft.jobs.MigrationRunner.versionHistory(spark, storeRoot)
-      .takeRight(3).toSet + name ++ prevLive
-    val root = new Path(storeRoot)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.listStatus(root).filter(_.isDirectory)
-      .map(_.getPath).filterNot(p => keep.contains(p.getName))
-      .foreach(fs.delete(_, true))
-   }
+    MigrationRunner.withMaintenanceLock(spark, storeRoot,
+        "compactZOrderedVersioned") {
+      require(MigrationRunner.currentVersion(spark, storeRoot).nonEmpty,
+        s"no versioned z-store under $storeRoot")
+      MigrationRunner.swapIn(spark, storeRoot, "z") { dst =>
+        writeZOrdered(readVersioned(spark, storeRoot), dst, ca, cb, files, bits)
+      }: Unit
+    }
 
   private def compactParams(ca: String, cb: String, files: Int,
                             bits: Int): String =
@@ -215,7 +201,7 @@ object ZOrderLayout {
     * recovery precondition for rolling a leftover tmp forward. Exposed
     * package-private so the crash-simulation spec can construct the exact
     * on-disk state an interrupted run leaves behind. */
-  private[graft] def writeCompactMarker(spark: org.apache.spark.sql.SparkSession,
+  private[graft] def writeCompactMarker(spark: SparkSession,
                                         path: String, ca: String, cb: String,
                                         files: Int, bits: Int): Unit = {
     import org.apache.hadoop.fs.Path
@@ -247,10 +233,6 @@ object ZOrderLayout {
       val arr = array(bounds.map(lit(_)).toIndexedSeq: _*)
       size(filter(arr, x => x <= col(c).cast("double"))).cast("long")
     }
-    df.withColumn("__z", zvalue(bucket(ca), bucket(cb), bits))
-      .repartitionByRange(files, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-      .write.mode("overwrite").parquet(path)
+    writeZSorted(df, zvalue(bucket(ca), bucket(cb), bits), path, files)
   }
 }

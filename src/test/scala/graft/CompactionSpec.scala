@@ -751,4 +751,46 @@ class CompactionSpec extends SparkSpec {
     assert(Compaction.readPointered(spark, base, "partition_date")
       .count() == 20L, s"$sweep")
   }
+
+  test("a compaction after a rollback keeps the pre-swap live version and " +
+      "reaps the older one (pointered and versioned z-store)") {
+    import spark.implicits._
+    import graft.jobs.MigrationRunner
+    // rollback moves CURRENT without appending to HISTORY, so the live
+    // version sits OUTSIDE HISTORY's last three: only the commit's explicit
+    // keep of the pre-swap live version saves it — a reader may have just
+    // resolved it — while an older superseded version must still go
+    def versions(store: String): Set[String] =
+      new java.io.File(store).listFiles().filter(_.isDirectory)
+        .map(_.getName).toSet
+    val df = (0 until 200).map(i => (i.toLong, i.toLong % 16, s"p$i"))
+      .toDF("id", "day", "payload")
+
+    val base = Files.createTempDirectory("graft-retention-rollback").toString
+    val store = s"$base/partition_date=2024-01-01"
+    Seq("v0", "a", "b", "c").foreach { n =>
+      df.repartition(8).write.parquet(s"$store/$n")
+      MigrationRunner.publish(spark, store, n)
+    }
+    MigrationRunner.rollback(spark, store, Some("v0"))
+    val r = Compaction.compactPointered(spark, base, "partition_date", 1L << 30)
+    assert(r.map(_.value) == Seq("2024-01-01"), s"$r")
+    val live = MigrationRunner.currentVersion(spark, store).get
+    assert(versions(store) == Set("v0", "b", "c", live),
+      s"pointered: expected pre-swap v0 kept and a reaped: ${versions(store)}")
+    assert(spark.read.parquet(s"$store/v0").count() == 200L)
+    assert(Compaction.readPointered(spark, base, "partition_date").count() == 200L)
+
+    val zRoot = Files.createTempDirectory("graft-retention-rollback-z")
+      .toString + "/store"
+    (0 until 4).foreach(_ => graft.sinks.ZOrderLayout.writeZOrderedVersioned(
+      df, zRoot, "id", "day", files = 2))
+    MigrationRunner.rollback(spark, zRoot, Some("z"))
+    graft.sinks.ZOrderLayout.compactZOrderedVersioned(spark, zRoot, "id", "day",
+      files = 2)
+    val zLive = MigrationRunner.currentVersion(spark, zRoot).get
+    assert(versions(zRoot) == Set("z", "z-2", "z-3", zLive),
+      s"z-store: expected pre-swap z kept and z-1 reaped: ${versions(zRoot)}")
+    assert(spark.read.parquet(s"$zRoot/z").count() == 200L)
+  }
 }

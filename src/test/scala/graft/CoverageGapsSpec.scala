@@ -85,19 +85,8 @@ class CoverageGapsSpec extends SparkSpec {
     assert(out(11L).isEmpty, "no score existed before user 2's probe")
   }
 
-  test("salted aggregation equals direct aggregation on a skewed key") {
-    val skewed = (1L to 10000L).map(i => ("hot", i, i)) ++ Seq(("cold", 5L, 10001L))
-    val df = skewed.toDF("k", "v", "row_id")
-    val salted = graft.ops.Ops.saltedSum(df, "k", col("v"), 16, "total", "row_id")
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val direct = df.groupBy("k").agg(sum("v").as("total"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(salted == direct)
-  }
-
   test("AQE splits a skewed join partition at runtime (skew=true in the final plan)") {
-    // The join-side twin of the salted aggregation: when one key owns the
-    // fact table, AQE's OptimizeSkewedJoin must split that partition into
+    // When one key owns the fact table, AQE's OptimizeSkewedJoin must split that partition into
     // parallel sub-joins at runtime. Thresholds are lowered so local-scale
     // data trips the same code path a 100 TB hot key would.
     val restore = Seq(

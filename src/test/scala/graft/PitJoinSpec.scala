@@ -82,11 +82,10 @@ class PitJoinSpec extends SparkSpec {
       .toDF("user_id", "fact_ts", "fact_id", "score", "grade")
 
   private def wideMatrix(p: org.apache.spark.sql.DataFrame,
-                         f: org.apache.spark.sql.DataFrame,
-                         salts: Int = 1) =
+                         f: org.apache.spark.sql.DataFrame) =
     PitJoin.trainingMatrixWide(p, "user_id", "probe_ts", "probe_id",
       Seq(PitJoin.WideFact(f, "user_id", "fact_ts", "fact_id",
-        Seq("score", "grade"), lookback)), salts)
+        Seq("score", "grade"), lookback)))
       .select("probe_id", "score", "grade")
       .as[(Long, Option[Double], Option[String])].collect()
       .map(r => r._1 -> ((r._2, r._3))).toMap
@@ -122,24 +121,6 @@ class PitJoinSpec extends SparkSpec {
       .as[(Long, Option[Double], Option[Double], Option[String])].collect()
     assert(out.toSeq == Seq((100L, Some(0.3), None, None)),
       "the 10d-band fact fills while the 2d-band fact nulls out")
-  }
-
-  test("salted wide matrix ≡ unsalted on a frame with ties, bands and misses") {
-    val p = probes(
-      (1L, "2020-01-10 00:00:00", 100L), (1L, "2020-01-10 00:00:00", 101L),
-      (1L, "2020-01-02 00:00:00", 102L), (2L, "2020-02-01 00:00:00", 200L),
-      (3L, "2020-01-15 00:00:00", 300L)) // key 3: no facts
-    val f = wideFacts(
-      (1L, "2020-01-05 00:00:00", 1L, 0.3, "a"),
-      (1L, "2020-01-10 00:00:00", 2L, 0.7, "b"),
-      (1L, "2020-01-10 00:00:00", 9L, 0.8, "c"), // tie: id 9 wins
-      (2L, "2020-01-05 00:00:00", 3L, 0.5, "d")) // stale at 02-01
-    val plain = wideMatrix(p, f, salts = 1)
-    val salted = wideMatrix(p, f, salts = 4)
-    assert(plain == salted,
-      "salting must never change output — only the task layout")
-    assert(plain(102L) == ((None, None)) && plain(200L) == ((None, None)))
-    assert(plain(100L) == ((Some(0.8), Some("c"))))
   }
 
   private def wideMatrixRanged(p: org.apache.spark.sql.DataFrame,
@@ -208,12 +189,10 @@ class PitJoinSpec extends SparkSpec {
       "ranged fill dropped a tied table's value from the boundary carry")
   }
 
-  test("null keys and null tiebreaks: ranged and salted fills match the plain " +
-      "fill's null-grouping contract") {
+  test("null keys and null tiebreaks: ranged fill matches plain fill") {
     // Window.partitionBy groups null keys into ONE partition, so the plain
     // fill forward-fills across null-key rows; the ranged fill's carry
-    // join-back must be null-safe and a null probe tiebreak must land on
-    // a real salt (both were silent divergences — code-review findings)
+    // join-back must be null-safe (a silent divergence — code-review finding)
     val p = Seq[(java.lang.Long, Timestamp, java.lang.Long)](
       (null, ts("2020-01-03 00:00:00"), 100L),
       (1L, ts("2020-01-03 00:00:00"), null))
@@ -222,10 +201,10 @@ class PitJoinSpec extends SparkSpec {
       (null, ts("2020-01-01 00:00:00"), 1L, 0.3, "a"),
       (1L, ts("2020-01-01 00:00:00"), 2L, 0.7, "b"))
       .toDF("user_id", "fact_ts", "fact_id", "score", "grade")
-    def run(salts: Int = 1, rangeSecs: Long = 0) =
+    def run(rangeSecs: Long = 0) =
       PitJoin.trainingMatrixWide(p, "user_id", "probe_ts", "probe_id",
         Seq(PitJoin.WideFact(f, "user_id", "fact_ts", "fact_id",
-          Seq("score", "grade"), lookback)), salts, rangeSecs)
+          Seq("score", "grade"), lookback)), rangeSecs)
         .select("score", "grade").as[(Option[Double], Option[String])]
         .collect().toSet
     val plain = run()
@@ -233,8 +212,6 @@ class PitJoinSpec extends SparkSpec {
       s"plain fill must serve both the null-key probe and the null-tb probe: $plain")
     assert(run(rangeSecs = 86400L) == plain,
       "ranged fill dropped the null-key carry (join must be null-safe)")
-    assert(run(salts = 4) == plain,
-      "salted fill isolated the null-tiebreak probe in a factless partition")
   }
 
   test("probe columns pass through; equal-ts probes each keep their row") {

@@ -22,13 +22,6 @@ class Round11InvariantSpec extends SparkSpec {
       "one-scan and generic wide PIT matrices must be row-identical")
   }
 
-  test("pit_training_matrix_wide: salted generic ≡ unsalted on real data") {
-    val plain = jobs.TrainingSetJob.pitTrainingMatrixWideGeneric(spark, sf0001)
-    val salted = jobs.TrainingSetJob.pitTrainingMatrixWideGeneric(spark, sf0001, salts = 3)
-    assert(plain.exceptAll(salted).isEmpty && salted.exceptAll(plain).isEmpty,
-      "the hot-key salt is a pure task-layout change")
-  }
-
   test("pit_training_matrix_wide: ranged (segmented-scan) generic ≡ plain on real data") {
     // 2-day ranges over the 30-day events window: every carry/boundary
     // path runs on the real distribution
