@@ -87,15 +87,6 @@ object FeatureCache {
   def invalidate(spark: SparkSession, dir: String, name: String): Unit =
     memo.remove((idOf(spark), dir, name)).foreach(_.handle.unpersist())
 
-  /** Drop every entry of a session (call when stopping it) — unpersists
-    * the blocks too, or they'd stay registered with no surviving handle. */
-  def invalidateSession(spark: SparkSession): Unit = memo.synchronized {
-    val id = idOf(spark)
-    memo.keys.filter(_._1 == id).foreach(k =>
-      memo.remove(k).foreach(e => scala.util.Try(e.handle.unpersist())))
-    buildLocks.keys.filter(_._1 == id).foreach(buildLocks.remove)
-  }
-
   /** Forget entries whose session has been garbage collected (their blocks
     * died with the session's block manager; unpersist would throw). */
   private def sweepLocked(): Unit = {

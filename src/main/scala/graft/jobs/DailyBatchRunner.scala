@@ -26,33 +26,19 @@ object DailyBatchRunner {
   final case class RunResult(
     userRows: Long, transactionRows: Long, riskRows: Long, outputPath: String)
 
-  /** `incremental = true` swaps the three full-recompute jobs for the
-    * persisted-state incremental families (IncrementalNightlyRunner):
-    * bootstrap + `incrementalDays` nights against `stateRoot`, then the
-    * identical gate → store-swap → export tail. Output-identical to the
-    * full path by the families' ladder ≡ recompute contracts (spec-pinned);
-    * the difference is the NIGHTLY READ BUDGET — day-pruned delta scans
-    * plus summary-row re-aggregation instead of 31/91-day (or unbounded,
-    * for user features) raw rescans. */
+  /** The full-recompute run; IncrementalNightlyRunner.runIncremental is
+    * the persisted-state incremental run with the same publish tail. */
   def run(spark: SparkSession, dir: String, outputPath: String,
           floors: Thresholds,
-          runDate: java.time.LocalDate = graft.core.AsOf.date(graft.core.AsOf.orders),
-          incremental: Boolean = false,
-          incrementalDays: Int = 3,
-          stateRoot: String = ""): RunResult = {
-    if (incremental) {
-      require(stateRoot.nonEmpty, "incremental mode needs a stateRoot")
-      return IncrementalNightlyRunner.runIncremental(spark,
-        IncrementalNightlyRunner.Sources.fromDir(spark, dir), stateRoot,
-        outputPath, floors, incrementalDays, runDate)
-    }
+          runDate: java.time.LocalDate = graft.core.AsOf.date(graft.core.AsOf.orders))
+      : RunResult = {
     val uf = UserFeaturesJob(spark, dir)
     val tf = TransactionFeaturesJob(spark, dir)
     val rf = RiskFeaturesJob(spark, dir)
     publish(spark, uf, tf, rf, outputPath, floors, runDate)
   }
 
-  /** The shared tail of both modes: volume gates, versioned store swap per
+  /** The shared tail of both runs: volume gates, versioned store swap per
     * group, date-partitioned wide-view export. */
   private[jobs] def publish(spark: SparkSession, uf: DataFrame, tf: DataFrame,
                             rf: DataFrame, outputPath: String,

@@ -1,6 +1,6 @@
 package graft.jobs
 
-import java.time.{Instant, LocalDate}
+import java.time.LocalDate
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -38,12 +38,11 @@ import graft.sinks.MergeByKey
   * reference's layout — its transaction log is date-partitioned, so the
   * nightly delta scan prunes to one day physically, not just logically).
   *
-  * Night indexing mirrors the oracle ladders exactly: `bootstrap` folds
-  * everything before anchor−days, night k (0-based) folds day cut+k on
-  * each family's own clock, and the LAST night also folds the anchor-day
-  * tail (the batch jobs' scans have no upper bound), so after `days`
-  * nights the persisted states reproduce the full recompute bit-exactly
-  * (IncrementalNightlyRunnerSpec pins all three frames cell-equal).
+  * Slicing and the family table are DayLadder's, shared with the oracle
+  * ladders: `bootstrap` persists slice 0 of every family, night k
+  * (0-based) persists slice k+1, so after `days` nights the persisted
+  * states equal the in-session folds and the features reproduce the full
+  * recompute bit-exactly (IncrementalNightlyRunnerSpec pins both).
   */
 object IncrementalNightlyRunner {
 
@@ -63,29 +62,6 @@ object IncrementalNightlyRunner {
       users = Roles.users(spark, dir))
   }
 
-  /** One day-grain state family: where it lives, which source column
-    * carries its clock, how a slice summarizes, and its partition column. */
-  private final case class DayFamily(
-    name: String, tsCol: String, partCol: String,
-    src: Sources => DataFrame, summarize: DataFrame => DataFrame,
-    anchor: Instant)
-
-  private def dayLit(d: LocalDate) = lit(java.sql.Date.valueOf(d))
-
-  private def families: Seq[DayFamily] = Seq(
-    DayFamily("tx_state", "created_at", "day",
-      _.transactions, IncrementalTransactionFeatures.summarize, AsOf.orders),
-    DayFamily("rf_pay_state", "created_at", "created_day",
-      _.payments, IncrementalRiskFeatures.summarizePayments, AsOf.lineitem),
-    DayFamily("rf_login_state", "created_at", "day",
-      _.logins, IncrementalRiskFeatures.summarizeLogins, AsOf.events),
-    DayFamily("rf_alert_state", "created_at", "day",
-      _.alerts, IncrementalRiskFeatures.summarizeAlerts, AsOf.events),
-    DayFamily("rf_credit_state", "report_date", "day",
-      _.credit, IncrementalRiskFeatures.summarizeCredit, AsOf.events),
-    DayFamily("rf_score_state", "computed_at", "day",
-      _.scores, IncrementalRiskFeatures.summarizeScores, AsOf.events))
-
   private def userStateRoot(stateRoot: String) = s"$stateRoot/user_state"
 
   /** Date-partitioned landings carry this partition column (the bench and
@@ -95,7 +71,7 @@ object IncrementalNightlyRunner {
   /** THE landing builder — write `df` date-partitioned by the convention
     * (p_day = to_date of its event-time column), range-partitioned on
     * (p_day, user_id) for file hygiene, and read it back. The bench and
-    * the specs share this so the landing construction and daySlice's
+    * the specs share this so the landing construction and the slices'
     * pruning idiom exist exactly once (review finding, r13: three
     * hand-maintained copies had crept in). */
   def landEventDay(df: DataFrame, tsCol: String, path: String): DataFrame = {
@@ -106,93 +82,27 @@ object IncrementalNightlyRunner {
     df.sparkSession.read.parquet(path)
   }
 
-  /** Slice predicate on the event-time column, with the SAME bounds
-    * repeated on the landing's partition column when present — the
-    * standard warehouse idiom: the event-time predicate is the semantic
-    * truth, the redundant partition-column predicate is what physically
-    * prunes directories (timestamp row-group stats don't always support
-    * pushdown — e.g. INT96 — and partition pruning is type-independent
-    * and happens before any I/O). p_day = to_date(tsCol) by construction,
-    * so the added conjunct never changes results. */
-  private[graft] def daySlice(df: DataFrame, tsCol: String, from: LocalDate,
-                              until: Option[LocalDate],
-                              orFrom: Option[LocalDate]): DataFrame =
-    daySliceGuarded(df, tsCol, from, until, orFrom)._1
-
-  /** daySlice with the NIGHTLY p_day re-validation rider (VERDICT r13 next
-    * #5): bootstrap validates the whole landing once, but a landing whose
-    * semantics change AFTERWARDS (re-landed under arrival-day partitioning,
-    * say) was previously only caught by re-running bootstrap. The night
-    * scans its day's partitions anyway, so the check is free for exactly
-    * those rows: filter on the PARTITION column first (that alone prunes
-    * directories), observe p_day ≠ to_date(tsCol) violations on the pruned
-    * rows, then apply the event-time predicate ABOVE the observation —
-    * placing it below would hide precisely the mislabeled rows (p_day in
-    * range, ts outside) whose silent loss the rider exists to catch. The
-    * ts conjunct no longer reaches the parquet row groups, but within an
-    * event-day partition every row matches it anyway (p_day = to_date(ts)
-    * when the convention holds), so the records economy is unchanged —
-    * IncrementalNightlyRunnerSpec's landed-vs-flat records pin stays the
-    * proof. */
-  /** The rider's handle: the free observe() counter plus an explicit
-    * day-partition-bounded recount. The recount exists because observed
-    * metrics can be LOST to AQE's empty-relation propagation: when a
-    * night's summary aggregates to zero rows (e.g. every scanned row was
-    * mislabeled and the event-time conjunct dropped them all — exactly
-    * the corruption case), AQE replaces the executed subtree with an
-    * empty relation and the CollectMetrics node's result never reaches
-    * the Observation (verified empirically: Observation.get completes
-    * with an EMPTY map). verifyPdayGuard falls back to the recount only
-    * in that case — one scan bounded by the day's partitions, paid only
-    * on empty nights. */
+  /** The p_day rider's handle: the free observe() counter plus an explicit
+    * recount over the same scanned rows. The recount exists because
+    * observed metrics can be LOST to AQE's empty-relation propagation: when
+    * a slice's summary aggregates to zero rows (e.g. every scanned row was
+    * mislabeled and the event-time conjunct dropped them all — exactly the
+    * corruption case), AQE replaces the executed subtree with an empty
+    * relation and the CollectMetrics node's result never reaches the
+    * Observation (verified empirically: Observation.get completes with an
+    * EMPTY map). verifyPdayGuard falls back to the recount only in that
+    * case — one scan of the slice's partitions, paid only on empty slices. */
   private[graft] final case class PdayRider(
     obs: org.apache.spark.sql.Observation, recount: () => Long)
 
-  private[graft] def daySliceGuarded(df: DataFrame, tsCol: String,
-                                     from: LocalDate, until: Option[LocalDate],
-                                     orFrom: Option[LocalDate])
-      : (DataFrame, Option[PdayRider]) = {
-    def pred(c: org.apache.spark.sql.Column) = {
-      val base = until.fold(c >= dayLit(from))(u =>
-        c >= dayLit(from) && c < dayLit(u))
-      orFrom.fold(base)(t => base || c >= dayLit(t))
-    }
-    val byTs = pred(col(tsCol))
-    if (df.columns.contains(LandingPartCol)) {
-      val obs = org.apache.spark.sql.Observation()
-      val violations =
-        sum(when(col(LandingPartCol) =!= to_date(col(tsCol)), 1L)
-          .otherwise(0L)).as("pday_violations")
-      val pruned = df.filter(pred(col(LandingPartCol)))
-      val recount = () => Option(pruned.agg(violations).head.get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-      (pruned.observe(obs, violations).filter(byTs),
-        Some(PdayRider(obs, recount)))
-    } else (df.filter(byTs), None)
-  }
-
-  /** Everything strictly BEFORE `cut` (bootstrap slices). */
-  private def beforeSlice(df: DataFrame, tsCol: String,
-                          cut: LocalDate): DataFrame =
-    if (df.columns.contains(LandingPartCol))
-      df.filter(col(LandingPartCol) < dayLit(cut) && col(tsCol) < dayLit(cut))
-    else df.filter(col(tsCol) < dayLit(cut))
+  private val Violations = "pday_violations"
 
   /** The p_day convention is BY NAME, so a landing partitioned by some
     * OTHER day (arrival day is the classic) would silently satisfy the
-    * column check while daySlice's partition predicates drop late rows
-    * forever (review finding, r13). Bootstrap — the one pass that scans
-    * all history anyway — piggybacks a violation counter on the backfill
-    * via observe() (zero extra scans) and `verify` fails the run loud if
-    * any scanned row has p_day ≠ to_date(tsCol). The CollectMetrics node
-    * sits BELOW the slice filter, so the check covers the whole landing
-    * (and, since filters don't push through it, bootstrap reads the full
-    * source — at scale that is ~what the < cut backfill reads anyway, and
-    * full coverage is exactly what a one-time validation wants). A
-    * day-partition-pruned nightly scan could never see the late rows
-    * whose loss this guards against. Residual honesty: a
-    * landing whose semantics change AFTER bootstrap is not re-checked
-    * nightly; re-run bootstrap (idempotent) to re-validate. */
+    * column check while the slices' partition predicates drop late rows
+    * forever (review finding, r13). This rides an observe() counter of
+    * rows with p_day ≠ to_date(tsCol) on every row `df` scans (zero extra
+    * scans), and verifyPdayGuard fails the run loud on any. */
   private def pdayGuard(df: DataFrame, tsCol: String)
       : (DataFrame, Option[PdayRider]) =
     if (!df.columns.contains(LandingPartCol)) (df, None)
@@ -200,9 +110,7 @@ object IncrementalNightlyRunner {
       val obs = org.apache.spark.sql.Observation()
       val violations =
         sum(when(col(LandingPartCol) =!= to_date(col(tsCol)), 1L)
-          .otherwise(0L)).as("pday_violations")
-      // fallback recount only fires when the backfill summary was EMPTY
-      // (see PdayRider) — the frame it re-scans is ~empty in that case
+          .otherwise(0L)).as(Violations)
       val recount = () => Option(df.agg(violations).head.get(0))
         .map(_.asInstanceOf[Long]).getOrElse(0L)
       (df.observe(obs, violations), Some(PdayRider(obs, recount)))
@@ -213,9 +121,8 @@ object IncrementalNightlyRunner {
     rider.foreach { r =>
       val metrics = r.obs.get
       val bad =
-        if (metrics.contains("pday_violations"))
-          Option(metrics("pday_violations")).map(_.asInstanceOf[Long])
-            .getOrElse(0L)
+        if (metrics.contains(Violations))
+          Option(metrics(Violations)).map(_.asInstanceOf[Long]).getOrElse(0L)
         else r.recount() // metrics lost to AQE empty-relation propagation
       require(bad == 0L,
         s"$name landing violates the $LandingPartCol convention: $bad rows " +
@@ -226,58 +133,129 @@ object IncrementalNightlyRunner {
           "column, or drop/rename the p_day column to opt out of pruning.")
     }
 
-  /** Initial backfill: every day-grain family summarized over rows strictly
-    * before (its anchor − days); the user family's running totals likewise,
-    * committed as version "pre" (no day folded yet). Idempotent — dynamic
-    * overwrite replaces the same partitions, and a live "pre" pointer is
-    * left alone on re-run. */
-  def bootstrap(spark: SparkSession, src: Sources, stateRoot: String,
-                days: Int): Unit = {
-    families.foreach { f =>
-      val cut = AsOf.date(f.anchor).minusDays(days.toLong)
-      // the p_day-convention guard rides the backfill scan (see pdayGuard)
-      val (guarded, obs) = pdayGuard(f.src(src), f.tsCol)
-      // file hygiene for the one-off backfill: it spans EVERY history day,
-      // and a grain-hashed summary would write (tasks × days) slivers; a
-      // range partitioning on (day, user) keeps files ≈ max(days, tasks)
-      // while still letting a heavy day span several tasks (a single-task-
-      // per-day repartition would serialize the biggest day at 100 TB).
-      // The nightly writes stay grain-hashed — one day, bounded files,
-      // and sinks/Compaction owns long-horizon accumulation.
-      MergeByKey.overwritePartitions(
-        f.summarize(beforeSlice(guarded, f.tsCol, cut))
-          .repartitionByRange(col(f.partCol), col("user_id")),
-        s"$stateRoot/${f.name}", f.partCol)
-      verifyPdayGuard(f.name, f.tsCol, obs)
-    }
+  /** Slice `s` of a source, with the p_day rider. On a date-partitioned
+    * landing the slice's bounds first filter the PARTITION column — the
+    * standard warehouse idiom: that alone prunes directories, before any
+    * I/O and whatever the timestamp's encoding (INT96 row-group stats
+    * don't support pushdown). The rider observes the pruned rows (the
+    * nightly re-validation, VERDICT r13 next #5: a landing whose semantics
+    * change after bootstrap is caught on the night that scans it), and the
+    * event-time predicate — the semantic truth — applies ABOVE the
+    * observation: below it would hide precisely the mislabeled rows (p_day
+    * in range, ts outside) whose silent loss the rider exists to catch.
+    * Within an event-day partition every row matches that predicate
+    * anyway, so the records economy is unchanged
+    * (IncrementalNightlyRunnerSpec's landed-vs-flat records pin).
+    *
+    * `wholeLanding` (bootstrap's backfill) observes the whole landing
+    * instead: the one pass that scans all history anyway validates all of
+    * it, including late rows no day-pruned night scan could see. Filters
+    * don't push through the CollectMetrics node, so it reads the full
+    * source — at scale ~what the backfill reads anyway. */
+  private def guardedSlice(df: DataFrame, tsCol: String, s: DayLadder.Slice,
+                           wholeLanding: Boolean = false)
+      : (DataFrame, Option[PdayRider]) = {
+    val scanned =
+      if (wholeLanding || !df.columns.contains(LandingPartCol)) df
+      else df.filter(s.pred(col(LandingPartCol)))
+    val (observed, rider) = pdayGuard(scanned, tsCol)
+    (s.of(observed, tsCol), rider)
+  }
+
+  /** Persist slice `i` of a day-grain family: one dynamic partition
+    * overwrite of the days the slice covers (replay-idempotent), then the
+    * rider's verdict — the write already scanned the slice. */
+  private def writeDaySlice(src: Sources, stateRoot: String, days: Int,
+                            f: DayLadder.Family, i: Int): Unit = {
+    val (slice, rider) = guardedSlice(f.pick(src), f.tsCol,
+      DayLadder.slices(f.anchor, days)(i), wholeLanding = i == 0)
+    val summary = f.summarize(slice)
+    // file hygiene for the one-off backfill: it spans EVERY history day,
+    // and a grain-hashed summary would write (tasks × days) slivers; a
+    // range partitioning on (day, user) keeps files ≈ max(days, tasks)
+    // while still letting a heavy day span several tasks. The nightly
+    // writes stay grain-hashed — one day, bounded files, and
+    // sinks/Compaction owns long-horizon accumulation.
+    MergeByKey.overwritePartitions(
+      if (i == 0) summary.repartitionByRange(col(f.partCol), col("user_id"))
+      else summary,
+      s"$stateRoot/${f.name}", f.partCol)
+    verifyPdayGuard(f.name, f.tsCol, rider)
+  }
+
+  /** Step `i` of the user family's ladder (DayLadder.slices on the orders
+    * clock): step 0 commits the backfill's running totals as version "pre",
+    * step k+1 folds night k's slice onto the live totals as version v<day>
+    * (v<day>-final on the last night). Exactly-once via the version name
+    * (see object scaladoc): a replayed step logs and skips. */
+  private def userStep(spark: SparkSession, src: Sources, stateRoot: String,
+                       days: Int, i: Int): Unit = {
     val uRoot = userStateRoot(stateRoot)
-    // applied-work check against HISTORY, exactly like night(): after the
-    // nights run, CURRENT points at v<day>-final, and a current-only check
-    // would re-migrate "pre" — swinging the pointer BACK to the baseline
-    // while every night fold then skips on its own history marker, i.e.
-    // silently publishing pre-ladder user features (review finding, r13)
-    val preApplied =
-      MigrationRunner.currentVersion(spark, uRoot).contains("pre") ||
-        MigrationRunner.versionHistory(spark, uRoot).contains("pre")
-    if (!preApplied) {
-      val cut = AsOf.date(AsOf.orders).minusDays(days.toLong)
-      // persist for migrate's ~4 evaluations — the backfill summarize
-      // scans ALL history, the one slice that must not run four times
-      val base = IncrementalUserFeatures.summarize(
-        beforeSlice(src.transactions, "created_at", cut)).persist()
+    val slices = DayLadder.slices(AsOf.orders, days)
+    def marker(j: Int) =
+      if (j == 0) "pre"
+      else s"v${slices(j).from.get}${if (j == days) "-final" else ""}"
+    // applied-work check against the full switchover HISTORY, not just the
+    // live pointer: a retry of an EARLIER step after later ones ran sees a
+    // newer pointer, and a current-only check would re-apply its fold
+    // (double-count) or, for a re-run bootstrap, swing the pointer BACK to
+    // "pre" while every night then skips on its own marker — silently
+    // publishing pre-ladder user features (review findings, r13)
+    def applied(m: String) =
+      MigrationRunner.currentVersion(spark, uRoot).contains(m) ||
+        MigrationRunner.versionHistory(spark, uRoot).contains(m)
+    if (applied(marker(i))) {
+      System.err.println(s"[nightly] user-state ${marker(i)} already applied — skipping (exactly-once)")
+    } else {
+      // GAP guard (r13 ADVICE): the marker prevents RE-application but a
+      // scheduler that skipped a failed night and ran the next would fold
+      // day k onto a state missing day k−1 — permanently under-counting,
+      // with the eventual "-final" marker making it look complete. Require
+      // the PREDECESSOR marker in the pointer-or-history, the same surface
+      // the replay check trusts.
+      require(i == 0 || applied(marker(i - 1)),
+        s"user-state ${marker(i)} cannot fold: predecessor user-state " +
+          s"'${marker(i - 1)}' was never applied (a skipped night would " +
+          "silently under-count the additive totals forever). Re-run the " +
+          "missing night first — replays are exactly-once, so re-running " +
+          "the whole ladder is safe.")
+      val (slice, rider) = guardedSlice(src.transactions, "created_at",
+        slices(i))
+      val delta = IncrementalUserFeatures.summarize(slice)
+      // persist for migrate's lifetime: its validation pass, copy, and
+      // symmetric reconciliation evaluate the source ~4× — without this
+      // each evaluation re-scans the slice (all history, for the backfill)
+      // and the previous state
+      val next = (if (i == 0) delta
+        else IncrementalUserFeatures.applyDelta(
+          MigrationRunner.current(spark, uRoot), delta)).persist()
       try {
-        val report = MigrationRunner.migrate(spark, base, uRoot, "pre",
+        val report = MigrationRunner.migrate(spark, next, uRoot, marker(i),
           IncrementalUserFeatures.grain)
-        require(report.switched, s"user-state bootstrap failed: $report")
-      } finally base.unpersist()
+        require(report.switched, s"user-state ${marker(i)} failed: $report")
+        // the rider on the step's own slice (free: migrate's validation
+        // pass already scanned it). Checked only AFTER the switchover: a
+        // violation aborts the run rather than the data — the day families
+        // failed the night first if the landing itself is bad, since they
+        // scan the same day earlier.
+        verifyPdayGuard("user_state", "created_at", rider)
+      } finally next.unpersist()
     }
   }
 
-  /** Night k (0-based): fold day cut+k on each family's clock. The last
-    * night (k == days−1) additionally folds the anchor-day-and-later tail,
-    * closing the ladder. Day families: one dynamic partition overwrite
-    * each (replay-idempotent). User family: exactly-once via the version
-    * name (see object scaladoc); a replayed night logs and skips.
+  /** Initial backfill: slice 0 of every day-grain family, and the user
+    * family's running totals over the same slice committed as version
+    * "pre" (no day folded yet). Idempotent — dynamic overwrite replaces the
+    * same partitions, and a live "pre" pointer is left alone on re-run. */
+  def bootstrap(spark: SparkSession, src: Sources, stateRoot: String,
+                days: Int): Unit = {
+    DayLadder.families.foreach(writeDaySlice(src, stateRoot, days, _, 0))
+    userStep(spark, src, stateRoot, days, 0)
+  }
+
+  /** Night k (0-based): slice k+1 of every family. Day families: one
+    * dynamic partition overwrite each (replay-idempotent). User family:
+    * exactly-once via the version name; a replayed night logs and skips.
     *
     * Split into the two delivery-contract halves so the crash-soak specs
     * can construct a night killed between them (VERDICT r13 next #3) —
@@ -288,29 +266,16 @@ object IncrementalNightlyRunner {
     nightUserFold(spark, src, stateRoot, days, k)
   }
 
-  /** The day-grain half of `night`: one dynamic partition overwrite per
-    * family. `limit` bounds how many families run — the crash-soak spec's
-    * "killed between partition writes" state; replay-idempotent, so a
-    * retry of the full night converges from any prefix. */
+  /** The day-grain half of `night`. `limit` bounds how many families run —
+    * the crash-soak spec's "killed between partition writes" state;
+    * replay-idempotent, so a retry of the full night converges from any
+    * prefix. */
   private[graft] def nightDayFamilies(spark: SparkSession, src: Sources,
                                       stateRoot: String, days: Int, k: Int,
                                       limit: Int = Int.MaxValue): Unit = {
     require(k >= 0 && k < days, s"night $k outside ladder of $days")
-    val isLast = k == days - 1
-    families.take(limit).foreach { f =>
-      val day = AsOf.date(f.anchor).minusDays(days.toLong).plusDays(k.toLong)
-      // day k — the last night also folds the anchor-day-and-later tail
-      // (the batch jobs' scans have no upper bound), as one pushable range
-      val (slice, obs) = daySliceGuarded(f.src(src), f.tsCol, day,
-        Some(day.plusDays(1)),
-        if (isLast) Some(AsOf.date(f.anchor)) else None)
-      MergeByKey.overwritePartitions(
-        f.summarize(slice), s"$stateRoot/${f.name}", f.partCol)
-      // nightly p_day re-validation rider: the write above already scanned
-      // the day's partitions; fail the night loud if any scanned row
-      // violates the event-day convention (see daySliceGuarded)
-      verifyPdayGuard(f.name, f.tsCol, obs)
-    }
+    DayLadder.families.take(limit)
+      .foreach(writeDaySlice(src, stateRoot, days, _, k + 1))
   }
 
   /** The user-family half of `night`: the additive fold, committed behind
@@ -319,88 +284,38 @@ object IncrementalNightlyRunner {
                                    stateRoot: String, days: Int,
                                    k: Int): Unit = {
     require(k >= 0 && k < days, s"night $k outside ladder of $days")
-    val isLast = k == days - 1
-    val uRoot = userStateRoot(stateRoot)
-    val day = AsOf.date(AsOf.orders).minusDays(days.toLong).plusDays(k.toLong)
-    val marker = s"v$day${if (isLast) "-final" else ""}"
-    // applied-day check against the full switchover HISTORY, not just the
-    // live pointer: a retry of an EARLIER night after later nights ran
-    // would see a newer pointer and re-apply (double-count) if only the
-    // current name were checked (r13 self-review finding)
-    val applied = MigrationRunner.currentVersion(spark, uRoot).contains(marker) ||
-      MigrationRunner.versionHistory(spark, uRoot).contains(marker)
-    if (applied) {
-      System.err.println(s"[nightly] user-state day $day already applied — skipping (exactly-once)")
-    } else {
-      // GAP guard (r13 ADVICE): the marker prevents RE-application but a
-      // scheduler that skipped a failed night and ran the next would fold
-      // day k onto a state missing day k−1 — permanently under-counting,
-      // with the eventual "-final" marker making it look complete. Require
-      // the PREDECESSOR marker ("pre" for night 0, v<day−1> otherwise) in
-      // the pointer-or-history, the same surface the replay check trusts.
-      // (Night k−1 is never the last night, so its marker is unsuffixed.)
-      val predecessor = if (k == 0) "pre" else s"v${day.minusDays(1L)}"
-      val predApplied =
-        MigrationRunner.currentVersion(spark, uRoot).contains(predecessor) ||
-          MigrationRunner.versionHistory(spark, uRoot).contains(predecessor)
-      require(predApplied,
-        s"night $day cannot fold: predecessor user-state '$predecessor' " +
-          "was never applied (a skipped night would silently under-count " +
-          "the additive totals forever). Re-run the missing night first — " +
-          "replays are exactly-once, so re-running the whole ladder is safe.")
-      val (slice, obs) = daySliceGuarded(src.transactions, "created_at", day,
-        Some(day.plusDays(1)),
-        if (isLast) Some(AsOf.date(AsOf.orders)) else None)
-      // persist the fold for migrate's lifetime: its validation pass,
-      // copy, and symmetric reconciliation evaluate the source ~4× —
-      // without this each evaluation re-scans the previous state AND the
-      // day's delta (state-sized × 4 instead of × 1 + cached reads)
-      val folded = IncrementalUserFeatures.applyDelta(
-        MigrationRunner.current(spark, uRoot),
-        IncrementalUserFeatures.summarize(slice)).persist()
-      try {
-        val report = MigrationRunner.migrate(spark, folded, uRoot, marker,
-          IncrementalUserFeatures.grain)
-        require(report.switched, s"user-state night $day failed: $report")
-        // nightly p_day rider on the fold's own day slice (free: migrate's
-        // validation pass already scanned it). Checked only AFTER the
-        // switchover: a violation aborts the run rather than the data —
-        // the day families above failed the night first if the landing
-        // itself is bad, since they scan the same day earlier.
-        verifyPdayGuard("user_state", "created_at", obs)
-      } finally folded.unpersist()
-    }
+    userStep(spark, src, stateRoot, days, k + 1)
   }
-
-  private def readState(spark: SparkSession, stateRoot: String,
-                        name: String): DataFrame =
-    spark.read.parquet(s"$stateRoot/$name")
 
   /** The three feature frames off the PERSISTED states — what the nightly
     * publish step hands to the gates/store/export (output-identical to the
     * full jobs once `days` nights have run; spec-pinned). */
   def features(spark: SparkSession, src: Sources, stateRoot: String)
       : (DataFrame, DataFrame, DataFrame) = {
+    def state(f: DayLadder.Family) = spark.read.parquet(s"$stateRoot/${f.name}")
     val uf = IncrementalUserFeatures.featuresFromState(
       MigrationRunner.current(spark, userStateRoot(stateRoot)),
       src.users, AsOf.orders)
     val tf = IncrementalTransactionFeatures.featuresFromState(
-      readState(spark, stateRoot, "tx_state"), src.users, AsOf.orders)
+      state(DayLadder.transactions), src.users, AsOf.orders)
     val rf = IncrementalRiskFeatures.featuresFromState(
       IncrementalRiskFeatures.States(
-        payments = readState(spark, stateRoot, "rf_pay_state"),
-        logins = readState(spark, stateRoot, "rf_login_state"),
-        alerts = readState(spark, stateRoot, "rf_alert_state"),
-        credit = readState(spark, stateRoot, "rf_credit_state"),
-        scores = readState(spark, stateRoot, "rf_score_state")),
+        payments = state(DayLadder.payments),
+        logins = state(DayLadder.logins),
+        alerts = state(DayLadder.alerts),
+        credit = state(DayLadder.credit),
+        scores = state(DayLadder.scores)),
       src.users, AsOf.lineitem, AsOf.events)
     (uf, tf, rf)
   }
 
   /** End-to-end incremental run for a fresh state root: bootstrap, the
     * `days` nights, then the same gate → store-swap → export tail as the
-    * full-recompute DailyBatchRunner.run (shared publish). This is what
-    * DailyBatchRunner.run(incremental = true) delegates to. */
+    * full-recompute DailyBatchRunner.run (shared publish). Output-identical
+    * to the full path by the families' ladder ≡ recompute contracts
+    * (spec-pinned); the difference is the NIGHTLY READ BUDGET — day-pruned
+    * slice scans plus summary-row re-aggregation instead of 31/91-day (or
+    * unbounded, for user features) raw rescans. */
   def runIncremental(spark: SparkSession, src: Sources, stateRoot: String,
                      outputPath: String, floors: DailyBatchRunner.Thresholds,
                      days: Int = 3,

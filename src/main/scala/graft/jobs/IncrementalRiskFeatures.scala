@@ -1,13 +1,13 @@
 package graft.jobs
 
-import java.time.{Instant, LocalDate}
-import java.time.temporal.ChronoUnit
+import java.time.Instant
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.core.{AsOf, Roles}
 import graft.ops.Ops._
+import DayLadder.{dayLit, midnight}
 
 /** Incremental maintenance of RiskFeaturesJob — the THIRD and widest
   * incremental family: the 5-way fan (sql/risk_features.sql:1-110). The
@@ -47,11 +47,9 @@ import graft.ops.Ops._
   *     (ts, id) total order; ids are unique, so the election is
   *     deterministic without a tie-break).
   *
-  * EXACTNESS: both anchors are midnight UTC (checked, not assumed), so
-  * every `ts >= anchor − Nd` timestamp cut is EXACTLY a day-grain cut and
-  * the bucket predicates are the identical predicates. The ladder is
-  * pinned cell-exact against the full recompute (IncrementalFeaturesSpec)
-  * and against DuckDB's full recompute as the risk_features_incremental
+  * SLICING and EXACTNESS: DayLadder cuts each source on its own clock and
+  * checks both anchors are midnight UTC. The ladder is pinned cell-exact
+  * against the full recompute (IncrementalFeaturesSpec) and against DuckDB's full recompute as the risk_features_incremental
   * oracle query — the same SQL as risk_features, because incremental ≡
   * full IS the claim.
   *
@@ -64,14 +62,6 @@ object IncrementalRiskFeatures {
   val paymentGrain: Seq[String] = Seq("user_id", "created_day", "payment_day")
   val loginGrain: Seq[String]   = Seq("user_id", "day", "kind", "entity")
   val dayGrain: Seq[String]     = Seq("user_id", "day")
-
-  private def dayLit(d: LocalDate) = lit(java.sql.Date.valueOf(d))
-
-  private def midnight(asOf: Instant): LocalDate = {
-    require(asOf.truncatedTo(ChronoUnit.DAYS) == asOf,
-      s"incremental day-grain state needs a midnight-aligned anchor: $asOf")
-    AsOf.date(asOf)
-  }
 
   // ---- per-CTE summarizers (ANY slice → state grain; slice boundaries
   // must fall on the slicing column's day boundaries) ----
@@ -118,13 +108,6 @@ object IncrementalRiskFeatures {
         struct(col("computed_at"), col("score_id"))).as("__top"))
       .select(col("user_id"), col("day"), col("__top.computed_at"),
         col("__top.score_id"), col("__top.risk_score"))
-
-  /** Fold a day delta into a state: day-in-grain makes this a replace of
-    * the delta's own buckets — replays idempotent, same discipline as
-    * IncrementalTransactionFeatures.applyDelta. */
-  def applyDelta(state: DataFrame, delta: DataFrame,
-                 grain: Seq[String]): DataFrame =
-    graft.sinks.MergeByKey.merge(state, delta, grain)
 
   /** All five state tables, as one bundle. */
   final case class States(payments: DataFrame, logins: DataFrame,
@@ -193,70 +176,24 @@ object IncrementalRiskFeatures {
       st.alerts.filter(col("day") >= dayLit(dE.minusDays(1)))
         .select("user_id"))
 
-    val asOfTs = to_timestamp(lit(AsOf.ts(asOfPay)))
-    active
-      .join(paymentHistory, Seq("user_id"), "left")
-      .join(deviceBehavior, Seq("user_id"), "left")
-      .join(velocityPatterns, Seq("user_id"), "left")
-      .join(creditInfo, Seq("user_id"), "left")
-      .join(latestScores, Seq("user_id"), "left")
-      .select(
-        col("user_id"),
-        orZeroD(col("credit_utilization_ratio")).as("credit_utilization_ratio"),
-        orZero(col("payment_delays_30d")).as("payment_delays_30d"),
-        orZero(col("payment_delays_90d")).as("payment_delays_90d"),
-        orZero(col("failed_payments_count")).as("failed_payments_count"),
-        orZero(col("device_changes_30d")).as("device_changes_30d"),
-        orZero(col("login_locations_30d")).as("login_locations_30d"),
-        orZero(col("velocity_alerts_30d")).as("velocity_alerts_30d"),
-        orZeroD(col("risk_score")).as("risk_score"),
-        asOfTs.as("created_at"),
-        asOfTs.as("updated_at"))
+    RiskFeaturesJob.assemble(active, Seq(paymentHistory, deviceBehavior,
+      velocityPatterns, creditInfo, latestScores), asOfPay)
   }
 
-  /** Backfill-then-step one source on its own clock: state < anchor−days,
-    * one delta per day (pushable day-range predicates), anchor-day tail
-    * (the batch job's scan has no upper bound). */
-  private def sliced(src: DataFrame, tsCol: String, anchor: LocalDate,
-                     days: Int, summarize: DataFrame => DataFrame,
-                     grain: Seq[String]): DataFrame = {
-    val cut = anchor.minusDays(days.toLong)
-    val base = summarize(src.filter(col(tsCol) < dayLit(cut)))
-    val stepped = (0 until days).foldLeft(base) { (st, i) =>
-      val d = cut.plusDays(i.toLong)
-      applyDelta(st, summarize(src.filter(
-        col(tsCol) >= dayLit(d) && col(tsCol) < dayLit(d.plusDays(1)))), grain)
-    }
-    applyDelta(stepped, summarize(src.filter(col(tsCol) >= dayLit(anchor))),
-      grain)
-  }
-
-  /** The 3-day ladder the oracle adjudicates: five per-source ladders —
+  /** The ladder the oracle adjudicates: the five DayLadder families —
     * payments on the lineitem clock, the four event roles on the events
-    * clock — then features from state. States ride FeatureCache at the
-    * default anchors (the stored-table posture; featuresFromState consumes
-    * the payment and alert states twice — stats + the active set — and the
-    * cache shares one evaluation; ScanAuditSpec pins the warm budget). */
+    * clock — folded in session, then features from state. */
   def ladder(spark: SparkSession, dir: String, days: Int = 3,
              asOfPay: Instant = AsOf.lineitem,
              asOfEv: Instant = AsOf.events): DataFrame = {
-    val dP = midnight(asOfPay)
-    val dE = midnight(asOfEv)
-    def state(key: String, build: => DataFrame): DataFrame =
-      if (asOfPay == AsOf.lineitem && asOfEv == AsOf.events)
-        graft.core.FeatureCache.cached(spark, dir, s"${key}_d$days")(build)
-      else build
+    def state(f: DayLadder.Family, asOf: Instant) =
+      f.ladder(spark, dir, asOf, days)
     val st = States(
-      payments = state("inc_rf_pay", sliced(Roles.payments(spark, dir),
-        "created_at", dP, days, summarizePayments, paymentGrain)),
-      logins = state("inc_rf_login", sliced(Roles.userLogins(spark, dir),
-        "created_at", dE, days, summarizeLogins, loginGrain)),
-      alerts = state("inc_rf_alert", sliced(Roles.velocityAlerts(spark, dir),
-        "created_at", dE, days, summarizeAlerts, dayGrain)),
-      credit = state("inc_rf_credit", sliced(Roles.creditReports(spark, dir),
-        "report_date", dE, days, summarizeCredit, dayGrain)),
-      scores = state("inc_rf_score", sliced(Roles.riskScores(spark, dir),
-        "computed_at", dE, days, summarizeScores, dayGrain)))
+      payments = state(DayLadder.payments, asOfPay),
+      logins = state(DayLadder.logins, asOfEv),
+      alerts = state(DayLadder.alerts, asOfEv),
+      credit = state(DayLadder.credit, asOfEv),
+      scores = state(DayLadder.scores, asOfEv))
     featuresFromState(st, Roles.usersCached(spark, dir), asOfPay, asOfEv)
   }
 }

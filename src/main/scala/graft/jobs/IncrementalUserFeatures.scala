@@ -1,7 +1,6 @@
 package graft.jobs
 
 import java.time.Instant
-import java.time.temporal.ChronoUnit
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -30,8 +29,8 @@ import graft.ops.Ops._
   * deltas applied exactly once (day-partitioned delta paths make applied
   * days auditable); IncrementalFeaturesSpec pins the non-idempotence
   * explicitly so the contract difference from the day-bucket family stays
-  * visible. Slice boundaries must fall on day boundaries (midnight-UTC
-  * anchors — checked) so grain cells never straddle two deltas.
+  * visible. DayLadder owns the day slices and their midnight-anchor check,
+  * so grain cells never straddle two deltas.
   *
   * SCALE: the daily job reads one day of transactions plus the state
   * table (≈ users × distinct payment methods — a small multiple of the
@@ -42,8 +41,6 @@ import graft.ops.Ops._
 object IncrementalUserFeatures {
 
   val grain: Seq[String] = Seq("user_id", "payment_method")
-
-  private def dayLit(d: java.time.LocalDate) = lit(java.sql.Date.valueOf(d))
 
   /** Running totals for ANY slice of completed transactions. `cnt_rows`
     * and `cnt_orders` are tracked separately: total_orders is
@@ -58,12 +55,6 @@ object IncrementalUserFeatures {
         count(col("order_id")).as("cnt_orders"),
         sum(col("amount").cast("decimal(12,2)")).as("amount_sum"),
         min(col("created_at")).as("first_order_date"))
-
-  /** One calendar day's delta (pushable range predicate). */
-  def dailyDelta(tx: DataFrame, day: java.time.LocalDate): DataFrame =
-    summarize(tx.filter(
-      col("created_at") >= dayLit(day) &&
-      col("created_at") < dayLit(day.plusDays(1))))
 
   /** ADDITIVE fold — counts and sums add, mins min. Exactly-once
     * application is the caller's contract (see scaladoc). */
@@ -94,54 +85,17 @@ object IncrementalUserFeatures {
       .select(col("user_id"),
         col("payment_method").as("preferred_payment_method"))
 
-    val base = users.filter(col("recently_updated"))
-    val asOfTs = to_timestamp(lit(AsOf.ts(asOf)))
-    base
-      .join(stats, Seq("user_id"), "left")
-      .join(mode, Seq("user_id"), "left")
-      .filter(col("user_id").isNotNull)
-      .select(
-        col("user_id"),
-        col("age"),
-        col("location_country"),
-        col("location_city"),
-        orZero(col("total_orders")).as("total_orders"),
-        orZeroD(col("avg_order_value")).as("avg_order_value"),
-        when(col("first_order_date").isNotNull,
-          datediff(to_date(asOfTs), to_date(col("first_order_date"))))
-          .cast("int").as("days_since_first_order"),
-        col("preferred_payment_method"),
-        col("account_verified"),
-        asOfTs.as("created_at"),
-        asOfTs.as("updated_at"))
+    UserFeaturesJob.assemble(users, stats, mode, asOf)
   }
 
-  /** 3-day ladder (same driver-contract shape as the transaction family):
-    * backfill < anchor−days, fold each day once, fold the anchor-day
-    * tail, read features. */
+  /** The ladder (same driver-contract shape as the transaction family):
+    * DayLadder's slices of the transaction log folded additively, then
+    * features read off the totals. */
   def ladder(spark: SparkSession, dir: String, days: Int = 3,
              asOf: Instant = AsOf.orders): DataFrame = {
-    require(asOf.truncatedTo(ChronoUnit.DAYS) == asOf,
-      s"day-sliced deltas need a midnight-aligned anchor: $asOf")
-    // state on FeatureCache, like the transaction family: the stored-table
-    // posture, and featuresFromState's stats + mode consumers share one
-    // slice-tree evaluation (ScanAuditSpec budget pin)
-    // cache key carries `days` but not `asOf` — cache only the default
-    // anchor (the driver-contract shape), like every feature job's apply
-    def buildState = {
-      val tx = Roles.transactions(spark, dir)
-      val d = AsOf.date(asOf)
-      val cut = d.minusDays(days.toLong)
-      val base = summarize(tx.filter(col("created_at") < dayLit(cut)))
-      val stepped = (0 until days).foldLeft(base) { (st, i) =>
-        applyDelta(st, dailyDelta(tx, cut.plusDays(i.toLong)))
-      }
-      applyDelta(stepped, summarize(tx.filter(col("created_at") >= dayLit(d))))
-    }
-    val state =
-      if (asOf == AsOf.orders)
-        graft.core.FeatureCache.cached(spark, dir, s"inc_uf_state_d$days")(buildState)
-      else buildState
+    val state = DayLadder.state(spark, dir, "inc_uf_state", days,
+      asOf == AsOf.orders)(DayLadder.fold(Roles.transactions(spark, dir),
+        "created_at", asOf, days, summarize, applyDelta))
     featuresFromState(state, Roles.usersCached(spark, dir), asOf)
   }
 }

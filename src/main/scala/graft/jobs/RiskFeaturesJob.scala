@@ -89,13 +89,17 @@ object RiskFeaturesJob {
       payments.filter(col("created_at") >= tsLit(asOfPay, 1)).select("user_id"),
       alerts.filter(col("created_at") >= tsLit(asOfEv, 1)).select("user_id"))
 
+    assemble(active, Seq(paymentHistory, deviceBehavior, velocityPatterns,
+      creditInfo, latestScores), asOfPay)
+  }
+
+  /** The output contract, shared with IncrementalRiskFeatures: the active
+    * set left-joined to the five per-user CTEs in order, DDL defaults,
+    * asOf stamps on the payments clock. */
+  private[jobs] def assemble(active: DataFrame, ctes: Seq[DataFrame],
+                             asOfPay: Instant): DataFrame = {
     val asOfTs = to_timestamp(lit(AsOf.ts(asOfPay)))
-    active
-      .join(paymentHistory, Seq("user_id"), "left")
-      .join(deviceBehavior, Seq("user_id"), "left")
-      .join(velocityPatterns, Seq("user_id"), "left")
-      .join(creditInfo, Seq("user_id"), "left")
-      .join(latestScores, Seq("user_id"), "left")
+    ctes.foldLeft(active)(_.join(_, Seq("user_id"), "left"))
       .select(
         col("user_id"),
         orZeroD(col("credit_utilization_ratio")).as("credit_utilization_ratio"),

@@ -60,6 +60,14 @@ object TransactionFeaturesJob {
       users.filter(col("recently_updated")).select("user_id"),
       scanned.filter(in30).select("user_id"))
 
+    assemble(active, stats, asOf)
+  }
+
+  /** The output contract, shared with IncrementalTransactionFeatures:
+    * the active set left-joined to the per-user stats, DDL defaults for
+    * users without transactions, asOf stamps. */
+  private[jobs] def assemble(active: DataFrame, stats: DataFrame,
+                             asOf: Instant): DataFrame = {
     val asOfTs = to_timestamp(lit(AsOf.ts(asOf)))
     active.join(stats, Seq("user_id"), "left").select(
       col("user_id"),

@@ -41,9 +41,16 @@ object UserFeaturesJob {
     val mode = deterministicMode(completed, "user_id", "payment_method")
       .withColumnRenamed("payment_method", "preferred_payment_method")
 
-    // user_base_info CTE (sql/user_features.sql:16-26)
-    val base = users.filter(col("recently_updated"))
+    assemble(users, stats, mode, asOf)
+  }
 
+  /** The output contract, shared with IncrementalUserFeatures: the
+    * recently-updated user base (user_base_info CTE, sql/user_features.sql:
+    * 16-26) left-joined to the order stats and the preferred payment
+    * method, DDL defaults, days since first order, asOf stamps. */
+  private[jobs] def assemble(users: DataFrame, stats: DataFrame,
+                             mode: DataFrame, asOf: Instant): DataFrame = {
+    val base = users.filter(col("recently_updated"))
     val asOfTs = to_timestamp(lit(AsOf.ts(asOf)))
     base
       .join(stats, Seq("user_id"), "left")

@@ -287,44 +287,23 @@ class CompactionSpec extends SparkSpec {
     val expect = Compaction.readPointered(spark, base, "partition_date")
       .filter(col("partition_date") === "2024-01-02").count()
 
-    @volatile var stop = false
-    @volatile var failure: Option[String] = None
-    @volatile var reads = 0
-    val reader = new Thread(() => {
-      try {
-        while (!stop) {
-          val n = Compaction.readPointered(spark, base, "partition_date")
-            .filter(col("partition_date") === "2024-01-02").count()
-          if (n != expect) {
-            failure = Some(s"racing reader saw $n rows, expected $expect")
-            stop = true
-          }
-          reads += 1
-        }
-      } catch {
-        case e: Throwable =>
-          failure = Some(s"racing reader threw: ${e.getMessage}")
-      }
-    })
-    reader.start()
-    try {
-      // three rounds: re-fragment a partition (publish an 8-file version),
-      // then compact it back — each round swings the pointer twice
-      (0 until 3).foreach { round =>
-        val store = s"$base/partition_date=2024-01-02"
-        val name = graft.jobs.MigrationRunner
-          .freshVersionName(spark, store, s"refrag-$round")
-        graft.jobs.MigrationRunner.current(spark, store).repartition(8)
-          .write.parquet(s"$store/$name")
-        graft.jobs.MigrationRunner.publish(spark, store, name)
-        val r = Compaction.compactPointered(spark, base, "partition_date",
-          1L << 30)
-        assert(r.exists(_.value == "2024-01-02"), s"round $round: $r")
-      }
-    } finally {
-      stop = true
-      reader.join(30000)
+    val reader = new RacingReader(() =>
+      Compaction.readPointered(spark, base, "partition_date")
+        .filter(col("partition_date") === "2024-01-02").count(), expect)
+    // three rounds: re-fragment a partition (publish an 8-file version),
+    // then compact it back — each round swings the pointer twice
+    reader.race(3) { round =>
+      val store = s"$base/partition_date=2024-01-02"
+      val name = graft.jobs.MigrationRunner
+        .freshVersionName(spark, store, s"refrag-$round")
+      graft.jobs.MigrationRunner.current(spark, store).repartition(8)
+        .write.parquet(s"$store/$name")
+      graft.jobs.MigrationRunner.publish(spark, store, name)
+      val r = Compaction.compactPointered(spark, base, "partition_date",
+        1L << 30)
+      assert(r.exists(_.value == "2024-01-02"), s"round $round: $r")
     }
+    val (failure, reads) = (reader.failure, reader.reads)
     assert(failure.isEmpty, failure.getOrElse(""))
     assert(reads >= 3, s"reader only completed $reads reads — race not exercised")
   }
@@ -585,35 +564,14 @@ class CompactionSpec extends SparkSpec {
     Compaction.initPointered(spark, flat, base, "partition_date")
     val land = (0 until 50).map(i => (i.toLong, s"new-$i")).toDF("id", "payload")
 
-    @volatile var stop = false
-    @volatile var failure: Option[String] = None
-    @volatile var reads = 0
-    val reader = new Thread(() => {
-      try {
-        while (!stop) {
-          val n = Compaction.readPointered(spark, base, "partition_date")
-            .filter(col("partition_date") === "2024-01-02").count()
-          if (n != 100L) {
-            failure = Some(s"racing reader saw $n rows, expected 100")
-            stop = true
-          }
-          reads += 1
-        }
-      } catch {
-        case e: Throwable =>
-          failure = Some(s"racing reader threw: ${e.getMessage}")
-      }
-    })
-    reader.start()
-    try {
-      (1 to 4).foreach { round =>
-        Compaction.landPointered(spark, land, base, "partition_date",
-          s"2024-02-0$round")
-      }
-    } finally {
-      stop = true
-      reader.join(30000)
+    val reader = new RacingReader(() =>
+      Compaction.readPointered(spark, base, "partition_date")
+        .filter(col("partition_date") === "2024-01-02").count(), 100L)
+    reader.race(4) { i =>
+      Compaction.landPointered(spark, land, base, "partition_date",
+        s"2024-02-0${i + 1}")
     }
+    val (failure, reads) = (reader.failure, reader.reads)
     assert(failure.isEmpty, failure.getOrElse(""))
     assert(reads >= 3, s"reader only completed $reads reads — race not exercised")
     assert(Compaction.readPointered(spark, base, "partition_date")
@@ -632,42 +590,22 @@ class CompactionSpec extends SparkSpec {
     import spark.implicits._
     val land = (0 until 50).map(i => (i.toLong, s"old-$i")).toDF("id", "payload")
 
-    @volatile var stop = false
-    @volatile var failure: Option[String] = None
-    @volatile var reads = 0
-    val reader = new Thread(() => {
-      try {
-        while (!stop) {
-          val n = Compaction.readPointered(spark, base, "partition_date")
-            .filter(col("partition_date") === "2024-01-03").count()
-          if (n != 100L) {
-            failure = Some(s"racing reader saw $n rows, expected 100")
-            stop = true
-          }
-          reads += 1
-        }
-      } catch {
-        case e: Throwable =>
-          failure = Some(s"racing reader threw: ${e.getMessage}")
-      }
-    })
-    reader.start()
-    try {
-      (1 to 4).foreach { round =>
-        // land an already-expired day ATOMICALLY via the library's own
-        // hidden-build-then-rename path (a lander that builds in place
-        // would itself expose a CURRENT-less store to the reader)
-        val value = s"2023-12-0$round"
-        Compaction.landPointered(spark, land, base, "partition_date", value)
-        val expired = Compaction.expirePointered(spark, base,
-          "partition_date", java.time.LocalDate.parse("2024-01-05"),
-          retentionDays = 10) // cutoff 2023-12-26: only the landed day goes
-        assert(expired == Seq(value), s"round $round: $expired")
-      }
-    } finally {
-      stop = true
-      reader.join(30000)
+    val reader = new RacingReader(() =>
+      Compaction.readPointered(spark, base, "partition_date")
+        .filter(col("partition_date") === "2024-01-03").count(), 100L)
+    reader.race(4) { i =>
+      val round = i + 1
+      // land an already-expired day ATOMICALLY via the library's own
+      // hidden-build-then-rename path (a lander that builds in place
+      // would itself expose a CURRENT-less store to the reader)
+      val value = s"2023-12-0$round"
+      Compaction.landPointered(spark, land, base, "partition_date", value)
+      val expired = Compaction.expirePointered(spark, base,
+        "partition_date", java.time.LocalDate.parse("2024-01-05"),
+        retentionDays = 10) // cutoff 2023-12-26: only the landed day goes
+      assert(expired == Seq(value), s"round $round: $expired")
     }
+    val (failure, reads) = (reader.failure, reader.reads)
     assert(failure.isEmpty, failure.getOrElse(""))
     assert(reads >= 3, s"reader only completed $reads reads — race not exercised")
     // survivors fully intact after the sweeps

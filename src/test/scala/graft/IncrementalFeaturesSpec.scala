@@ -3,13 +3,19 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.core.{AsOf, Roles}
-import graft.jobs.{IncrementalTransactionFeatures => Inc, TransactionFeaturesJob}
+import graft.jobs.{DayLadder, IncrementalTransactionFeatures => Inc,
+  TransactionFeaturesJob}
+import graft.sinks.MergeByKey
 
 /** Pins for day-bucket incremental feature maintenance: the incremental
   * path must be CELL-EXACT against the full recompute (the merge algebra's
   * whole claim), replays must be idempotent, and the midnight-anchor
   * precondition must fail loud. */
 class IncrementalFeaturesSpec extends SparkSpec {
+
+  /** The one-day slice [d, d+1). */
+  private def day(d: java.time.LocalDate) =
+    DayLadder.Slice(Some(d), Some(d.plusDays(1)))
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
     val cols = df.columns.sorted
@@ -34,8 +40,9 @@ class IncrementalFeaturesSpec extends SparkSpec {
     val d = AsOf.date(AsOf.orders).minusDays(2)
     val base = Inc.summarize(
       tx.filter(col("created_at") < lit(java.sql.Date.valueOf(d))))
-    val once = Inc.applyDelta(base, Inc.dailyDelta(tx, d))
-    val twice = Inc.applyDelta(once, Inc.dailyDelta(tx, d))
+    val delta = Inc.summarize(day(d).of(tx, "created_at"))
+    val once = MergeByKey.merge(base, delta, Inc.grain)
+    val twice = MergeByKey.merge(once, delta, Inc.grain)
     assert(rows(twice) == rows(once),
       "replaying the same day must leave the state unchanged")
   }
@@ -60,7 +67,8 @@ class IncrementalFeaturesSpec extends SparkSpec {
     // offset guessed empty at sf0.001
     val d = tx.filter(col("status").isin("O", "P"))
       .agg(max(to_date(col("created_at")))).head.getDate(0).toLocalDate
-    val delta = jobs.IncrementalUserFeatures.dailyDelta(tx, d)
+    val delta = jobs.IncrementalUserFeatures.summarize(
+      day(d).of(tx, "created_at"))
     assert(delta.count() > 0)
     val base = jobs.IncrementalUserFeatures.summarize(
       tx.filter(col("created_at") < lit(java.sql.Date.valueOf(d))))
@@ -94,7 +102,6 @@ class IncrementalFeaturesSpec extends SparkSpec {
     import jobs.{IncrementalRiskFeatures => R}
     val d = AsOf.date(AsOf.events).minusDays(2)
     val dayLit = lit(java.sql.Date.valueOf(d))
-    val nextLit = lit(java.sql.Date.valueOf(d.plusDays(1)))
     for ((src, ts, summ, grain) <- Seq(
         (Roles.userLogins(spark, sf0001), "created_at",
           R.summarizeLogins _, R.loginGrain),
@@ -105,9 +112,9 @@ class IncrementalFeaturesSpec extends SparkSpec {
         (Roles.riskScores(spark, sf0001), "computed_at",
           R.summarizeScores _, R.dayGrain))) {
       val base = summ(src.filter(col(ts) < dayLit))
-      val delta = summ(src.filter(col(ts) >= dayLit && col(ts) < nextLit))
-      val once = R.applyDelta(base, delta, grain)
-      val twice = R.applyDelta(once, delta, grain)
+      val delta = summ(day(d).of(src, ts))
+      val once = MergeByKey.merge(base, delta, grain)
+      val twice = MergeByKey.merge(once, delta, grain)
       assert(rows(twice) == rows(once),
         s"replaying a $grain day bucket must leave the state unchanged")
     }
@@ -127,12 +134,17 @@ class IncrementalFeaturesSpec extends SparkSpec {
   }
 
   test("non-midnight anchors are rejected (day-grain exactness precondition)") {
-    val e = intercept[IllegalArgumentException] {
-      Inc.featuresFromState(
-        Inc.summarize(Roles.transactions(spark, sf0001)),
-        Roles.users(spark, sf0001),
-        java.time.Instant.parse("2001-08-02T13:30:00Z"))
+    val t = java.time.Instant.parse("2001-08-02T13:30:00Z")
+    for (attempt <- Seq[() => Any](
+        () => Inc.featuresFromState(
+          Inc.summarize(Roles.transactions(spark, sf0001)),
+          Roles.users(spark, sf0001), t),
+        () => Inc.ladder(spark, sf0001, asOf = t),
+        () => jobs.IncrementalUserFeatures.ladder(spark, sf0001, asOf = t),
+        () => jobs.IncrementalRiskFeatures.ladder(spark, sf0001,
+          asOfPay = t, asOfEv = t))) {
+      val e = intercept[IllegalArgumentException](attempt())
+      assert(e.getMessage.contains("midnight"))
     }
-    assert(e.getMessage.contains("midnight"))
   }
 }

@@ -5,8 +5,9 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.core.{AsOf, Roles}
-import graft.jobs.{DailyBatchRunner, IncrementalNightlyRunner => Nightly,
-  MigrationRunner, RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
+import graft.jobs.{DailyBatchRunner, DayLadder, IncrementalNightlyRunner => Nightly,
+  IncrementalUserFeatures, MigrationRunner, RiskFeaturesJob,
+  TransactionFeaturesJob, UserFeaturesJob}
 
 /** The incremental families as the persisted nightly path: states
   * round-trip through parquet between nights (not FeatureCache), and the
@@ -32,9 +33,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
     val out = freshDir("nightly-out")
     val src = Nightly.Sources.fromDir(spark, sf0001)
 
-    val res = DailyBatchRunner.run(spark, sf0001, out,
-      DailyBatchRunner.Thresholds(1, 1, 1),
-      incremental = true, stateRoot = stateRoot)
+    val res = Nightly.runIncremental(spark,
+      Nightly.Sources.fromDir(spark, sf0001), stateRoot, out,
+      DailyBatchRunner.Thresholds(1, 1, 1))
     assert(res.userRows > 0 && res.transactionRows > 0 && res.riskRows > 0)
 
     val (uf, tf, rf) = Nightly.features(spark, src, stateRoot)
@@ -99,6 +100,24 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
     assert(rows(after3._1) == snap._1 && rows(after3._2) == snap._2 &&
       rows(after3._3) == snap._3,
       "features changed after a bootstrap re-run on a laddered state root")
+  }
+
+  test("persisted states after bootstrap + 3 nights == the in-session DayLadder folds, row for row") {
+    // features read only the 31/91-day windows; this pins every state row,
+    // including the backfill days older than any window
+    val stateRoot = freshDir("nightly-states")
+    val src = Nightly.Sources.fromDir(spark, sf0001)
+    val days = 3
+    Nightly.bootstrap(spark, src, stateRoot, days)
+    (0 until days).foreach(k => Nightly.night(spark, src, stateRoot, days, k))
+    for (f <- DayLadder.families)
+      assert(rows(spark.read.parquet(s"$stateRoot/${f.name}")) ==
+        rows(f.fold(f.pick(src), f.anchor, days)),
+        s"${f.name}: persisted state diverges from the in-session fold")
+    assert(rows(MigrationRunner.current(spark, s"$stateRoot/user_state")) ==
+      rows(DayLadder.fold(src.transactions, "created_at", AsOf.orders, days,
+        IncrementalUserFeatures.summarize, IncrementalUserFeatures.applyDelta)),
+      "user_state: persisted totals diverge from the in-session fold")
   }
 
   test("a night whose PREDECESSOR never applied fails loud (gap guard, r13 ADVICE)") {

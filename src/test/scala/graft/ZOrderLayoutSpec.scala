@@ -208,35 +208,14 @@ class ZOrderLayoutSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     df.limit(3).write.parquet(s"$storeRoot/z-99")
 
-    @volatile var stop = false
-    @volatile var failure: Option[String] = None
-    @volatile var reads = 0
-    val reader = new Thread(() => {
-      try {
-        while (!stop) {
-          val n = ZOrderLayout.readVersioned(spark, storeRoot)
-            .filter(col("user_id") === 7L).count()
-          if (n != expect) {
-            failure = Some(s"racing reader saw $n rows, expected $expect")
-            stop = true
-          }
-          reads += 1
-        }
-      } catch {
-        case e: Throwable =>
-          failure = Some(s"racing reader threw: ${e.getMessage}")
-      }
-    })
-    reader.start()
-    try {
-      (0 until 3).foreach { _ =>
-        ZOrderLayout.compactZOrderedVersioned(spark, storeRoot, "user_id",
-          "day", files = 4)
-      }
-    } finally {
-      stop = true
-      reader.join(30000)
+    val reader = new RacingReader(() =>
+      ZOrderLayout.readVersioned(spark, storeRoot)
+        .filter(col("user_id") === 7L).count(), expect)
+    reader.race(3) { _ =>
+      ZOrderLayout.compactZOrderedVersioned(spark, storeRoot, "user_id",
+        "day", files = 4)
     }
+    val (failure, reads) = (reader.failure, reader.reads)
     assert(failure.isEmpty, failure.getOrElse(""))
     assert(reads >= 3, s"reader only completed $reads reads — race not exercised")
     // the unpublished leftover is gone; retention keeps at most live + 2
