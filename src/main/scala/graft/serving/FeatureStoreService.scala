@@ -6,6 +6,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import graft.jobs.{RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
 
@@ -19,16 +20,19 @@ import graft.jobs.{RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
   *   - data_freshness_minutes is the age of the OLDEST group
   *     (store.py:189-201);
   *   - batch requests are capped at 100 (models.py:84-89) and served by ONE
-  *     fused probe job — the id list left-joins every requested group's
-  *     struct-packed rows in a single plan — not the reference's
+  *     probe execution — a union of the requested groups' filtered scans,
+  *     each row struct-packed into its group's column — not the reference's
   *     100-per-chunk sequential loop (database.py:120-134) nor one Spark
   *     job per group.
   *
   * TWO cache tiers, mirroring the reference's Redis-over-Postgres split:
   *
-  *   1. the GROUP tier — the three feature tables as `.cache()`d
-  *     DataFrames (the "database" a probe computes from), refreshed by
-  *     `invalidate`;
+  *   1. the GROUP tier — each feature table locally checkpointed to disk and
+  *     `.cache()`d over that checkpoint (the "database" a probe computes
+  *     from), refreshed by `invalidate`. The checkpoint cuts the build
+  *     lineage: a probe plans over a one-node RDD scan instead of the
+  *     feature build's parquet scans and exchanges, and an evicted in-memory
+  *     copy rebuilds from the disk blocks, not from the sources;
   *   2. the per-user ROW tier — a driver-side (user, group) → row memo,
   *     the actual Redis analogue (cache.py:85-165: per-user keys, TTL,
   *     per-user DELETE). A request whose users are all memoized costs no
@@ -37,21 +41,26 @@ import graft.jobs.{RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
   *     and `invalidateUser` evicts at the reference's granularity
   *     (cache.py:167-196) without touching anyone else's entries.
   *
-  * Lookups stay declarative (isin-filter → pushdown/broadcast); collection
-  * happens only at the API boundary, per looked-up id — never a full-table
-  * collect. Negative results memoize too (an absent user probes once, not
-  * per request); the row tier shares FeatureCache's TTL/clock so one knob
-  * governs both tiers' expiry.
+  * Lookups stay declarative (one `array_contains` filter per group scan,
+  * its ids a single array literal that generated code references rather
+  * than inlines, so every miss reuses the same compiled classes);
+  * collection happens only at the API boundary, per looked-up id — never a
+  * full-table collect. Negative results memoize too (an absent user probes
+  * once, not per request); the row tier shares FeatureCache's TTL/clock so
+  * one knob governs both tiers' expiry.
   */
 class FeatureStoreService(spark: SparkSession, dir: String) {
 
   val featureGroups: Seq[String] = Seq("user", "transaction", "risk")
 
+  /** One group-tier table: the job's rows, checkpointed to local disk (the
+    * eager job runs here, not in a probe) and cached in memory over the
+    * checkpoint — ext/Dedup's `localCheckpoint` idiom for cutting lineage. */
   private def computeGroup(g: String): DataFrame = (g match {
     case "user"        => UserFeaturesJob(spark, dir)
     case "transaction" => TransactionFeaturesJob(spark, dir)
     case "risk"        => RiskFeaturesJob(spark, dir)
-  }).cache()
+  }).localCheckpoint(true, StorageLevel.DISK_ONLY).cache()
 
   @volatile private var cache: Map[String, DataFrame] =
     featureGroups.map(g => g -> computeGroup(g)).toMap
@@ -61,14 +70,15 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
     * maxmemory-LRU posture at driver scale). */
   private val rowMemo = TrieMap.empty[(Long, String), (Option[Row], Long)]
 
-  /** Group-tier generation, bumped by `invalidate` under the service lock.
-    * A probe snapshots it before collecting and memoizes ONLY if it is
-    * unchanged (checked under the same lock): with concurrent dispatch, a
-    * probe that raced an invalidation may have read the PRE-invalidation
-    * tables, and inserting those rows after the row tier was cleared would
-    * serve stale features until TTL — the probe's own response still
-    * carries the old rows (indistinguishable from a request that completed
-    * just before the invalidation), but nothing stale outlives it. */
+  /** Group-tier generation, bumped by `invalidate` under the service lock
+    * together with the swap of the group tables. A probe snapshots it with
+    * the tables and memoizes ONLY if it is unchanged (checked under the same
+    * lock): with concurrent dispatch, a probe that raced an invalidation may
+    * have read the PRE-invalidation tables, and inserting those rows after
+    * the row tier was cleared would serve stale features until TTL — the
+    * probe's own response still carries the old rows (indistinguishable
+    * from a request that completed just before the invalidation), but
+    * nothing stale outlives it. The lock is never held across a Spark job. */
   @volatile private var groupGeneration: Long = 0L
 
   /** Cap on row-tier entries — a driver holds the hot working set, never
@@ -101,13 +111,14 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
 
   /** Batch lookup (store.py:80-141). Row-tier hits are served straight from
     * the memo; only ids with a missing/stale (user, group) entry go to the
-    * ONE fused probe — the (≤100-row) id frame left-joins each requested
-    * group's isin-filtered, struct-packed rows, so the whole miss set costs
-    * a single collect job regardless of how many groups were requested. */
+    * ONE fused probe: each requested group's scan keeps the rows whose
+    * user_id is in the miss-id array literal and packs them into that
+    * group's struct column (null in the other groups' columns); the scans'
+    * union is one collect — no join, no exchange — however many groups
+    * were requested, and the rows are assembled by (id, group). */
   def getBatch(userIds: Seq[Long], types: Seq[String], now: Instant): Seq[FeatureResult] = {
     require(userIds.size <= 100, "batch size cap is 100 (models.py:84-89)")
     val wanted = normalizeTypes(types)
-    import spark.implicits._
     val distinctIds = userIds.distinct
     // ONE read per (id, group): the fresh entries are snapshotted at miss
     // detection, so a concurrent invalidate between here and assembly can't
@@ -122,21 +133,21 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
       wanted.exists(g => !snap.contains((id, g))))
     val probed = scala.collection.mutable.Map.empty[(Long, String), Option[Row]]
     if (missIds.nonEmpty) {
-      val gen0 = groupGeneration
-      val ids = missIds.toDF("user_id")
-      val fused = wanted.foldLeft(ids) { (acc, g) =>
-        acc.join(
-          cache(g).filter(col("user_id").isin(missIds: _*))
-            .select(col("user_id"), struct(col("*")).as(s"__$g")),
-          Seq("user_id"), "left")
-      }
+      val (gen0, tables) = synchronized((groupGeneration, cache))
+      val ids = typedLit(missIds.toArray)
+      val fused = wanted.map { g =>
+        tables(g).filter(array_contains(ids, col("user_id")))
+          .select(col("user_id") +: wanted.map(h =>
+            (if (h == g) struct(col("*")) else lit(null).cast(tables(h).schema)).as(h)): _*)
+      }.reduce(_ union _)
       val born = tierNow()
+      for (id <- missIds; g <- wanted) probed((id, g)) = None
       fused.collect().foreach { r =>
-        val id = r.getAs[Long]("user_id")
-        wanted.foreach(g => probed((id, g)) = Option(r.getAs[Row](s"__$g")))
+        wanted.indices.filterNot(i => r.isNullAt(i + 1)).foreach(i =>
+          probed((r.getLong(0), wanted(i))) = Some(r.getStruct(i + 1)))
       }
       // memoize under the service lock so the generation check and the
-      // puts are atomic w.r.t. invalidate's bump-then-clear
+      // puts are atomic w.r.t. invalidate's swap-bump-clear
       synchronized {
         if (groupGeneration == gen0) {
           probed.foreach { case (k, v) => rowMemo.put(k, (v, born)) }
@@ -206,17 +217,33 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
   def invalidateUser(userId: Long): Unit =
     featureGroups.foreach(g => rowMemo.remove((userId, g)))
 
-  /** Group-tier invalidation (the streaming pipeline's ST3 target): drop
-    * and recompute the named groups — the Spark analogue of a table-wide
-    * refresh after an upstream batch lands. Row-tier entries derived from
-    * the dropped tables go with them. */
-  def invalidate(groups: Seq[String] = featureGroups): Unit = synchronized {
-    groupGeneration += 1 // before the clear: see the generation scaladoc
-    normalizeTypes(groups).foreach { g =>
-      cache(g).unpersist()
-      cache = cache.updated(g, computeGroup(g))
-      rowMemo.filterInPlace { case ((_, grp), _) => grp != g }
+  /** Serializes `invalidate`s; never taken by a read. */
+  private val invalidation = new Object
+
+  /** Group-tier invalidation (the streaming pipeline's ST3 target): rebuild
+    * the named groups from their sources — FeatureCache's persisted tables
+    * are dropped first, or the rebuild would re-read the old snapshot — the
+    * Spark analogue of a table-wide refresh after an upstream batch lands.
+    * The rebuild runs outside the service lock, so probes keep serving the
+    * old tables meanwhile; the swap, the generation bump and the eviction
+    * of the row-tier entries derived from the old tables happen together
+    * under it. The superseded in-memory copies are unpersisted; their
+    * checkpoint blocks are left to the ContextCleaner, so a probe still
+    * running over an old copy recomputes from them. */
+  def invalidate(groups: Seq[String] = featureGroups): Unit = invalidation.synchronized {
+    val named = normalizeTypes(groups)
+    val rebuilt = named.map { g =>
+      graft.core.FeatureCache.invalidate(spark, dir, s"${g}_features")
+      g -> computeGroup(g)
     }
-    countsMemo = None
+    val superseded = synchronized {
+      groupGeneration += 1 // with the clear: see the generation scaladoc
+      val old = named.map(cache)
+      cache = cache ++ rebuilt
+      rowMemo.filterInPlace { case ((_, g), _) => !named.contains(g) }
+      countsMemo = None
+      old
+    }
+    superseded.foreach(_.unpersist())
   }
 }

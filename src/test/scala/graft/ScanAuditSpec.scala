@@ -200,17 +200,17 @@ class ScanAuditSpec extends SparkSpec {
   test("serving fused probe: a warm batch miss reads only cached group rows, " +
       "never the source tables") {
     // the one query path with no records pin until r11 (VERDICT item 7):
-    // getBatch's fused probe isin-joins the three .cache()d feature-group
-    // tables — a regression that recomputes a group job per probe (cache
-    // lost, or a plan that bypasses InMemoryTableScan) would re-scan
-    // orders/customer/events on EVERY batch miss, invisible at test sizes,
-    // fatal under serving load at 100 TB
+    // getBatch's fused probe unions filtered scans of the three cached,
+    // checkpointed feature-group tables — a regression that recomputes a
+    // group job per probe (cache lost, or a plan that bypasses
+    // InMemoryTableScan) would re-scan orders/customer/events on EVERY
+    // batch miss, invisible at test sizes, fatal under serving load at
+    // 100 TB
     val svc = new serving.FeatureStoreService(spark, sf0001)
     val now = java.time.Instant.parse("2001-08-02T02:30:00Z")
     val groups = Seq("user", "transaction", "risk")
-    // first call materializes the group tier (or reuses an identical-plan
-    // cache another suite already built — Spark's CacheManager dedupes by
-    // plan, so no cold-vs-warm assertion survives suite ordering)
+    // first call materializes the group tier (the in-memory copies over
+    // the service's own checkpoints)
     svc.getBatch(Seq(1L, 2L, 3L), groups, now): Unit
     val groupRows = jobs.UserFeaturesJob(spark, sf0001).count() +
       jobs.TransactionFeaturesJob(spark, sf0001).count() +

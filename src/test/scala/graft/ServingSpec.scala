@@ -211,6 +211,79 @@ class ServingSpec extends SparkSpec {
     assert(execs == 1, s"expected one fused probe execution, saw $execs")
   }
 
+  test("a warm miss plans over the checkpointed group copies: no parquet scan, no exchange") {
+    val svc2 = new FeatureStoreService(spark, sf0001)
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // materialize the group tier
+    val starts = sqlExecutionStartsDuring {
+      svc2.getBatch(Seq(2L, 3L, 4L), svc2.featureGroups, now): Unit
+    }
+    assert(starts.size == 1, s"expected one probe execution, saw ${starts.size}")
+    def nodes(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[String] =
+      p.nodeName +: p.children.flatMap(nodes)
+    val names = nodes(starts.head.sparkPlanInfo)
+    // the plan info walks into each cached relation's own plan: over a
+    // `.cache()` of the build, that is the whole feature-build lineage
+    assert(!names.exists(_.startsWith("Scan parquet")),
+      s"the miss carries the build's parquet scans: ${names.mkString(", ")}")
+    assert(!names.exists(_.contains("Exchange")),
+      s"the miss plans an exchange: ${names.mkString(", ")}")
+  }
+
+  test("warm misses on fresh ids compile no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val svc2 = new FeatureStoreService(spark, sf0001)
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // materialize the group tier
+    svc2.getBatch(Seq(2L, 3L, 4L), svc2.featureGroups, now)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    svc2.getBatch(Seq(5L, 6L, 7L), svc2.featureGroups, now)
+    // ids inlined into generated code (isin) cost a compile per miss set
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "a miss on new ids compiled new classes")
+  }
+
+  test("invalidate(groups) recomputes from the sources, not FeatureCache's snapshot") {
+    import java.nio.file.{Files, Path}
+    import spark.implicits._
+    val copy = Files.createTempDirectory("serving-refresh")
+    Files.list(java.nio.file.Paths.get(sf0001))
+      .forEach(f => Files.copy(f, copy.resolve(f.getFileName)): Unit)
+    val dir = copy.toString
+    try {
+      val svc2 = new FeatureStoreService(spark, dir)
+      val uid = jobs.UserFeaturesJob(spark, dir).filter($"total_orders" > 0)
+        .select("user_id").as[Long].head()
+      def totalOrders(): Long =
+        svc2.getFeatures(uid, Seq("user"), now).features("user").getAs[Long]("total_orders")
+      assert(totalOrders() > 0)
+      // an upstream batch lands: the user's orders are gone from the source
+      val orders = copy.resolve("orders.parquet")
+      val staged = copy.resolve("orders.staged")
+      spark.read.parquet(orders.toString).filter($"o_custkey" =!= uid)
+        .write.parquet(staged.toString)
+      Files.delete(orders)
+      Files.move(staged, orders)
+      svc2.invalidate(Seq("user"))
+      assert(totalOrders() == 0L, "invalidate served the pre-refresh rows")
+    } finally {
+      Seq("user", "transaction", "risk").foreach(g =>
+        graft.core.FeatureCache.invalidate(spark, dir, s"${g}_features"))
+      Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    }
+  }
+
+  test("invalidate frees the superseded group copy's blocks") {
+    val svc2 = new FeatureStoreService(spark, sf0001)
+    def inMemory = spark.sparkContext.getRDDStorageInfo.filter(_.memSize > 0).map(_.id).toSet
+    val before = inMemory
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // materialize the group tier
+    val copies = inMemory -- before
+    assert(copies.size == 3, s"expected one in-memory copy per group, saw $copies")
+    svc2.invalidate(Seq("user"))
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now)
+    val gone = copies -- inMemory
+    assert(gone.size == 1, s"invalidate(user) should free exactly one copy, freed $gone")
+  }
+
   test("cache anchors consumers on the InMemoryRelation leaf; invalidate still frees the blocks") {
     import org.apache.spark.sql.execution.columnar.InMemoryRelation
     import spark.implicits._

@@ -32,20 +32,23 @@ trait SparkSpec extends AnyFunSuite {
     Iterator.iterate[Throwable](intercept[Exception](spark.sql(sql).collect()))(_.getCause)
       .takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
 
-  /** Count SQLExecutionStart events while `body` runs: drains the async
+  /** Count SQLExecutionStart events while `body` runs (see
+    * `sqlExecutionStartsDuring`). The shared idiom for "this path runs N
+    * Spark jobs" pins (fused serving probe, row-tier hits, TTL re-probes). */
+  def sqlExecutionsDuring(body: => Unit): Int = sqlExecutionStartsDuring(body).size
+
+  /** The SQLExecutionStart events posted while `body` runs: drains the async
     * listener bus first (prior work's events keep arriving after their
-    * actions return), then polls until the count stops moving. The shared
-    * idiom for "this path runs N Spark jobs" pins (fused serving probe,
-    * row-tier hits, TTL re-probes). */
-  def sqlExecutionsDuring(body: => Unit): Int = {
-    import java.util.concurrent.atomic.AtomicInteger
+    * actions return), then polls until the count stops moving. */
+  def sqlExecutionStartsDuring(body: => Unit)
+      : Seq[org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart] = {
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
     Thread.sleep(1000) // let prior events drain off the async bus
-    val execs = new AtomicInteger(0)
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerSQLExecutionStart]()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onOtherEvent(event: org.apache.spark.scheduler.SparkListenerEvent): Unit =
         event match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet(): Unit
+          case e: SparkListenerSQLExecutionStart => starts.add(e): Unit
           case _ => ()
         }
     }
@@ -54,10 +57,11 @@ trait SparkSpec extends AnyFunSuite {
       body
       val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
       var last = -1
-      while (System.nanoTime() < deadline && execs.get() != last) {
-        last = execs.get(); Thread.sleep(200)
+      while (System.nanoTime() < deadline && starts.size != last) {
+        last = starts.size; Thread.sleep(200)
       }
-      execs.get()
+      import scala.jdk.CollectionConverters._
+      starts.asScala.toSeq
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
