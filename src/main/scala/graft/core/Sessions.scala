@@ -4,15 +4,38 @@ import org.apache.spark.sql.SparkSession
 
 /** The one local-session recipe every runnable main shares (Verify,
   * RunnerVerify, GenScaled, Explain, ScalingBench, StreamBench, RecallBench,
-  * FeatureApiMain, GrpcServerMain) — the
-  * settings are load-bearing, so they live in exactly one place:
+  * FeatureApiMain, GrpcServerMain, the perfbench Main) and the test session
+  * (SparkSpec) — the settings are load-bearing, so they live in exactly one
+  * place:
   *
   *   - GraftExtensions registers the native codegen expressions;
   *   - shuffle.partitions = cores (not the 200 default) sizes local runs;
   *   - UTC pins every timestamp rendering the oracles compare;
   *   - nanosAsLong is REQUIRED to read events.parquet (TIMESTAMP(NANOS),
   *     which the vanilla reader rejects — Tables.events converts back);
+  *   - each generated class compiles once per JVM (below);
   *   - no UI: headless harness runs.
+  *
+  * `spark.sql.codegen.cache.maxEntries` bounds Spark's one JVM-wide LRU of
+  * Janino-compiled classes, keyed by the generated source. The engine's
+  * working set cycles through the default of 100 with almost no hits: the
+  * 28 FeatureCache builds add about 520 entries and all 109 board queries
+  * about 1,020 more. So at 100 every repeated plan (a nightly re-run, an
+  * analyst board, a long-lived serving session) recompiled all of its
+  * classes: ~600 on the perfbench board's second pass, as many as on its
+  * first. 4,096 holds the set with room for the serving and streaming
+  * plans. Metaspace used after both board passes stays at about 185 MB,
+  * and a hit cannot change a result, since the key is the whole source.
+  * The conf is static, read once when the cache is created, so it is set
+  * here, before anything compiles.
+  *
+  * `spark.sql.codegen.useIdInClassName=false` keeps the whole-stage
+  * codegen stage id out of the generated class name; it stays in a source
+  * comment, which the cache key leaves out. AQE assigns the ids while it
+  * re-plans a running query, and the same pipeline got a different id on
+  * the next run of the same plan (6→7, 8→9, 9→6 in one run of
+  * risk_features_incremental), so each run recompiled it. Those were all
+  * of the second-pass compiles left once the cache held the working set.
   */
 object Sessions {
 
@@ -52,6 +75,8 @@ object Sessions {
       // size-gated by the planner (a build side that can't fit a local map
       // still gets SMJ), and AQE skew-split handles SHJ like SMJ.
       .config("spark.sql.join.preferSortMergeJoin", "false")
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)

@@ -39,8 +39,8 @@ object Tables {
     * parquet on every action; the first load of each path still infers
     * from the real footers. Assumes a path's schema is stable within one
     * JVM (true for the driver-generated test dirs) and that every session
-    * shares the footer-affecting configs (nanosAsLong — set by both
-    * Sessions.local and the test session).
+    * shares the footer-affecting configs (nanosAsLong — set by
+    * Sessions.local, which the test session also uses).
     */
   private val schemaCache =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()

@@ -120,6 +120,20 @@ class IncrementalFeaturesSpec extends SparkSpec {
     }
   }
 
+  test("re-running risk_features_incremental compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = SparkEntry.queries("risk_features_incremental")(spark, sf0001)
+      .write.format("noop").mode("overwrite").save()
+    run() // also builds the ladder the query reads
+    run()
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    // AQE gives a pipeline a different whole-stage id from run to run; an id
+    // in the class name would make its source, and so its cache key, new
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the repeated query recompiled its classes")
+  }
+
   test("the wide view composed from the three ladders == the full-recompute view") {
     val full = jobs.FeatureViewJob.compute(
       jobs.UserFeaturesJob(spark, sf0001),

@@ -241,6 +241,19 @@ class ServingSpec extends SparkSpec {
       "a miss on new ids compiled new classes")
   }
 
+  test("a plan repeated after 150 other plans compiles nothing") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    // each distinct literal is a distinct generated class; Spark's default
+    // 100-entry codegen cache would have evicted the first plan's classes
+    def plan(i: Int): Unit = spark.range(1).selectExpr(s"id + $i").collect(): Unit
+    plan(0)
+    (1 to 150).foreach(plan)
+    val compiles = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    plan(0)
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiles,
+      "the repeated plan recompiled its classes")
+  }
+
   test("invalidate(groups) recomputes from the sources, not FeatureCache's snapshot") {
     import java.nio.file.{Files, Path}
     import spark.implicits._

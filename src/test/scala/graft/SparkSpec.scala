@@ -4,23 +4,10 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session keeps sbt test
-  * fast; suites must not mutate global state). */
+  * fast; suites must not mutate global state). Built by the same recipe as
+  * every runnable main, so the specs pin the production settings. */
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-      .withExtensions(new graft.plans.GraftExtensions)
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    // mirror Sessions.local: bucket pruning on bare filters needs the
-    // bucketed scan kept (see the note there)
-    .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    // mirror Sessions.local (r17): plan-shape pins must see the same join
-    // planning the runnable mains use
-    .config("spark.sql.join.preferSortMergeJoin", "false")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val session: SparkSession = graft.core.Sessions.local("4")
 }
 
 trait SparkSpec extends AnyFunSuite {
