@@ -3,10 +3,9 @@ package graft.core
 import org.apache.spark.sql.SparkSession
 
 /** The one local-session recipe every runnable main shares (Verify,
-  * RunnerVerify, GenScaled, Explain, ScalingBench, StreamBench, RecallBench,
-  * FeatureApiMain, GrpcServerMain, the perfbench Main) and the test session
-  * (SparkSpec) — the settings are load-bearing, so they live in exactly one
-  * place:
+  * RunnerVerify, GenScaled, Explain, FeatureApiMain, GrpcServerMain, the
+  * perfbench Main) and the test session (SparkSpec) — the settings are
+  * load-bearing, so they live in exactly one place:
   *
   *   - GraftExtensions registers the native codegen expressions;
   *   - shuffle.partitions = cores (not the 200 default) sizes local runs;

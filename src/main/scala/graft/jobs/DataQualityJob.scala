@@ -208,9 +208,8 @@ object DataQualityJob {
                          buckets: Int = 10): DataFrame =
     equiDepthOf(Tables.orders(spark, dir), "o_totalprice", buckets)
 
-  /** The generic core over any numeric column (ScalingBench ladders it
-    * over the synthetic corpus; the driver query binds it to order
-    * totals). */
+  /** The generic core over any numeric column (the driver query binds it
+    * to order totals). */
   def equiDepthOf(df: DataFrame, valueCol: String, buckets: Int): DataFrame =
     equiDepthFromCounts(graft.ops.BoundedPercentile.countByValue(
       df.select(lit("ALL").as("__g"), col(valueCol)), "__g", valueCol), buckets)

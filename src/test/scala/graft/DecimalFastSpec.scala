@@ -188,7 +188,7 @@ class DecimalFastSpec extends SparkSpec {
       refDot15(mixed, ones500, false, false))
   }
 
-  test("embedding_outliers fast kernels == *_ref kernels end-to-end on real embeddings") {
+  test("embedding_outliers fast kernels == their builtin reference trees end-to-end on real embeddings") {
     val emb = core.Tables.embeddings(spark, sf0001)
     val fast = embOutliersWith(emb, call_function("decimal_vector_dot", _, _),
       call_function("decimal_vector_sum", _, lit(64)))
@@ -200,7 +200,7 @@ class DecimalFastSpec extends SparkSpec {
       "the copy above must track the production query")
   }
 
-  test("decimal_vector_sum fast lane == ref lane cell-exactly, incl. guard-crossing magnitudes") {
+  test("decimal_vector_sum == its builtin per-element decimal sums cell-exactly, incl. guard-crossing magnitudes") {
     // real embeddings (all inside the Fast10 guard) plus synthetic rows that
     // cross it (slow path) and overflow the Long running sum (escalation)
     val synth = Seq(

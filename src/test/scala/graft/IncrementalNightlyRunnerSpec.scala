@@ -1,6 +1,8 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Path, Paths}
+
+import scala.util.Using
 
 import org.apache.spark.sql.functions._
 
@@ -15,7 +17,15 @@ import graft.jobs.{DailyBatchRunner, DayLadder, IncrementalNightlyRunner => Nigh
   * the strongest equivalence oracle, now through the storage layer too.
   * Plus the two per-family delivery contracts at the RUNNER level: day
   * families replay idempotently (dynamic partition overwrite), the user
-  * family applies exactly once (version-name marker skip). */
+  * family applies exactly once (version-name marker skip).
+  *
+  * A bootstrap writes one partition per history day for every family, so
+  * it is the slow step here; a night is a few seconds. The ladder states
+  * are therefore built once, as two lazy fixtures (`afterNight0`,
+  * `laddered`): tests that only read use them as they are, tests that
+  * change state work on a file copy. Tests that check bootstrap itself
+  * (runIncremental, the bootstrap re-runs, the landed sources) still
+  * bootstrap fresh. */
 class IncrementalNightlyRunnerSpec extends SparkSpec {
 
   private def rows(df: org.apache.spark.sql.DataFrame): Seq[Seq[String]] = {
@@ -27,6 +37,40 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
 
   private def freshDir(prefix: String): String =
     Files.createTempDirectory(prefix).toString
+
+  private val Days = 3
+  private lazy val flatSrc = Nightly.Sources.fromDir(spark, sf0001)
+
+  /** A byte-for-byte copy of a state root (pointers, versions, partitions
+    * and checksums), so a test can change state a fixture holds. */
+  private def copyOf(stateRoot: String, prefix: String): String = {
+    val from = Paths.get(stateRoot)
+    val to = Files.createTempDirectory(prefix)
+    Using.resource(Files.walk(from)) { paths =>
+      paths.forEach { (p: Path) =>
+        val target = to.resolve(from.relativize(p))
+        if (Files.isDirectory(p)) Files.createDirectories(target)
+        else Files.copy(p, target)
+      }
+    }
+    to.toString
+  }
+
+  /** Bootstrap plus night 0 of the 3-night ladder over the flat sources.
+    * Read-only: copy it before running anything on it. */
+  private lazy val afterNight0: String = {
+    val stateRoot = freshDir("nightly-night0")
+    Nightly.bootstrap(spark, flatSrc, stateRoot, Days)
+    Nightly.night(spark, flatSrc, stateRoot, Days, 0)
+    stateRoot
+  }
+
+  /** The whole ladder: bootstrap plus all 3 nights. Read-only, as above. */
+  private lazy val laddered: String = {
+    val stateRoot = copyOf(afterNight0, "nightly-ladder")
+    (1 until Days).foreach(k => Nightly.night(spark, flatSrc, stateRoot, Days, k))
+    stateRoot
+  }
 
   test("persisted 3-night ladder == full recompute for ALL THREE families; publish gates+exports") {
     val stateRoot = freshDir("nightly-state")
@@ -55,11 +99,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   }
 
   test("replaying a night is a no-op: day partitions overwrite themselves, user fold skips") {
-    val stateRoot = freshDir("nightly-replay")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    (0 until days).foreach(k => Nightly.night(spark, src, stateRoot, days, k))
+    val stateRoot = copyOf(laddered, "nightly-replay")
+    val src = flatSrc
+    val days = Days
     val before = Nightly.features(spark, src, stateRoot)
     val snap = (rows(before._1), rows(before._2), rows(before._3))
     val marker = MigrationRunner.currentVersion(spark, s"$stateRoot/user_state")
@@ -105,11 +147,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   test("persisted states after bootstrap + 3 nights == the in-session DayLadder folds, row for row") {
     // features read only the 31/91-day windows; this pins every state row,
     // including the backfill days older than any window
-    val stateRoot = freshDir("nightly-states")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    (0 until days).foreach(k => Nightly.night(spark, src, stateRoot, days, k))
+    val stateRoot = laddered
+    val src = flatSrc
+    val days = Days
     for (f <- DayLadder.families)
       assert(rows(spark.read.parquet(s"$stateRoot/${f.name}")) ==
         rows(f.fold(f.pick(src), f.anchor, days)),
@@ -125,11 +165,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
     // a failed night and runs the next would fold day k onto a state
     // missing day k−1 — permanently under-counting, with "-final" making
     // the state look complete. night() must require the predecessor marker.
-    val stateRoot = freshDir("nightly-gap")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    Nightly.night(spark, src, stateRoot, days, 0)
+    val stateRoot = copyOf(afterNight0, "nightly-gap")
+    val src = flatSrc
+    val days = Days
     // night 1 "failed" (never ran); the scheduler moves on to night 2
     val e = intercept[IllegalArgumentException] {
       Nightly.night(spark, src, stateRoot, days, 2)
@@ -163,11 +201,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   }
 
   test("crash soak: a night killed BETWEEN day-family partition writes converges on retry") {
-    val stateRoot = freshDir("nightly-crash-fam")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    Nightly.night(spark, src, stateRoot, days, 0)
+    val stateRoot = copyOf(afterNight0, "nightly-crash-fam")
+    val src = flatSrc
+    val days = Days
     // night 1 dies after writing only the first two families' day partitions
     Nightly.nightDayFamilies(spark, src, stateRoot, days, 1, limit = 2)
     // the scheduler retries the WHOLE night: the two written partitions
@@ -179,11 +215,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   }
 
   test("crash soak: a night killed mid-migrate BEFORE the pointer swap does not double-fold") {
-    val stateRoot = freshDir("nightly-crash-migrate")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    Nightly.night(spark, src, stateRoot, days, 0)
+    val stateRoot = copyOf(afterNight0, "nightly-crash-migrate")
+    val src = flatSrc
+    val days = Days
     Nightly.nightDayFamilies(spark, src, stateRoot, days, 1)
     // migrate crashed after writing the target version DIRECTORY but before
     // the pointer swap: the marker-named dir exists (and is garbage — a
@@ -203,11 +237,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   }
 
   test("crash soak: bootstrap re-run over a state crashed MID-NIGHT neither resets nor double-folds") {
-    val stateRoot = freshDir("nightly-crash-boot")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    val days = 3
-    Nightly.bootstrap(spark, src, stateRoot, days)
-    Nightly.night(spark, src, stateRoot, days, 0)
+    val stateRoot = copyOf(afterNight0, "nightly-crash-boot")
+    val src = flatSrc
+    val days = Days
     // night 1 crashed with day families written but the user fold NOT run
     Nightly.nightDayFamilies(spark, src, stateRoot, days, 1)
     val marker = MigrationRunner.currentVersion(spark, s"$stateRoot/user_state")
@@ -254,7 +286,7 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
 
   test("bootstrap rejects a landing whose p_day is NOT the event day (arrival-day layout)") {
     // p_day is a BY-NAME convention; an arrival-day-partitioned landing
-    // would silently lose late rows to daySlice's partition predicates —
+    // would silently lose late rows to the day slices' partition predicates —
     // bootstrap's observe()-guard must fail it loud instead
     import spark.implicits._
     val stateRoot = freshDir("nightly-badpday")
@@ -273,9 +305,9 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
   }
 
   test("records pin: a night over a date-partitioned landing reads a fraction of a flat-source night") {
-    // the scan-budget discipline at the runner level: daySlice's redundant
-    // p_day predicates must make the delta scans PHYSICALLY day-pruned —
-    // measured as task-metric records, the level that cannot lie
+    // the scan-budget discipline at the runner level: the day slices'
+    // redundant p_day predicates must make the delta scans PHYSICALLY
+    // day-pruned — measured as task-metric records, the level that cannot lie
     def landed(name: String, df: org.apache.spark.sql.DataFrame,
                tsCol: String, root: String): org.apache.spark.sql.DataFrame =
       Nightly.landEventDay(df, tsCol, s"$root/$name")
@@ -291,15 +323,16 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
       users = flat.users)
 
     val sm = core.StageMetrics.attach(spark)
-    def nightRecords(src: Nightly.Sources, tag: String): Long = {
-      val stateRoot = freshDir(s"nightly-recs-$tag")
-      Nightly.bootstrap(spark, src, stateRoot, 3)
-      Nightly.night(spark, src, stateRoot, 3, 0)
-      // measure a MIDDLE night (pure one-day deltas, no tail)
+    // measure a MIDDLE night (pure one-day deltas, no tail); the landed
+    // state bootstraps fresh, the flat one is a copy of the shared
+    // bootstrap + night 0 over the same flat sources
+    def night1Records(src: Nightly.Sources, stateRoot: String): Long =
       sm.measure { Nightly.night(spark, src, stateRoot, 3, 1) }.inputRecords
-    }
-    val flatRecs = nightRecords(flat, "flat")
-    val landRecs = nightRecords(land, "land")
+    val flatRecs = night1Records(flat, copyOf(afterNight0, "nightly-recs-flat"))
+    val landRoot = freshDir("nightly-recs-land")
+    Nightly.bootstrap(spark, land, landRoot, 3)
+    Nightly.night(spark, land, landRoot, 3, 0)
+    val landRecs = night1Records(land, landRoot)
     assert(landRecs < flatRecs / 2,
       s"a landed night read $landRecs records vs $flatRecs flat — the " +
         "p_day partition predicates are not pruning")
@@ -311,10 +344,8 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
     // state table's partition column, so the in31 filter partition-prunes.
     // ~2400 history days at this corpus: a full-state scan would read
     // ~77x the window.
-    val stateRoot = freshDir("nightly-stateprune")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    Nightly.bootstrap(spark, src, stateRoot, 3)
-    (0 until 3).foreach(k => Nightly.night(spark, src, stateRoot, 3, k))
+    val stateRoot = laddered
+    val src = flatSrc
     val stateTotal = spark.read.parquet(s"$stateRoot/tx_state").count()
     val usersTotal = src.users.count()
     val sm = core.StageMetrics.attach(spark)
@@ -335,10 +366,8 @@ class IncrementalNightlyRunnerSpec extends SparkSpec {
     // features() reads ONLY from stateRoot paths + the CURRENT pointer —
     // prove it by reading the state files directly and recomputing one
     // family without any runner involvement
-    val stateRoot = freshDir("nightly-cold")
-    val src = Nightly.Sources.fromDir(spark, sf0001)
-    Nightly.bootstrap(spark, src, stateRoot, 2)
-    (0 until 2).foreach(k => Nightly.night(spark, src, stateRoot, 2, k))
+    val stateRoot = laddered
+    val src = flatSrc
     val viaRunner = Nightly.features(spark, src, stateRoot)._2
     val coldState = spark.read.parquet(s"$stateRoot/tx_state")
     val viaCold = graft.jobs.IncrementalTransactionFeatures.featuresFromState(

@@ -1,9 +1,12 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.Tag
 
-import graft.core.DataGen
-import graft.ext.{Dedup, Similarity}
+import graft.core.{DataGen, StageMetrics, Tables}
+import graft.ext.{Corpus, Dedup, Similarity}
+import graft.jobs.{DataQualityJob, SkewMonitorJob, TrainingSetJob}
 
 /** Marker for the heavier empirical-invariant tests (still run in CI; the
   * tag lets a quick loop exclude them with `-l graft.SlowTest`). */
@@ -17,6 +20,10 @@ object SlowTest extends Tag("graft.SlowTest")
   * constant cluster size 5, so the planted-pair count is exactly 2n
   * (10 pairs per 5-doc cluster) and any quadratic residue would show as
   * pair ratios tracking 4×/16× instead of 2×/4×.
+  *
+  * The same evidence for the heavier laddered queries, on the self-similar
+  * DataGen.scaling* tables: task-metric records per query at ×1 and ×4,
+  * never wall time.
   */
 class ScalingInvariantSpec extends SparkSpec {
 
@@ -79,5 +86,46 @@ class ScalingInvariantSpec extends SparkSpec {
     val over = Dedup.minhashOverflowBuckets(sh).collect()
     assert(over.length == 4, s"expected the flood bucket in all 4 bands, got ${over.length}")
     assert(over.forall(_.getAs[Long]("n_docs") == 300L))
+  }
+
+  test("laddered queries' shuffle-write and input records grow at most 1.3x the data factor", SlowTest) {
+    // one docs, orders and events table per rung; records, not time, so
+    // the pin is deterministic. 1.3x the factor is the quadratic-hazard
+    // line: a quadratic shuffle at x4 writes ~16x, a linear one ~4x.
+    val factor = 4L
+    val root = java.nio.file.Files.createTempDirectory("graft-growth").toString
+    def rung(s: Long) = s"$root/x$s"
+    for (s <- Seq(1L, factor)) {
+      DataGen.scalingDocs(spark, 2000 * s).write.parquet(s"${rung(s)}/documents.parquet")
+      DataGen.scalingOrders(spark, 5000 * s).write.parquet(s"${rung(s)}/orders.parquet")
+      DataGen.scalingEvents(spark, 5000 * s).write.parquet(s"${rung(s)}/events.parquet")
+    }
+    // a fixed probe set outside the corpus: each probe's text recurs once
+    // per 1,000 docs, so its overlaps grow with the corpus, not faster
+    val probes = DataGen.scalingDocs(spark, 100).withColumn("doc_id", -col("doc_id") - 1)
+    val queries: Seq[(String, String => DataFrame)] = Seq(
+      "contamination" -> (d => Corpus.contamination(Tables.documents(spark, d), probes, 3, 0.1)),
+      "vocab_growth" -> (d => Corpus.vocabGrowth(Tables.documents(spark, d))),
+      "dq_drift" -> (d => DataQualityJob.distributionDrift(spark, d)),
+      "dq_robust_outliers" -> (d => DataQualityJob.robustOutliers(spark, d)),
+      "pit_training_set" -> (d => TrainingSetJob.pitTrainingSet(spark, d)),
+      "training_serving_skew" -> (d => SkewMonitorJob.trainingServingSkew(spark, d)))
+    val sm = StageMetrics.attach(spark)
+    try {
+      def records(q: String => DataFrame, s: Long): Seq[Long] = {
+        val d = sm.measure { q(rung(s)).write.format("noop").mode("overwrite").save() }
+        Seq(d.shuffleWriteRecords, d.inputRecords)
+      }
+      val bound = 1.3 * factor
+      for ((name, q) <- queries) {
+        val (x1, x4) = (records(q, 1L), records(q, factor))
+        Seq("shuffle-write", "input").zip(x1.zip(x4)).foreach { case (what, (a, b)) =>
+          info(f"$name $what records: $a -> $b (${b.toDouble / a}%.2fx)")
+          assert(a > 0, s"$name: no $what records at x1")
+          assert(b <= bound * a,
+            s"$name: $what records grew ${b.toDouble / a}x ($a -> $b) on ${factor}x data")
+        }
+      }
+    } finally sm.close()
   }
 }

@@ -10,11 +10,10 @@ import graft.sinks.MergeByKey
 import graft.streaming.VelocityFeatures
 import graft.streaming.VelocityFeatures.{TxnEvent, VelocityRow}
 
-/** ST9 at the RECOVERY level (VERDICT r13 next #7): StreamBench proves
-  * throughput; this pins what happens when the velocity query DIES
-  * mid-batch — the sink already wrote, the checkpoint never committed —
-  * and a new query restarts from the same checkpoint, for BOTH state
-  * backends. The contracts:
+/** ST9 at the RECOVERY level (VERDICT r13 next #7): this pins what
+  * happens when the velocity query DIES mid-batch — the sink already
+  * wrote, the checkpoint never committed — and a new query restarts from
+  * the same checkpoint, for BOTH state backends. The contracts:
   *
   *   - the failed batch is redelivered with the SAME batch id and the
   *     SAME rows: the state store recovers its PRE-batch version, so the

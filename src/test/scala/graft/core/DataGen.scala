@@ -6,9 +6,8 @@ import org.apache.spark.sql.functions._
 /** Seeded synthetic data generator (S13 — scripts/seed_data.py:28-155's
   * 10k-users-with-weighted-segments generator, Spark-native): spark.range →
   * pure column expressions over rand(seed), no driver-side loops, no UDFs.
-  * Deterministic for a fixed (seed, partition count); used by tests and as
-  * the load-generator face of the engine (the corpus itself comes from the
-  * driver and is never regenerated).
+  * Deterministic for a fixed (seed, partition count). Test scope: the specs'
+  * synthetic corpora (the testdata corpus itself is never regenerated).
   */
 object DataGen {
 
@@ -83,10 +82,10 @@ object DataGen {
         expr(s"timestampadd(SECOND, CAST(rand(${seed + 3}) * 86400 * 30 AS INT), " +
           "timestamp'2024-01-01 00:00:00')").as("created_at"))
 
-  // ---- self-similar scaling tables (ScalingBench's ladders) ----
+  // ---- self-similar scaling tables (ScalingInvariantSpec's growth ladders) ----
   // md5-keyed, no rand(): every scale point draws from the identical
-  // distribution, so t(×s)/t(×1) isolates data growth from distribution
-  // shift.
+  // distribution, so a records ratio between rungs isolates data growth
+  // from distribution shift.
 
   /** md5 hex → uniform [0, 1) keyed on (tag, id) — the shared
     * deterministic-randomness primitive of the scaling tables (one
@@ -121,11 +120,10 @@ object DataGen {
     * count-by-value decomposition — the distinct-value frame grows ≈ rows,
     * exactly like real o_totalprice), TPC-H status weights, uniform dates
     * over 1995-1998 so the drift monitor's default 1998-07-01 split yields
-    * ~87% reference / ~13% current mass. Base 150k = the sf0.1 orders row
-    * count, so ×10 is the sf1-equivalent rung. */
+    * ~87% reference / ~13% current mass. */
   def scalingOrders(spark: SparkSession, n: Long): DataFrame = {
     // Box-Muller normal from two independent uniforms (libm is fine here:
-    // bench-only data, never oracle-compared)
+    // test-only data, never oracle-compared)
     val z = sqrt(lit(-2.0) * log(greatest(u("a"), lit(1e-9)))) *
       cos(lit(2.0 * math.Pi) * u("b"))
     spark.range(n).select(
@@ -144,7 +142,7 @@ object DataGen {
     * month. Users scale with the corpus (n/50 — ~50 events per user at
     * every rung, so per-user window work stays fixed while the user-hash
     * exchange and scan scale linearly: exactly the PIT shape's scaling
-    * contract). Base 100k = sf0.1's events row count. */
+    * contract). */
   def scalingEvents(spark: SparkSession, n: Long): DataFrame = {
     val et = u("t")
     spark.range(n).select(
