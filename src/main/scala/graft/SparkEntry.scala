@@ -101,9 +101,8 @@ object SparkEntry {
     "dq_drift"             -> ((s, dir) => DataQualityJob.distributionDrift(s, dir)),
     "percentiles_approx"   -> ((s, dir) => serving.Lookups.percentilesApprox(s, dir)),
     "dedup_exact"          -> ((s, dir) => ext.Dedup.exact(core.Tables.documents(s, dir))),
-    "dedup_jaccard"        -> ((s, dir) => ext.Dedup.jaccardPairsPre(
-      ext.Dedup.shingleTable(s, dir), 0.5,
-      candPre = Some(ext.Dedup.candidatePairTable(s, dir)))),
+    "dedup_jaccard"        -> ((s, dir) => ext.Dedup.jaccardPairs(
+      ext.Dedup.shingleTable(s, dir), ext.Dedup.candidatePairTable(s, dir), 0.5)),
     "dedup_minhash_pairs"  -> ((s, dir) => ext.Dedup.candidatePairTable(s, dir)),
     "dedup_simhash"        -> ((s, dir) => ext.Dedup.simhash(core.Tables.documents(s, dir))),
     "dedup_simhash_pairs"  -> ((s, dir) => ext.Dedup.simhashPairTable(s, dir, 3)),
@@ -140,8 +139,7 @@ object SparkEntry {
     "stratified_sample"    -> ((s, dir) => ext.Corpus.stratifiedSample(
       core.Tables.documents(s, dir), SampleRates.bySource, SampleRates.default)),
     "corpus_funnel"        -> ((s, dir) => ext.Corpus.cleaningFunnel(
-      core.Tables.documents(s, dir),
-      statsPre = Some(ext.TextAnalysis.textStatsTable(s, dir)))),
+      core.Tables.documents(s, dir), ext.TextAnalysis.textStatsTable(s, dir))),
     "contamination"        -> ((s, dir) => {
       val docs = core.Tables.documents(s, dir)
       ext.Corpus.contamination(docs, docs.filter(col("doc_id") < 100), 3, 0.1)
@@ -152,11 +150,9 @@ object SparkEntry {
       core.Tables.documents(s, dir), MixBudgets.bySource, MixBudgets.default)),
     "span_dedup"           -> ((s, dir) => ext.Dedup.spanDedup(core.Tables.documents(s, dir), 16)),
     "substring_dedup"      -> ((s, dir) => ext.Dedup.substringDedup(
-      core.Tables.documents(s, dir), 12,
-      winsPre = Some(ext.Dedup.substringWindowTable(s, dir, 12)))),
+      ext.Dedup.substringWindowTable(s, dir, 12), 12)),
     "substring_clean"      -> ((s, dir) => ext.Dedup.substringClean(
-      core.Tables.documents(s, dir), 12,
-      winsPre = Some(ext.Dedup.substringWindowTable(s, dir, 12)))),
+      core.Tables.documents(s, dir), ext.Dedup.substringWindowTable(s, dir, 12), 12)),
     "pii_scan"             -> ((s, dir) => ext.TextAnalysis.piiScan(core.Tables.documents(s, dir))),
     "interval_agg"         -> ((s, dir) => StreamAnalogJobs.intervalAgg(s, dir)),
     "incremental_user_stats" -> ((s, dir) =>
@@ -184,7 +180,8 @@ object SparkEntry {
       core.Tables.documents(s, dir), 5)),
     "train_split"          -> ((s, dir) => ext.Corpus.splitAssign(
       core.Tables.documents(s, dir), 0.8, 0.1)),
-    "quality_filter"       -> ((s, dir) => ext.TextAnalysis.qualityFilterCached(s, dir)),
+    "quality_filter"       -> ((s, dir) => ext.TextAnalysis.qualityFilter(
+      ext.TextAnalysis.scoreTable(s, dir))),
     "snapshot_diff"        -> ((s, dir) => jobs.MigrationValidationJob.snapshotDiff(
       s, dir, "1999-01-01", "2000-01-01")),
     "oov_rate"             -> ((s, dir) => ext.TextAnalysis.oovTable(s, dir, 1000)),
@@ -197,8 +194,10 @@ object SparkEntry {
       ext.Corpus.splitAssign(core.Tables.documents(s, dir), 0.8, 0.1))),
     "shard_manifest"       -> ((s, dir) => ext.Corpus.shardManifest(
       core.Tables.documents(s, dir), 16)),
-    "lm_familiarity"       -> ((s, dir) => ext.TextAnalysis.bigramFamiliarityCached(s, dir)),
-    "quality_tiers"        -> ((s, dir) => ext.TextAnalysis.qualityTiersCached(s, dir, 10)),
+    "lm_familiarity"       -> ((s, dir) => ext.TextAnalysis.bigramFamiliarity(
+      ext.TextAnalysis.docBigramTable(s, dir), ext.TextAnalysis.bigramDfTable(s, dir))),
+    "quality_tiers"        -> ((s, dir) => ext.TextAnalysis.qualityTiers(
+      ext.TextAnalysis.textStatsTable(s, dir), 10)),
     "dedup_incremental"    -> ((s, dir) => ext.Dedup.incrementalPairTable(s, dir, 0.1)),
     "mixture_weights"      -> ((s, dir) => ext.Corpus.mixtureWeights(
       core.Tables.documents(s, dir))),
@@ -209,7 +208,9 @@ object SparkEntry {
       ext.Corpus.dsirWeightsCached(s, dir), 100)),
     "chunk_windows"        -> ((s, dir) => ext.Corpus.chunkWindows(
       core.Tables.documents(s, dir), 64, 48)),
-    "curation_gate"        -> ((s, dir) => ext.TextAnalysis.curationGateCached(s, dir)),
+    "curation_gate"        -> ((s, dir) => ext.TextAnalysis.curationGate(
+      ext.TextAnalysis.textStatsTable(s, dir), ext.TextAnalysis.repetitionTable(s, dir),
+      ext.TextAnalysis.oovTable(s, dir, 20))),
     "source_quota"         -> ((s, dir) => ext.Corpus.sourceQuota(
       core.Tables.documents(s, dir), QuotaCaps.bySource, QuotaCaps.default)),
     "bpe_merge_pairs"      -> ((s, dir) => ext.Vocab.charPairStats(

@@ -689,13 +689,12 @@ object Corpus {
     * release ships with). Stage 2 gates on the TextAnalysis quality score
     * and token bounds; stage 3 keeps one doc per content hash among the
     * survivors. Each stage is a single aggregate over the previous one —
-    * counts come from the distributed plan, never from driver-side loops. */
-  def cleaningFunnel(docs: DataFrame, minQuality: Double = 0.5,
-                     minTokens: Int = 10, maxTokens: Int = 1000,
-                     statsPre: Option[DataFrame] = None): DataFrame = {
-    // statsPre: pass TextAnalysis.textStatsTable to share the session's
-    // cached token pass with the curation gate and tier reports
-    val stats = statsPre.getOrElse(TextAnalysis.textStats(docs))
+    * counts come from the distributed plan, never from driver-side loops.
+    * `stats` is the corpus's `TextAnalysis.textStats` (`textStatsTable` in a
+    * session, which shares the cached token pass with the curation gate
+    * and tier reports). */
+  def cleaningFunnel(docs: DataFrame, stats: DataFrame, minQuality: Double = 0.5,
+                     minTokens: Int = 10, maxTokens: Int = 1000): DataFrame = {
     val quality = stats.filter(
       col("quality_score") >= minQuality &&
         col("token_count").between(minTokens, maxTokens))

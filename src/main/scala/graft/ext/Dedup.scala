@@ -63,7 +63,7 @@ object Dedup {
     * materialized table each reference would re-run the band self-join. */
   def candidatePairTable(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, "minhash_cand_pairs")(
-      minhashPairsPre(shingleTable(spark, dir), Some(signatureTable(spark, dir))))
+      minhashPairsPre(signatureTable(spark, dir)))
 
   /** Session-cached VERIFIED near-dup pairs at `threshold` — the artifact a
     * dedup pipeline materializes once and then consumes repeatedly (cluster
@@ -72,8 +72,7 @@ object Dedup {
   def verifiedPairTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                         threshold: Double = 0.5): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, s"jaccard_pairs_$threshold")(
-      jaccardPairsPre(shingleTable(spark, dir), threshold,
-        candPre = Some(candidatePairTable(spark, dir))))
+      jaccardPairs(shingleTable(spark, dir), candidatePairTable(spark, dir), threshold))
 
   /** Session-cached duplicate-cluster keeper map over the verified pairs —
     * the artifact the whole dedup pipeline exists to produce. The connected-
@@ -97,11 +96,13 @@ object Dedup {
     * equi-join on (band, signature)), then shingle Jaccard verifies only
     * those. This candidates→verify pipeline is the shape that survives
     * 100 TB — the quadratic work is bounded by LSH collisions, and the
-    * expensive set-intersection runs on a few hundred pairs, not n²/2. */
-  def jaccardPairs(docs: DataFrame, threshold: Double): DataFrame =
-    jaccardPairsPre(withShingles(docs).select("doc_id", "sh"), threshold)
-
-  /** Candidates→verify over a pre-shingled (doc_id, sh) table. The shingle
+    * expensive set-intersection runs on a few hundred pairs, not n²/2.
+    *
+    * Takes a pre-shingled (doc_id, sh) table and the (doc_a, doc_b)
+    * candidate pairs (`shingleTable` and `candidatePairTable` in a
+    * session). The candidates are referenced three times below (candidate
+    * ids, then both verify joins), so they must be a materialized table,
+    * or each reference re-runs the band self-join. The shingle
     * table is semi-joined down to candidate doc ids BEFORE the pair joins —
     * candidates are a tiny fraction of the corpus, so the verify stage must
     * never ship the full shingle arrays of non-candidate docs through a
@@ -111,14 +112,7 @@ object Dedup {
     * verify is two broadcast hash joins streaming shSlim); when the
     * candidate set outgrows the broadcast threshold at corpus scale, the
     * same plan degrades gracefully to a shuffled join on doc id. */
-  def jaccardPairsPre(sh: DataFrame, threshold: Double,
-                      sigPre: Option[DataFrame] = None,
-                      candPre: Option[DataFrame] = None): DataFrame = {
-    // the pair set is referenced three times below (candidate ids + both
-    // verify joins); when no cached table is supplied, checkpoint the
-    // subtree so the band self-join runs once, not per reference (Catalyst
-    // does not CSE identical logical subtrees)
-    val cand = candPre.getOrElse(minhashPairsPre(sh, sigPre).localCheckpoint(false))
+  def jaccardPairs(sh: DataFrame, cand: DataFrame, threshold: Double): DataFrame = {
     val candIds = cand.select(col("doc_a").as("doc_id"))
       .union(cand.select(col("doc_b").as("doc_id")))
       .distinct()
@@ -158,7 +152,7 @@ object Dedup {
   /** LSH candidate pairs: unpivot the signature to (doc_id, band, h) and
     * equi-join on (band, h) — the scale-safe bucket join. */
   def minhashPairs(docs: DataFrame): DataFrame =
-    minhashPairsPre(withShingles(docs).select("doc_id", "sh"))
+    minhashPairsPre(minhashSignaturesPre(withShingles(docs).select("doc_id", "sh")))
 
   /** (doc_id, band, h): the band unpivot of the signature table — shared by
     * pair generation and overflow accounting. */
@@ -170,16 +164,14 @@ object Dedup {
   /** The band buckets the minhash cap drops — same overflow accounting as
     * simhashOverflowBuckets / Similarity.overflowBuckets: dropped mass is
     * observable, never silent. */
-  def minhashOverflowBuckets(sh: DataFrame, maxBucket: Int = MaxBucket,
-                             sigPre: Option[DataFrame] = None): DataFrame =
-    minhashBands(sigPre.getOrElse(minhashSignaturesPre(sh)))
+  def minhashOverflowBuckets(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
+    minhashBands(sig)
       .groupBy("band", "h")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id"))
       .filter(col("n_docs") > maxBucket)
 
-  def minhashPairsPre(sh: DataFrame, sigPre: Option[DataFrame] = None,
-                      maxBucket: Int = MaxBucket): DataFrame = {
-    val sig = sigPre.getOrElse(minhashSignaturesPre(sh))
+  /** LSH candidate pairs over a `minhashSignaturesPre` table. */
+  def minhashPairsPre(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
     val bands = minhashBands(sig)
     // Bucket-size cap, same posture as simhashPairs/Similarity: a band
     // signature shared by more than `maxBucket` docs is boilerplate (a
@@ -219,10 +211,8 @@ object Dedup {
     * via minhashOverflowBuckets), and the intra self-join caps the new
     * side by the same rule — a capped bucket bounds cross fan-out at
     * `maxBucket` per new row, so nothing goes quadratic. */
-  def incrementalPairs(sh: DataFrame, newFrac: Double = 0.1,
-                       sigPre: Option[DataFrame] = None,
+  def incrementalPairs(sig: DataFrame, newFrac: Double = 0.1,
                        maxBucket: Int = MaxBucket): DataFrame = {
-    val sig = sigPre.getOrElse(minhashSignaturesPre(sh))
     val isNew = Corpus.unitHash(col("doc_id")) >= lit(1.0 - newFrac)
     val bands = minhashBands(sig)
     // each side's band table feeds its cap groupBy AND the semi-join probe
@@ -253,12 +243,11 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** incrementalPairs over the session-cached shingle/signature tables. */
+  /** incrementalPairs over the session-cached signature table. */
   def incrementalPairTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                            newFrac: Double = 0.1): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, s"incr_pairs_$newFrac")(
-      incrementalPairs(shingleTable(spark, dir), newFrac,
-        sigPre = Some(signatureTable(spark, dir))))
+      incrementalPairs(signatureTable(spark, dir), newFrac))
 
   /** 64-bit SimHash (the fingerprint width of Manku, Jarmin & Sarma,
     * "Detecting Near-Duplicates for Web Crawling", WWW'07) over distinct
@@ -322,9 +311,8 @@ object Dedup {
     * dropped mass must be observable, never silent (a spike means
     * boilerplate flooding a band value, and everything in such a bucket is
     * skipped by pair generation). */
-  def simhashOverflowBuckets(docs: DataFrame, maxBucket: Int = MaxBucket,
-                             sigPre: Option[DataFrame] = None): DataFrame =
-    simhashBands(sigPre.getOrElse(simhash64(docs)))
+  def simhashOverflowBuckets(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
+    simhashBands(sig)
       .groupBy("band", "bb")
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id"))
       .filter(col("n_docs") > maxBucket)
@@ -337,16 +325,10 @@ object Dedup {
   def simhashPairTable(spark: org.apache.spark.sql.SparkSession, dir: String,
                        maxHamming: Int = 3): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, s"simhash_pairs_$maxHamming")(
-      simhashPairs(graft.core.Tables.documents(spark, dir), maxHamming,
-        sigPre = Some(simhash64Table(spark, dir))))
+      simhashPairs(simhash64Table(spark, dir), maxHamming))
 
-  def simhashPairs(docs: DataFrame, maxHamming: Int = 3,
-                   maxBucket: Int = MaxBucket,
-                   sigPre: Option[DataFrame] = None): DataFrame = {
-    // signatures feed 4 band projections, the cap, and both join sides;
-    // checkpoint the un-precached subtree so the 64-vote aggregation runs
-    // once (Catalyst does not CSE identical logical subtrees)
-    val sig = sigPre.getOrElse(simhash64(docs).localCheckpoint(false))
+  def simhashPairs(sig: DataFrame, maxHamming: Int = 3,
+                   maxBucket: Int = MaxBucket): DataFrame = {
     val bands = simhashBands(sig)
     val ok = bands.groupBy("band", "bb")
       .agg(count(lit(1)).as("n"))
@@ -563,31 +545,28 @@ object Dedup {
     graft.core.FeatureCache.cached(spark, dir, s"substr_windows_$k")(
       substringWindows(graft.core.Tables.documents(spark, dir), k))
 
-  /** Shared spine of substringDedup / substringSpans: windows flagged as
-    * duplicates (first-occurrence election over the ≥2× hash table), with
-    * the streaming-interval-union helper columns (__prev_end, __new_span,
+  /** Shared spine of substringDedup / substringSpans over a
+    * `substringWindows` table built at `k`: windows flagged as duplicates
+    * (first-occurrence election over the ≥2× hash table), with the
+    * streaming-interval-union helper columns (__prev_end, __new_span,
     * __contrib, __end). See substringDedup's scaladoc for the scale
     * argument. */
-  private def substringFlagged(docs: DataFrame, k: Int,
-                               winsPre: Option[DataFrame]): DataFrame = {
+  private def substringFlagged(wins: DataFrame, k: Int): DataFrame = {
     require(k >= 2, s"window must span at least 2 tokens, got $k")
-    winsPre.foreach { w =>
-      // a supplied window table built at a different k would silently
-      // corrupt the span arithmetic (__end, removable_frac) — the table
-      // carries its k in the hash column's metadata (substringWindows).
-      // ABSENT metadata is also a failure (r12 ADVICE): Spark drops
-      // column metadata through some transformations and non-Parquet
-      // round-trips, and a k-mismatched table arriving via such a path
-      // would otherwise pass the guard silently.
-      val m = w.schema("h").metadata
-      require(m.contains("k"),
-        "winsPre lost its k metadata (schema(\"h\").metadata) — rebuild it " +
-          "via substringWindows/substringWindowTable rather than a " +
-          "metadata-stripping round-trip, so the k guard can check it")
-      require(m.getLong("k") == k,
-        s"winsPre was built at k=${m.getLong("k")}, query asked for k=$k")
-    }
-    val wins = winsPre.getOrElse(substringWindows(docs, k))
+    // a window table built at a different k would silently corrupt the
+    // span arithmetic (__end, removable_frac) — the table carries its k
+    // in the hash column's metadata (substringWindows). ABSENT metadata is
+    // also a failure (r12 ADVICE): Spark drops column metadata through
+    // some transformations and non-Parquet round-trips, and a k-mismatched
+    // table arriving via such a path would otherwise pass the guard
+    // silently.
+    val m = wins.schema("h").metadata
+    require(m.contains("k"),
+      "the window table lost its k metadata (schema(\"h\").metadata) — rebuild it " +
+        "via substringWindows/substringWindowTable rather than a " +
+        "metadata-stripping round-trip, so the k guard can check it")
+    require(m.getLong("k") == k,
+      s"the window table was built at k=${m.getLong("k")}, query asked for k=$k")
     // first-occurrence key: the hazard-free struct order. The oracle
     // packs doc_id*10^9+pos instead (identical order below a billion
     // tokens/doc, GUARDED with error() past it — a struct MIN there
@@ -631,12 +610,11 @@ object Dedup {
     * span_end), token positions, end exclusive. Same spine as
     * substringDedup; the group id is the running count of span starts, so
     * the (doc_id, grp) rollup reuses the doc_id window exchange. */
-  def substringSpans(docs: DataFrame, k: Int = 12,
-                     winsPre: Option[DataFrame] = None): DataFrame = {
+  def substringSpans(wins: DataFrame, k: Int): DataFrame = {
     val wCum = org.apache.spark.sql.expressions.Window
       .partitionBy("doc_id").orderBy("pos")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    substringFlagged(docs, k, winsPre)
+    substringFlagged(wins, k)
       .withColumn("__grp",
         sum(when(col("__new_span"), 1L).otherwise(0L)).over(wCum))
       .filter(col("__dup"))
@@ -656,10 +634,10 @@ object Dedup {
     * spans are disjoint, few per doc); the corpus joins them on doc_id
     * (one linear shuffle) and the cut itself is a pure codegen'd
     * higher-order filter over the token array — no explode of corpus
-    * tokens, no re-tokenize, no driver state. */
-  def substringClean(docs: DataFrame, k: Int = 12,
-                     winsPre: Option[DataFrame] = None): DataFrame = {
-    val spans = substringSpans(docs, k, winsPre)
+    * tokens, no re-tokenize, no driver state. Takes the corpus and its
+    * `substringWindows` table built at `k`. */
+  def substringClean(docs: DataFrame, wins: DataFrame, k: Int): DataFrame = {
+    val spans = substringSpans(wins, k)
       .groupBy("doc_id")
       .agg(sort_array(collect_list(struct(
         col("span_start").as("s"), col("span_end").as("e")))).as("__spans"))
@@ -708,11 +686,11 @@ object Dedup {
     * predecessors, so the contribution is exact without clipping). The
     * final per-doc rollup groups on doc_id and reuses the window's
     * exchange — three linear shuffles total, no all-pairs stage, no
-    * driver state. */
-
-  def substringDedup(docs: DataFrame, k: Int = 12,
-                     winsPre: Option[DataFrame] = None): DataFrame =
-    substringFlagged(docs, k, winsPre)
+    * driver state. Takes the `substringWindows` table built at `k`
+    * (`substringWindowTable` in a session); a table built at another k is
+    * rejected. */
+  def substringDedup(wins: DataFrame, k: Int): DataFrame =
+    substringFlagged(wins, k)
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_windows"),
         sum(when(col("__dup"), 1L).otherwise(0L)).as("dup_windows"),

@@ -117,17 +117,15 @@ object Similarity {
       .select(col("vec_id"), col("tb.table_id").as("table_id"), col("tb.bucket").as("bucket"))
   }
 
-  /** Bucket occupancy per hash table — the corpus partition map. */
-  def lshBuckets(embeddings: DataFrame): DataFrame =
-    occupancyOf(withBuckets(embeddings))
+  /** Bucket occupancy per hash table — the corpus partition map — over a
+    * `withBuckets` table. */
+  def lshBuckets(buckets: DataFrame): DataFrame =
+    buckets.groupBy("table_id", "bucket")
+      .agg(count(lit(1)).as("n_vectors"), min("vec_id").as("min_vec_id"))
 
   /** lshBuckets over the session-cached bucket table. */
   def lshBucketsCached(spark: SparkSession, dir: String): DataFrame =
-    occupancyOf(bucketsCached(spark, dir))
-
-  private def occupancyOf(buckets: DataFrame): DataFrame =
-    buckets.groupBy("table_id", "bucket")
-      .agg(count(lit(1)).as("n_vectors"), min("vec_id").as("min_vec_id"))
+    lshBuckets(bucketsCached(spark, dir))
 
   /** Session-cached long-form bucket table — the one artifact every
     * embedding-similarity query derives from (occupancy report, candidate
@@ -152,7 +150,7 @@ object Similarity {
   /** The buckets the cap drops — the overflow accounting a production run
     * monitors (a sudden spike means degenerate content flooding one bucket). */
   def overflowBuckets(embeddings: DataFrame, maxBucket: Int = MaxBucketSize): DataFrame =
-    lshBuckets(embeddings).filter(col("n_vectors") > maxBucket)
+    lshBuckets(withBuckets(embeddings)).filter(col("n_vectors") > maxBucket)
 
   /** Candidate pairs from shared buckets in ANY table: equi-join on
     * (table_id, bucket), never all-pairs; collisions, not n², drive the
@@ -191,18 +189,13 @@ object Similarity {
       scoreCandidates(candidatesFrom(cappedFrom(bucketsCached(spark, dir), maxBucket)),
         Tables.embeddings(spark, dir)))
 
-  /** Embedding-cosine near-dup detection: banded-LSH candidates scored by
-    * cosine, globally ranked — the embedding-space member of the dedup
-    * family (complementing text MinHash/SimHash). Candidates carry only id
-    * pairs; vectors are fetched back by two key joins just for scoring.
-    * `topN` keeps the output deterministic and bounded whether or not the
-    * corpus plants duplicates; a production run would threshold
-    * (cosine >= 0.95) instead. */
-  def cosineNearDups(embeddings: DataFrame, topN: Int,
-                     maxBucket: Int = MaxBucketSize): DataFrame =
-    rankNearDups(scoreCandidates(lshCandidates(embeddings, maxBucket), embeddings), topN)
-
-  /** cosineNearDups over the session-cached scored-pair table. */
+  /** Embedding-cosine near-dup detection over the session-cached
+    * scored-pair table: banded-LSH candidates scored by cosine, globally
+    * ranked — the embedding-space member of the dedup family
+    * (complementing text MinHash/SimHash). `topN` keeps the output
+    * deterministic and bounded whether or not the corpus plants
+    * duplicates; a production run would threshold (cosine >= 0.95)
+    * instead. */
   def cosineNearDupsCached(spark: SparkSession, dir: String, topN: Int,
                            maxBucket: Int = MaxBucketSize): DataFrame =
     rankNearDups(scoredPairsCached(spark, dir, maxBucket), topN)
@@ -220,40 +213,28 @@ object Similarity {
       .withColumn("rank", row_number().over(Window.orderBy(
         col("cosine").desc, col("vec_a").asc, col("vec_b").asc)))
 
-  /** Thresholded cosine pair set over the LSH candidates — the edge list
-    * semantic clustering/dedup consumes (vs. cosineNearDups' bounded top-N
-    * report). Same capped bucket equi-join; only collisions are scored. */
-  def cosinePairs(embeddings: DataFrame, minCosine: Double,
-                  maxBucket: Int = MaxBucketSize): DataFrame =
-    scoreCandidates(lshCandidates(embeddings, maxBucket), embeddings)
-      .filter(col("cosine") >= minCosine)
-
-  /** SemDeDup-shape semantic grouping: connected components over the
-    * thresholded cosine pairs, smallest vec_id as the cluster keeper — the
-    * embedding-space member of the cluster-collapse family (Dedup.clusters
-    * provides the pointer-jumping CC; this is the same pipeline with cosine
-    * edges instead of Jaccard edges). At a dedup threshold (≥0.95) the
-    * output is the semantic-dedup keeper map; at a looser one (the test
-    * corpus plants no near-dups, so the gate runs 0.2) it is the topic
-    * grouping a curation pass balances over. */
-  def semanticClusters(embeddings: DataFrame, minCosine: Double,
-                       maxBucket: Int = MaxBucketSize): DataFrame =
-    clustersOf(cosinePairs(embeddings, minCosine, maxBucket))
-
-  /** semanticClusters over the session-cached scored-pair table. */
-  def semanticClustersCached(spark: SparkSession, dir: String, minCosine: Double,
-                             maxBucket: Int = MaxBucketSize): DataFrame =
-    clustersOf(scoredPairsCached(spark, dir, maxBucket)
-      .filter(col("cosine") >= minCosine))
+  /** SemDeDup-shape semantic grouping: connected components over
+    * thresholded cosine pairs (vec_a, vec_b), smallest vec_id as the
+    * cluster keeper — the embedding-space member of the cluster-collapse
+    * family (Dedup.clusters provides the pointer-jumping CC; this is the
+    * same pipeline with cosine edges instead of Jaccard edges). At a dedup
+    * threshold (≥0.95) the output is the semantic-dedup keeper map; at a
+    * looser one (the test corpus plants no near-dups, so the gate runs 0.2)
+    * it is the topic grouping a curation pass balances over. */
+  def semanticClusters(pairs: DataFrame): DataFrame =
+    Dedup.clusters(pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
+      .select(col("doc_id").as("vec_id"),
+        col("keeper_doc_id").as("keeper_vec_id"), col("cluster_size"))
 
   /** Session-cached semantic-cluster keeper map — same rationale as
     * Dedup.clusterTable: the CC fixpoint runs once per corpus snapshot and
     * the grouping is served as a materialized artifact, not recomputed per
-    * consumer. */
+    * consumer. Built over the session-cached scored-pair table. */
   def semanticClusterTable(spark: SparkSession, dir: String, minCosine: Double,
                            maxBucket: Int = MaxBucketSize): DataFrame =
     FeatureCache.cached(spark, dir, s"semantic_clusters_${minCosine}_$maxBucket")(
-      semanticClustersCached(spark, dir, minCosine, maxBucket))
+      semanticClusters(scoredPairsCached(spark, dir, maxBucket)
+        .filter(col("cosine") >= minCosine)))
 
   /** Embedding-space split leakage — Corpus.splitLeakage's semantic
     * sibling: text near-dup leakage misses PARAPHRASES (same content,
@@ -289,11 +270,6 @@ object Similarity {
       .agg(count(lit(1)).as("pair_count"))
       .withColumn("leaky", col("split_lo") =!= col("split_hi"))
   }
-
-  private def clustersOf(pairs: DataFrame): DataFrame =
-    Dedup.clusters(pairs.select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b")))
-      .select(col("doc_id").as("vec_id"),
-        col("keeper_doc_id").as("keeper_vec_id"), col("cluster_size"))
 
   /** Per-label centroid + bottom-k cosine outliers — embedding-space
     * outlier pruning (docs far from their group's centroid are mislabeled

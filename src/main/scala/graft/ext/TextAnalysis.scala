@@ -87,19 +87,10 @@ object TextAnalysis {
     * comes from the count-by-value decomposition (ops/BoundedPercentile),
     * never a per-group value buffer — scores are 4-dp-rounded so the
     * count-by-value table is tiny, and the shape stays bounded even for
-    * unbounded score domains. */
-  def qualityFilter(docs: DataFrame): DataFrame =
-    qualityFilterScored(docs.select(col("doc_id"), col("source"),
-      qualityExpr(toks(col("text"))).as("quality_score")))
-
-  /** qualityFilter over the session-cached score table — the curation
-    * consumers (filter, gate, funnel, tiers) share one token pass per
-    * (session, corpus) instead of re-tokenizing the corpus each. */
-  def qualityFilterCached(spark: org.apache.spark.sql.SparkSession,
-                          dir: String): DataFrame =
-    qualityFilterScored(scoreTable(spark, dir))
-
-  private def qualityFilterScored(s: DataFrame): DataFrame = {
+    * unbounded score domains. Takes the (doc_id, source, quality_score)
+    * frame `scoreTable` caches, so the curation consumers (filter, gate,
+    * funnel, tiers) share one token pass per (session, corpus). */
+  def qualityFilter(s: DataFrame): DataFrame = {
     val med = graft.ops.BoundedPercentile.exact(
       s.select("source", "quality_score"), "source", "quality_score",
       Seq(0.5 -> "source_median"), 6).drop("n")
@@ -153,20 +144,11 @@ object TextAnalysis {
     * doc bigrams to df and a per-doc combinable aggregate. The join
     * shuffles on bigram, a popularity-skewed key that AQE's skew-join
     * splits; the df table is the observed-bigram vocabulary, sub-linear in
-    * corpus size. Nothing driver-side, nothing all-pairs. */
-  def bigramFamiliarity(docs: DataFrame,
-                        dfPre: Option[DataFrame] = None): DataFrame = {
-    val d = docs.withColumn("__toks", toks(col("text")))
-    val bg = d.select(col("doc_id"),
-      explode(Corpus.ngramsOf(col("__toks"), col("text"), 2)).as("bigram"))
-    val dfreq = dfPre.getOrElse(bg.groupBy("bigram").agg(count(lit(1)).as("df")))
-    scoreBigrams(bg, dfreq)
-  }
-
-  /** The familiarity scoring join itself: doc bigrams ⋈ df → per-doc
-    * combinable aggregate (shared by the ad-hoc and cached entry points). */
-  private def scoreBigrams(bg: DataFrame, dfreq: DataFrame): DataFrame =
-    bg.join(dfreq, Seq("bigram"))
+    * corpus size. Nothing driver-side, nothing all-pairs. Takes the
+    * doc-bigram rows and their df table (`docBigramTable`, `bigramDfTable`
+    * in a session). */
+  def bigramFamiliarity(bigrams: DataFrame, dfreq: DataFrame): DataFrame =
+    bigrams.join(dfreq, Seq("bigram"))
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(col("df")).as("__df_sum"),
@@ -177,18 +159,26 @@ object TextAnalysis {
         graft.ops.Ops.rnd(
           col("__rare").cast("double") / col("n_bigrams"), 4).as("rare_ratio"))
 
-  /** Session-cached per-doc bigram table (doc_id, bigram) — the tokenize +
-    * explode pass BOTH sides of familiarity scoring need: the df table
-    * aggregates it, and the scoring join probes it. Cached separately so a
-    * warm session never re-tokenizes the corpus per evaluation (the r7
+  /** Per-doc (doc_id, bigram) rows — the tokenize + explode pass BOTH sides
+    * of familiarity scoring need: the df table aggregates it, and the
+    * scoring join probes it. */
+  def docBigrams(docs: DataFrame): DataFrame = {
+    val d = docs.withColumn("__toks", toks(col("text")))
+    d.select(col("doc_id"),
+      explode(Corpus.ngramsOf(col("__toks"), col("text"), 2)).as("bigram"))
+  }
+
+  /** Bigram document frequency over `docBigrams` rows. */
+  def bigramDf(bigrams: DataFrame): DataFrame =
+    bigrams.groupBy("bigram").agg(count(lit(1)).as("df"))
+
+  /** Session-cached `docBigrams` table. Cached separately so a warm
+    * session never re-tokenizes the corpus per evaluation (the r7
     * lm_familiarity regression: the df artifact was cached but every score
     * call re-ran this explode). */
   def docBigramTable(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, "doc_bigrams") {
-      val d = graft.core.Tables.documents(spark, dir)
-        .withColumn("__toks", toks(col("text")))
-      d.select(col("doc_id"),
-        explode(Corpus.ngramsOf(col("__toks"), col("text"), 2)).as("bigram"))
+      docBigrams(graft.core.Tables.documents(spark, dir))
     }
 
   /** Session-cached bigram document-frequency table — the corpus-level
@@ -198,14 +188,8 @@ object TextAnalysis {
     * cached doc-bigram table, so the two artifacts share one token pass. */
   def bigramDfTable(spark: org.apache.spark.sql.SparkSession, dir: String): DataFrame =
     graft.core.FeatureCache.cached(spark, dir, "bigram_df") {
-      docBigramTable(spark, dir).groupBy("bigram").agg(count(lit(1)).as("df"))
+      bigramDf(docBigramTable(spark, dir))
     }
-
-  /** bigramFamiliarity over the session-cached artifacts: the scoring join
-    * reads two cached tables (doc bigrams ⋈ df), zero tokenization. */
-  def bigramFamiliarityCached(spark: org.apache.spark.sql.SparkSession,
-                              dir: String): DataFrame =
-    scoreBigrams(docBigramTable(spark, dir), bigramDfTable(spark, dir))
 
   /** Quality-decile tiers — the report that turns a score distribution into
     * curation thresholds: rank every doc by quality score (total order:
@@ -219,21 +203,12 @@ object TextAnalysis {
     * are 4-dp-rounded so this table is tiny — cumsummed over the ordered
     * score table into each score's exclusive global rank offset; (2) a
     * row_number PARTITIONED by score ranks within each score; (3) global
-    * rank = offset + local rank, exactly the single-window result. */
-  def qualityTiers(docs: DataFrame, tiers: Int = 10): DataFrame =
-    qualityTiersScored(docs.withColumn("__t", toks(col("text")))
-      .select(col("doc_id"), qualityExpr(col("__t")).as("q"),
-        size(col("__t")).cast("long").as("n_tokens")), tiers)
-
-  /** qualityTiers over the session-cached stats table (shared token pass). */
-  def qualityTiersCached(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         tiers: Int = 10): DataFrame =
-    qualityTiersScored(textStatsTable(spark, dir).select(col("doc_id"),
-      col("quality_score").as("q"),
-      col("token_count").cast("long").as("n_tokens")), tiers)
-
-  private def qualityTiersScored(scored: DataFrame, tiers: Int): DataFrame = {
+    * rank = offset + local rank, exactly the single-window result. Takes
+    * `textStats` rows (`textStatsTable` in a session). */
+  def qualityTiers(stats: DataFrame, tiers: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    val scored = stats.select(col("doc_id"), col("quality_score").as("q"),
+      col("token_count").cast("long").as("n_tokens"))
     val wScores = Window.orderBy("q")
     val offsets = scored.groupBy("q").agg(count(lit(1)).as("__c"))
       .withColumn("__offset",
@@ -536,34 +511,19 @@ object TextAnalysis {
     * dropped mass is attributable, never silent (the same observability
     * posture as the LSH overflow views). `keep` is the conjunction.
     *
-    * The OOV rule runs against a deliberately small top-`vocabSize` vocab
-    * (the "reference vocabulary" form of the rule); thresholds are
+    * The OOV rule runs against a deliberately small top-N vocab (the
+    * "reference vocabulary" form of the rule; the shipped gate reads
+    * `oovTable` at 20); thresholds are
     * parameters with the documented defaults. Scale shape: three
     * map-side-combinable per-doc passes (stats, bigram repetition, OOV)
     * joined on doc_id — co-keyed equi-joins, no new shuffle classes beyond
-    * the component queries themselves. */
-  def curationGate(docs: DataFrame, minTokens: Int = 10, maxTokens: Int = 1000,
+    * the component queries themselves. Takes the three per-doc frames
+    * (`textStatsTable`, `repetitionTable`, `oovTable` in a session), so a
+    * session running gate + funnel + tiers tokenizes the corpus once. */
+  def curationGate(statsIn: DataFrame, repIn: DataFrame, oovIn: DataFrame,
+                   minTokens: Int = 10, maxTokens: Int = 1000,
                    minQuality: Double = 0.5, maxTopBigram: Double = 0.2,
-                   vocabSize: Int = 20, maxOov: Double = 0.2): DataFrame =
-    curationGateFrom(textStats(docs), repetitionStats(docs),
-      oovRate(docs, vocabSize), minTokens, maxTokens, minQuality,
-      maxTopBigram, maxOov)
-
-  /** curationGate over the session-cached per-doc artifacts — a session
-    * running gate + funnel + tiers tokenizes the corpus once, not once per
-    * report (the cache.py:85-165 cache-aside posture applied to curation). */
-  def curationGateCached(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         minTokens: Int = 10, maxTokens: Int = 1000,
-                         minQuality: Double = 0.5, maxTopBigram: Double = 0.2,
-                         vocabSize: Int = 20, maxOov: Double = 0.2): DataFrame =
-    curationGateFrom(textStatsTable(spark, dir), repetitionTable(spark, dir),
-      oovTable(spark, dir, vocabSize), minTokens, maxTokens, minQuality,
-      maxTopBigram, maxOov)
-
-  private def curationGateFrom(statsIn: DataFrame, repIn: DataFrame,
-                               oovIn: DataFrame, minTokens: Int, maxTokens: Int,
-                               minQuality: Double, maxTopBigram: Double,
-                               maxOov: Double): DataFrame = {
+                   maxOov: Double = 0.2): DataFrame = {
     val stats = statsIn.select("doc_id", "token_count", "quality_score")
     val rep = repIn.select(col("doc_id"), col("top_bigram_ratio"))
     val oov = oovIn.select(col("doc_id"), col("oov_rate"))

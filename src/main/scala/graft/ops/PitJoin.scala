@@ -278,9 +278,9 @@ object PitJoin {
 
   // one keys-sized aggregate per DISTINCT (probes, facts, key, ts, target)
   // plan identity per JVM — the auto consult must not re-run its histogram
-  // job on every matrix build over the same frames (same lifetime
-  // discipline as FeatureCache: dies with the session, never stale across
-  // code changes). Two consequences callers should know (review, r13):
+  // job on every matrix build over the same frames. The memo is a JVM-wide
+  // map keyed by plan hash: it outlives the session and is dropped only by
+  // clearStrategyCache(). Two consequences callers should know (review, r13):
   // (1) auto mode runs the histogram JOB at matrix-BUILD time, not first
   // action — building a plan purely for inspection pays one keys-sized
   // aggregate; pass rangeSecs explicitly to stay lazy; (2) the cache key

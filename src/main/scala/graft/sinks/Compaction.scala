@@ -633,9 +633,11 @@ object Compaction {
     }
   }
 
-  // one pointered events warehouse per source dir per JVM — FeatureCache
-  // lifetime discipline: dies with the session, never stale across code
-  // changes; scale dirs never alias (keyed by dir)
+  // one pointered events warehouse per source dir per JVM: a JVM-wide map
+  // keyed by dir, so it outlives any one session (a later session in the
+  // same JVM reuses the warehouse path) and is never invalidated — a
+  // rewritten source dir keeps serving the warehouse built from the old
+  // events until the JVM exits; scale dirs never alias
   private val pointeredWarehouses =
     new java.util.concurrent.ConcurrentHashMap[String, String]
 

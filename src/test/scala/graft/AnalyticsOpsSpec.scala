@@ -97,8 +97,7 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("semantic clusters: keeper is the cluster min and sizes reconcile") {
-    val emb = core.Tables.embeddings(spark, sf0001)
-    val c = ext.Similarity.semanticClusters(emb, 0.2).cache()
+    val c = ext.Similarity.semanticClusterTable(spark, sf0001, 0.2)
     assert(c.count() > 0, "the 0.2 threshold must bite on the test corpus")
     assert(c.filter($"keeper_vec_id" > $"vec_id").count() == 0,
       "keeper = min member, so no member precedes it")
@@ -107,7 +106,7 @@ class AnalyticsOpsSpec extends SparkSpec {
       .filter($"cluster_size" =!= $"actual").count() == 0,
       "cluster_size equals the member count")
     // edges connect only within a cluster: every thresholded pair shares a keeper
-    val pairs = ext.Similarity.cosinePairs(emb, 0.2)
+    val pairs = ext.Similarity.scoredPairsCached(spark, sf0001).filter($"cosine" >= 0.2)
     val lab = c.select($"vec_id", $"keeper_vec_id")
     val crossing = pairs
       .join(lab.withColumnRenamed("vec_id", "vec_a")
@@ -116,7 +115,6 @@ class AnalyticsOpsSpec extends SparkSpec {
         .withColumnRenamed("keeper_vec_id", "kb"), Seq("vec_b"))
       .filter($"ka" =!= $"kb")
     assert(crossing.count() == 0, "no edge crosses cluster boundaries")
-    c.unpersist()
   }
 
   test("train split: total partition, stable under corpus growth, ~80/10/10") {
@@ -138,7 +136,7 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("quality filter: keeps exactly the >=-median half of every source") {
-    val kept = ext.TextAnalysis.qualityFilter(docs).cache()
+    val kept = ext.TextAnalysis.qualityFilter(ext.TextAnalysis.scoreTable(spark, sf0001)).cache()
     assert(kept.filter($"quality_score" < $"source_median").count() == 0)
     // each source keeps at least half its docs (>= median can't drop more)
     val perSource = docs.groupBy("source").agg(count(lit(1)).as("total"))
@@ -291,7 +289,11 @@ class AnalyticsOpsSpec extends SparkSpec {
       (3L, "x y z w"),                           // unique phrasing: all df=1
       (4L, "a b q r")                            // mixed: shares "a b" only
     ).toDF("doc_id", "text")
-    val out = ext.TextAnalysis.bigramFamiliarity(tiny).cache()
+    def familiarity(docs: org.apache.spark.sql.DataFrame) = {
+      val bigrams = ext.TextAnalysis.docBigrams(docs)
+      ext.TextAnalysis.bigramFamiliarity(bigrams, ext.TextAnalysis.bigramDf(bigrams))
+    }
+    val out = familiarity(tiny).cache()
     val byId = out.collect().map(r => r.getLong(0) -> r).toMap
     assert(byId(1L).getAs[Double]("rare_ratio") == 0.0)
     assert(byId(2L).getAs[Double]("rare_ratio") == 0.0)
@@ -300,15 +302,15 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(byId(4L).getAs[Double]("rare_ratio") == 0.6667)
     assert(byId(1L).getAs[Double]("avg_df") > byId(3L).getAs[Double]("avg_df"))
     // short-doc degrade: a 1-token doc contributes its whole text
-    val short = ext.TextAnalysis.bigramFamiliarity(
-      Seq((1L, "solo"), (2L, "solo")).toDF("doc_id", "text"))
+    val short = familiarity(Seq((1L, "solo"), (2L, "solo")).toDF("doc_id", "text"))
     assert(short.filter($"rare_ratio" === 0.0).count() == 2)
     out.unpersist()
   }
 
   test("quality tiers: two-phase rank matches the single-window construction") {
     import org.apache.spark.sql.expressions.Window
-    val out = ext.TextAnalysis.qualityTiers(docs, 10).cache()
+    val out = ext.TextAnalysis.qualityTiers(ext.TextAnalysis.textStatsTable(spark, sf0001), 10)
+      .cache()
     assert(out.agg(sum("n_docs")).head().getLong(0) == docs.count())
     assert(out.filter($"tier" < 1 || $"tier" > 10).count() == 0)
     // tiers are ordered by quality: tier t's max never exceeds tier t+1's min
@@ -333,8 +335,8 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("incremental pairs: endpoints respect batch membership; subset of full candidates") {
-    val sh = ext.Dedup.shingleTable(spark, sf0001)
-    val out = ext.Dedup.incrementalPairs(sh, 0.1).cache()
+    val sig = ext.Dedup.signatureTable(spark, sf0001)
+    val out = ext.Dedup.incrementalPairs(sig, 0.1).cache()
     val isNew = ext.Corpus.unitHash(col("doc_id")) >= 0.9
     val newIds = docs.filter(isNew).select($"doc_id").collect().map(_.getLong(0)).toSet
     out.collect().foreach { r =>
@@ -350,14 +352,14 @@ class AnalyticsOpsSpec extends SparkSpec {
     // implementations cap differently (combined bucket vs per-side), so a
     // bucket near MaxBucket makes the capped sets legitimately diverge;
     // with caps disabled the accounting rules provably coincide.
-    val fullUncapped = ext.Dedup.minhashPairsPre(sh, maxBucket = Int.MaxValue)
+    val fullUncapped = ext.Dedup.minhashPairsPre(sig, maxBucket = Int.MaxValue)
       .select($"doc_a", $"doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val incr = out.select($"doc_a", $"doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(incr.subsetOf(fullUncapped),
       s"incremental emitted pairs the full join lacks: ${(incr -- fullUncapped).take(5)}")
-    val incrUncapped = ext.Dedup.incrementalPairs(sh, 0.1, maxBucket = Int.MaxValue)
+    val incrUncapped = ext.Dedup.incrementalPairs(sig, 0.1, maxBucket = Int.MaxValue)
       .select($"doc_a", $"doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(fullUncapped.filter { case (a, b) => newIds(a) || newIds(b) } == incrUncapped,
@@ -404,7 +406,9 @@ class AnalyticsOpsSpec extends SparkSpec {
   }
 
   test("curation gate: reasons match recomputed signals; keep is their conjunction") {
-    val out = ext.TextAnalysis.curationGate(docs).cache()
+    val out = ext.TextAnalysis.curationGate(ext.TextAnalysis.textStatsTable(spark, sf0001),
+      ext.TextAnalysis.repetitionTable(spark, sf0001),
+      ext.TextAnalysis.oovTable(spark, sf0001, 20)).cache()
     assert(out.count() == docs.count(), "one verdict per doc")
     assert(out.filter($"keep" === ($"too_short" || $"too_long" || $"low_quality"
       || $"repetitive" || $"high_oov")).count() == 0,
@@ -416,11 +420,14 @@ class AnalyticsOpsSpec extends SparkSpec {
     assert(joined.filter($"low_quality" =!= ($"quality_score" < 0.5)).count() == 0)
     // hand-built edge docs: a 1-token doc (no bigrams → not repetitive,
     // but too short), and a degenerate repeat (repetitive)
-    val tiny = ext.TextAnalysis.curationGate(Seq(
+    val tinyDocs = Seq(
       (1L, "solo", "en"),
       (2L, ("spam " * 40).trim + " "
         + ("the quick brown fox jumps over lazy dogs again now " * 3).trim, "en")
-    ).toDF("doc_id", "text", "lang")).collect().map(r => r.getLong(0) -> r).toMap
+    ).toDF("doc_id", "text", "lang")
+    val tiny = ext.TextAnalysis.curationGate(ext.TextAnalysis.textStats(tinyDocs),
+      ext.TextAnalysis.repetitionStats(tinyDocs), ext.TextAnalysis.oovRate(tinyDocs, 20))
+      .collect().map(r => r.getLong(0) -> r).toMap
     assert(tiny(1L).getAs[Boolean]("too_short") && !tiny(1L).getAs[Boolean]("repetitive"))
     assert(tiny(2L).getAs[Boolean]("repetitive"), "40x repeated bigram must trip the ceiling")
     out.unpersist()

@@ -76,7 +76,7 @@ class BoundedPercentileSpec extends SparkSpec {
       .queryExecution.optimizedPlan.toString
     val pa = serving.Lookups.percentilesApprox(spark, sf0001)
       .queryExecution.optimizedPlan.toString
-    val qf = ext.TextAnalysis.qualityFilter(core.Tables.documents(spark, sf0001))
+    val qf = ext.TextAnalysis.qualityFilter(ext.TextAnalysis.scoreTable(spark, sf0001))
       .queryExecution.optimizedPlan.toString
     // `percentile(` is the exact aggregate; `percentile_approx(` (bounded
     // sketch, fine at scale) does not match the pattern

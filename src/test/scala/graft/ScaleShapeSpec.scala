@@ -75,7 +75,8 @@ class ScaleShapeSpec extends SparkSpec {
     val docs = core.Tables.documents(spark, sf0001)
     val emb = core.Tables.embeddings(spark, sf0001)
     // quality_filter: the sources-sized median frame broadcasts back
-    val qf = ext.TextAnalysis.qualityFilter(docs).queryExecution.executedPlan.toString
+    val qf = ext.TextAnalysis.qualityFilter(ext.TextAnalysis.scoreTable(spark, sf0001))
+      .queryExecution.executedPlan.toString
     assert(qf.contains("BroadcastHashJoin"), s"median join must broadcast:\n${qf.take(800)}")
     // oov_rate: the bounded vocab broadcasts; the token table streams once
     val oov = ext.TextAnalysis.oovRate(docs, 1000).queryExecution.executedPlan.toString
@@ -113,7 +114,7 @@ class ScaleShapeSpec extends SparkSpec {
     // quality_tiers: every window over full corpus rows must be partitioned
     // (by score); the only unpartitioned window runs over the tiny per-score
     // count table. Full-row windows are the ones ordered by doc_id.
-    val qt = ext.TextAnalysis.qualityTiers(docs, 10)
+    val qt = ext.TextAnalysis.qualityTiers(ext.TextAnalysis.textStatsTable(spark, sf0001), 10)
     val qtPlan = qt.queryExecution.executedPlan.toString
     val docWindows = qtPlan.split("\n")
       .filter(l => l.contains("Window [") && l.contains("doc_id"))
@@ -121,7 +122,8 @@ class ScaleShapeSpec extends SparkSpec {
     assert(docWindows.forall(_.contains("windowspecdefinition(q#")),
       s"full-row window must be score-partitioned:\n${docWindows.mkString("\n")}")
     // lm_familiarity: no cartesian anywhere; df join is an equi-join
-    val lf = ext.TextAnalysis.bigramFamiliarity(docs).queryExecution.executedPlan.toString
+    val lf = ext.TextAnalysis.bigramFamiliarity(ext.TextAnalysis.docBigramTable(spark, sf0001),
+      ext.TextAnalysis.bigramDfTable(spark, sf0001)).queryExecution.executedPlan.toString
     for (p <- Seq(sl, sm, qtPlan, lf)) assert(!p.contains("CartesianProduct"))
   }
 
@@ -362,7 +364,8 @@ class ScaleShapeSpec extends SparkSpec {
     // substring_dedup: exactly ONE Window operator (the streaming interval
     // union) — a second would mean the running-max expression was planned
     // twice; and no cartesian anywhere
-    val sd = ext.Dedup.substringDedup(docs, 4).queryExecution.executedPlan.toString
+    val sd = ext.Dedup.substringDedup(ext.Dedup.substringWindowTable(spark, sf0001, 12), 12)
+      .queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
     assert(sd.split("\n").count(_.contains("Window [")) == 1,
       s"interval union must be one window:\n${sd.take(1200)}")

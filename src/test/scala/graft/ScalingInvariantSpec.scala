@@ -83,7 +83,7 @@ class ScalingInvariantSpec extends SparkSpec {
       DataGen.nearDupCorpus(spark, base).unionByName(
         spark.range(300).select(($"id" + 1000000L).as("doc_id"), lit(boiler).as("text"))))
       .select("doc_id", "sh")
-    val over = Dedup.minhashOverflowBuckets(sh).collect()
+    val over = Dedup.minhashOverflowBuckets(Dedup.minhashSignaturesPre(sh)).collect()
     assert(over.length == 4, s"expected the flood bucket in all 4 bands, got ${over.length}")
     assert(over.forall(_.getAs[Long]("n_docs") == 300L))
   }

@@ -176,10 +176,11 @@ class ScanAuditSpec extends SparkSpec {
     // substring dedup: the window frame feeds the dup-hash election AND
     // the join-back probe, but the broadcast-left form lets the election's
     // exchange be reused — ONE physical corpus scan (measured, not 2)
-    assert(recordsOf(ext.Dedup.substringDedup(docs, 3)) == docsRows)
+    assert(recordsOf(ext.Dedup.substringDedup(ext.Dedup.substringWindows(docs, 3), 3)) == docsRows)
     // clean: spans spine + corpus join branch still measure ONE physical
     // scan (the scan subtree is reused across both branches)
-    assert(recordsOf(ext.Dedup.substringClean(docs, 3)) == docsRows)
+    assert(recordsOf(
+      ext.Dedup.substringClean(docs, ext.Dedup.substringWindows(docs, 3), 3)) == docsRows)
     // dsir: the (doc, bucket) feature frame feeds the global bucket
     // estimate AND the scoring join — the same two-phase 2-scan budget
     assert(recordsOf(ext.Corpus.dsirWeights(docs,

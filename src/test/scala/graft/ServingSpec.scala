@@ -53,18 +53,101 @@ class ServingSpec extends SparkSpec {
     try {
       graft.core.FeatureCache.clock = () => fakeNow
       var builds = 0
+      var depBuilds = 0
       def get() = graft.core.FeatureCache.cached(spark, sf0001, "ttl-probe") {
         builds += 1
         graft.core.Tables.nation(spark, sf0001)
       }
+      def dependent() = graft.core.FeatureCache.cached(spark, sf0001, "ttl-dependent") {
+        depBuilds += 1
+        get().select("n_nationkey")
+      }
       get(); get()
       assert(builds == 1, "fresh entry served from cache")
+      // built half a TTL later, so it is still fresh when its input expires
+      fakeNow = graft.core.FeatureCache.ttlNanos / 2
+      dependent(); dependent()
+      assert(builds == 1 && depBuilds == 1, "dependent built once over the cached input")
       fakeNow = graft.core.FeatureCache.ttlNanos + 1
-      get()
+      def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+      val before = stored
+      get().count()
       assert(builds == 2, "expired entry rebuilt")
+      dependent()
+      assert(depBuilds == 2, "the rebuilt input left its dependent cached")
+      // the rebuild is its own cache entry: invalidating it frees its blocks
+      val added = stored -- before
+      graft.core.FeatureCache.invalidate(spark, sf0001, "ttl-probe")
+      assert(added.nonEmpty && (added -- stored) == added,
+        s"the rebuilt entry's blocks outlived its invalidate: ${added.intersect(stored)}")
     } finally {
       graft.core.FeatureCache.clock = origClock
-      graft.core.FeatureCache.invalidate(spark, sf0001, "ttl-probe")
+      Seq("ttl-dependent", "ttl-probe").foreach(
+        graft.core.FeatureCache.invalidate(spark, sf0001, _))
+    }
+  }
+
+  test("cache: invalidating a root drops every level built on it, and nothing else") {
+    var builds = Map.empty[String, Int].withDefaultValue(0)
+    def level(name: String)(body: => org.apache.spark.sql.DataFrame) =
+      graft.core.FeatureCache.cached(spark, sf0001, name) {
+        builds += name -> (builds(name) + 1)
+        body
+      }
+    def root() = level("chain-root")(graft.core.Tables.nation(spark, sf0001))
+    def mid() = level("chain-mid")(root().select("n_nationkey", "n_regionkey"))
+    def top() = level("chain-top")(mid().groupBy("n_regionkey").count())
+    def other() = level("chain-other")(graft.core.Tables.region(spark, sf0001))
+    def stored = spark.sparkContext.getRDDStorageInfo.map(_.id).toSet
+    try {
+      val before = stored
+      top().count(); other().count()
+      val added = stored -- before
+      assert(added.size == 4, s"expected one stored copy per level, saw $added")
+      graft.core.FeatureCache.invalidate(spark, sf0001, "chain-root")
+      assert((added -- stored).size == 3, "the chain's three copies must be unpersisted")
+      top(); other()
+      assert(builds == Map("chain-root" -> 2, "chain-mid" -> 2, "chain-top" -> 2,
+        "chain-other" -> 1), s"builds: $builds")
+    } finally Seq("chain-top", "chain-mid", "chain-root", "chain-other").foreach(
+      graft.core.FeatureCache.invalidate(spark, sf0001, _))
+  }
+
+  test("cache: a dependent whose input is invalidated mid-build is not memoized") {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    val readInput = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    var depBuilds = 0
+    def input() = graft.core.FeatureCache.cached(spark, sf0001, "race-input") {
+      graft.core.Tables.nation(spark, sf0001)
+    }
+    def dependent(hold: Boolean) =
+      graft.core.FeatureCache.cached(spark, sf0001, "race-dependent") {
+        depBuilds += 1
+        val in = input()
+        if (hold) {
+          readInput.countDown()
+          assert(release.await(30, TimeUnit.SECONDS))
+        }
+        in.select("n_nationkey")
+      }
+    val t = new Thread(() => dependent(hold = true): Unit)
+    t.start()
+    try {
+      assert(readInput.await(30, TimeUnit.SECONDS))
+      // the input is replaced after the build read it, before it publishes
+      graft.core.FeatureCache.invalidate(spark, sf0001, "race-input")
+      release.countDown()
+      t.join(30000)
+      assert(depBuilds == 1)
+      dependent(hold = false)
+      assert(depBuilds == 2, "a dependent built over an invalidated input was memoized")
+      dependent(hold = false)
+      assert(depBuilds == 2, "the rebuilt dependent was not memoized")
+    } finally {
+      release.countDown()
+      Seq("race-dependent", "race-input").foreach(
+        graft.core.FeatureCache.invalidate(spark, sf0001, _))
     }
   }
 
@@ -267,7 +350,11 @@ class ServingSpec extends SparkSpec {
         .select("user_id").as[Long].head()
       def totalOrders(): Long =
         svc2.getFeatures(uid, Seq("user"), now).features("user").getAs[Long]("total_orders")
+      // the wide view, cached over user_features
+      def viewOrders(): Long = serving.Lookups.pointLookup(spark, dir, Seq(uid))
+        .select("total_orders").as[Long].head()
       assert(totalOrders() > 0)
+      assert(viewOrders() == totalOrders())
       // an upstream batch lands: the user's orders are gone from the source
       val orders = copy.resolve("orders.parquet")
       val staged = copy.resolve("orders.staged")
@@ -277,9 +364,10 @@ class ServingSpec extends SparkSpec {
       Files.move(staged, orders)
       svc2.invalidate(Seq("user"))
       assert(totalOrders() == 0L, "invalidate served the pre-refresh rows")
+      assert(viewOrders() == 0L, "feature_view outlived the user_features it was built on")
     } finally {
-      Seq("user", "transaction", "risk").foreach(g =>
-        graft.core.FeatureCache.invalidate(spark, dir, s"${g}_features"))
+      (Seq("user", "transaction", "risk").map(g => s"${g}_features") :+ "feature_view")
+        .foreach(graft.core.FeatureCache.invalidate(spark, dir, _))
       Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
     }
   }

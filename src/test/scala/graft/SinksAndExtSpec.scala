@@ -27,7 +27,8 @@ class SinksAndExtSpec extends SparkSpec {
 
   test("jaccard pairs detect planted near-dups; minhash candidates cover them") {
     val docs = graft.core.Tables.documents(spark, sf0001)
-    val verified = Dedup.jaccardPairs(docs, 0.5)
+    val verified = Dedup.jaccardPairs(Dedup.shingleTable(spark, sf0001),
+        Dedup.candidatePairTable(spark, sf0001), 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assume(verified.nonEmpty, "corpus plants near-duplicates")
     val candidates = Dedup.minhashPairs(docs)
@@ -43,7 +44,7 @@ class SinksAndExtSpec extends SparkSpec {
       (3L, "p q r s p q r s"),     // WITHIN-doc repeat of "p q r s"
       (4L, "u v w")                // shorter than k: no window, omitted
     ).toDF("doc_id", "text")
-    val out = Dedup.substringDedup(docs, 4).collect()
+    val out = Dedup.substringDedup(Dedup.substringWindows(docs, 4), 4).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getDouble(5))))
       .toMap
@@ -71,7 +72,7 @@ class SinksAndExtSpec extends SparkSpec {
     val docs = Seq((1L, "a b c d e")).toDF("doc_id", "text")
     val wins = Dedup.substringWindows(docs, 3)
     val e = intercept[IllegalArgumentException] {
-      Dedup.substringDedup(docs, 4, winsPre = Some(wins))
+      Dedup.substringDedup(wins, 4)
     }
     assert(e.getMessage.contains("k=3"), e.getMessage)
   }
@@ -87,7 +88,7 @@ class SinksAndExtSpec extends SparkSpec {
       .select(col("doc_id"), col("pos"),
         org.apache.spark.sql.functions.coalesce(col("h"), col("h")).as("h"))
     val e = intercept[IllegalArgumentException] {
-      Dedup.substringDedup(docs, 4, winsPre = Some(stripped))
+      Dedup.substringDedup(stripped, 4)
     }
     assert(e.getMessage.contains("lost its k metadata"), e.getMessage)
   }
@@ -100,7 +101,7 @@ class SinksAndExtSpec extends SparkSpec {
       (4L, "u v w"),               // sub-k: untouched, still present
       (5L, "a b c d e f g h i j") // whole-doc clone of doc 1: comes back empty
     ).toDF("doc_id", "text")
-    val out = Dedup.substringClean(docs, 4).collect()
+    val out = Dedup.substringClean(docs, Dedup.substringWindows(docs, 4), 4).collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4)))).toMap
     assert(out.size == 5, "every doc returns")
@@ -184,7 +185,8 @@ class SinksAndExtSpec extends SparkSpec {
 
   test("simhash signatures of near-dup pairs are close in Hamming distance") {
     val docs = graft.core.Tables.documents(spark, sf0001)
-    val pairs = Dedup.jaccardPairs(docs, 0.5).collect().map(r => (r.getLong(0), r.getLong(1)))
+    val pairs = Dedup.jaccardPairs(Dedup.shingleTable(spark, sf0001),
+      Dedup.candidatePairTable(spark, sf0001), 0.5).collect().map(r => (r.getLong(0), r.getLong(1)))
     assume(pairs.nonEmpty)
     val sig = Dedup.simhash(docs).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -339,7 +341,7 @@ class SinksAndExtSpec extends SparkSpec {
       (2L, "the quick brown fox jumps over the lazy dog again and again today"),
       (3L, "completely different vocabulary about quantum flux capacitors humming")
     ).toDF("doc_id", "text")
-    val pairs = Dedup.simhashPairs(docs, maxHamming = 3).collect()
+    val pairs = Dedup.simhashPairs(Dedup.simhash64(docs), maxHamming = 3).collect()
     assert(pairs.length == 1)
     assert(pairs(0).getAs[Long]("doc_a") == 1L && pairs(0).getAs[Long]("doc_b") == 2L)
     assert(pairs(0).getAs[Int]("hamming") == 0)
@@ -403,8 +405,9 @@ class SinksAndExtSpec extends SparkSpec {
     // bucket join must emit nothing; with the cap lifted, all pairs return
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = (0L until 40L).map(i => (i, txt)).toDF("doc_id", "text")
-    assert(Dedup.simhashPairs(docs, maxHamming = 3, maxBucket = 16).count() == 0)
-    assert(Dedup.simhashPairs(docs, maxHamming = 3, maxBucket = 64).count() == 40L * 39 / 2)
+    val sig = Dedup.simhash64(docs)
+    assert(Dedup.simhashPairs(sig, maxHamming = 3, maxBucket = 16).count() == 0)
+    assert(Dedup.simhashPairs(sig, maxHamming = 3, maxBucket = 64).count() == 40L * 39 / 2)
   }
 
   test("simhash overflow view accounts for every bucket the cap drops") {
@@ -413,12 +416,13 @@ class SinksAndExtSpec extends SparkSpec {
     // holding all 40 — with cap 16 all four overflow and must be reported
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = (0L until 40L).map(i => (i, txt)).toDF("doc_id", "text")
-    val over = Dedup.simhashOverflowBuckets(docs, maxBucket = 16).collect()
+    val sig = Dedup.simhash64(docs)
+    val over = Dedup.simhashOverflowBuckets(sig, maxBucket = 16).collect()
     assert(over.length == 4, s"expected 4 overflowed band buckets, got ${over.length}")
     assert(over.forall(_.getAs[Long]("n_docs") == 40L))
     assert(over.forall(_.getAs[Long]("min_doc_id") == 0L))
     // and with the cap lifted past the bucket size, nothing overflows
-    assert(Dedup.simhashOverflowBuckets(docs, maxBucket = 64).count() == 0)
+    assert(Dedup.simhashOverflowBuckets(sig, maxBucket = 64).count() == 0)
   }
 
   test("clusters keeps block storage bounded across pointer-jumping rounds") {
@@ -575,7 +579,8 @@ class SinksAndExtSpec extends SparkSpec {
 
   test("cleaning funnel stages shrink monotonically") {
     val docs = graft.core.Tables.documents(spark, sf0001)
-    val stages = graft.ext.Corpus.cleaningFunnel(docs).collect()
+    val stages = graft.ext.Corpus.cleaningFunnel(docs,
+        graft.ext.TextAnalysis.textStatsTable(spark, sf0001)).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(stages("1_raw") >= stages("2_quality"))
     assert(stages("2_quality") >= stages("3_dedup"))
@@ -591,7 +596,8 @@ class SinksAndExtSpec extends SparkSpec {
     val docs = graft.core.Tables.documents(spark, sf0001)
     val lshPairs = ml.FeaturePipeline.lshNearDup(docs, 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val verified = Dedup.jaccardPairs(docs, 0.5).collect()
+    val verified = Dedup.jaccardPairs(Dedup.shingleTable(spark, sf0001),
+        Dedup.candidatePairTable(spark, sf0001), 0.5).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(verified.subsetOf(lshPairs), "MLlib MinHashLSH finds the planted near-dups")
   }
