@@ -149,36 +149,24 @@ object Dedup {
     toks.groupBy("doc_id").agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH candidate pairs: unpivot the signature to (doc_id, band, h) and
-    * equi-join on (band, h) — the scale-safe bucket join. */
-  def minhashPairs(docs: DataFrame): DataFrame =
-    minhashPairsPre(minhashSignaturesPre(withShingles(docs).select("doc_id", "sh")))
-
   /** (doc_id, band, h): the band unpivot of the signature table — shared by
-    * pair generation and overflow accounting. */
-  private def minhashBands(sig: DataFrame): DataFrame =
+    * pair generation and the specs' overflow accounting. */
+  private[graft] def minhashBands(sig: DataFrame): DataFrame =
     (0 until NumBands).map(i =>
       sig.select(col("doc_id"), lit(i).as("band"), col(s"h$i").as("h")))
       .reduce(_ unionByName _)
 
-  /** The band buckets the minhash cap drops — same overflow accounting as
-    * simhashOverflowBuckets / Similarity.overflowBuckets: dropped mass is
-    * observable, never silent. */
-  def minhashOverflowBuckets(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
-    minhashBands(sig)
-      .groupBy("band", "h")
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id"))
-      .filter(col("n_docs") > maxBucket)
-
-  /** LSH candidate pairs over a `minhashSignaturesPre` table. */
+  /** LSH candidate pairs over a `minhashSignaturesPre` table: the band
+    * unpivot equi-joined on (band, h) — the scale-safe bucket join. */
   def minhashPairsPre(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame = {
     val bands = minhashBands(sig)
     // Bucket-size cap, same posture as simhashPairs/Similarity: a band
     // signature shared by more than `maxBucket` docs is boilerplate (a
     // flood of one template), and self-joining that bucket alone is
-    // O(bucket²) — the quadratic trap. Dropped buckets stay observable via
-    // minhashOverflowBuckets. Docs in a dropped bucket still pair through
-    // their other bands unless those overflow too.
+    // O(bucket²) — the quadratic trap. No production query reports the
+    // dropped buckets (the specs count them: LshReference). Docs in a
+    // dropped bucket still pair through their other bands unless those
+    // overflow too.
     val ok = bands.groupBy("band", "h")
       .agg(count(lit(1)).as("n"))
       .filter(col("n") <= maxBucket)
@@ -207,10 +195,10 @@ object Dedup {
     * Emits `kind`='cross' pairs (one endpoint in the index — the increment
     * probing history) and 'intra' pairs (both endpoints new — the batch's
     * internal dups), ids canonicalized doc_a < doc_b. Caps: the index side
-    * caps its flood buckets as usual (boilerplate templates; observable
-    * via minhashOverflowBuckets), and the intra self-join caps the new
-    * side by the same rule — a capped bucket bounds cross fan-out at
-    * `maxBucket` per new row, so nothing goes quadratic. */
+    * caps its flood buckets as usual (boilerplate templates), and the
+    * intra self-join caps the new side by the same rule — a capped bucket
+    * bounds cross fan-out at `maxBucket` per new row, so nothing goes
+    * quadratic. */
   def incrementalPairs(sig: DataFrame, newFrac: Double = 0.1,
                        maxBucket: Int = MaxBucket): DataFrame = {
     val isNew = Corpus.unitHash(col("doc_id")) >= lit(1.0 - newFrac)
@@ -294,28 +282,18 @@ object Dedup {
     * 65536-value bucket space per band — buckets stay tiny at corpus scale
     * (this is why the fingerprint is 64-bit: 8-bit bands of a 32-bit hash
     * would collapse to 256 buckets, the quadratic trap). A bucket-size cap
-    * (same posture as Similarity.lshCandidates) drops degenerate buckets —
+    * (same posture as Similarity.cappedFrom) drops degenerate buckets —
     * a band value shared by more than `maxBucket` docs is boilerplate, and
     * joining it would be quadratic by construction. Verification is an
     * exact positional hamming count over the two bit strings. */
   /** (doc_id, simhash64, band, bb): the 4×16-bit band unpivot of the
-    * signature table — shared by pair generation and overflow accounting. */
-  private def simhashBands(sig: DataFrame): DataFrame =
+    * signature table — shared by pair generation and the specs' overflow
+    * accounting. */
+  private[graft] def simhashBands(sig: DataFrame): DataFrame =
     (0 until 4).map(i =>
       sig.select(col("doc_id"), col("simhash64"), lit(i).as("band"),
         substring(col("simhash64"), i * 16 + 1, 16).as("bb")))
       .reduce(_ unionByName _)
-
-  /** The band buckets the simhashPairs cap drops — the same overflow
-    * accounting Similarity.overflowBuckets publishes for the embedding LSH:
-    * dropped mass must be observable, never silent (a spike means
-    * boilerplate flooding a band value, and everything in such a bucket is
-    * skipped by pair generation). */
-  def simhashOverflowBuckets(sig: DataFrame, maxBucket: Int = MaxBucket): DataFrame =
-    simhashBands(sig)
-      .groupBy("band", "bb")
-      .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_doc_id"))
-      .filter(col("n_docs") > maxBucket)
 
   /** Session-cached verified simhash near-dup pairs at the default hamming
     * radius — the simhash-family analogue of `verifiedPairTable`: a dedup

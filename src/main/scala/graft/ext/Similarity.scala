@@ -13,8 +13,8 @@ import graft.core.{FeatureCache, Tables}
   *     broadcast join of the (small) query set against the corpus, one pass,
   *     no shuffle of the corpus itself: this is the shape that scales to
   *     100 TB when the query set is bounded (the corpus side streams).
-  *   - `lshBuckets` / `lshCandidates`: banded random-hyperplane LSH (4
-  *     tables × 16 planes) — the scale path. Hyperplane signs are derived
+  *   - `lshBuckets` / `cosineNearDupsCached`: banded random-hyperplane LSH
+  *     (4 tables × 16 planes) — the scale path. Hyperplane signs are derived
   *     from md5 so every engine computes the identical bucket; candidates
   *     come from an equi-join on (table_id, bucket) with a bucket-size cap.
   *
@@ -76,10 +76,11 @@ object Similarity {
 
   /** Buckets larger than this are excluded from candidate generation: a
     * degenerate bucket (boilerplate / zero vectors) contributes O(n²) pairs
-    * on its own. Dropped buckets stay observable via `overflowBuckets`.
+    * on its own. No production query reports the dropped buckets; the
+    * specs count them with the test-scope `LshReference.overflowBuckets`.
     *
     * The fixed default holds measured-linear through ×10 corpus growth
-    * (PERF.md: 10.26× time on 10× vectors at 200k); if `overflowBuckets`
+    * (PERF.md: 10.26× time on 10× vectors at 200k); if the overflow count
     * ever shows buckets saturating as the corpus grows — recall eroding
     * because real near-dup clusters exceed the cap — scale the cap with
     * corpus size instead (cap ≈ n / (NumTables·2^PlanesPerTable) times a
@@ -138,27 +139,17 @@ object Similarity {
 
   /** Bucket rows surviving the size cap (window count reuses the exchange
     * the downstream (table_id, bucket) equi-join needs anyway). */
-  private def cappedFrom(buckets: DataFrame, maxBucket: Int): DataFrame =
+  private[graft] def cappedFrom(buckets: DataFrame, maxBucket: Int): DataFrame =
     buckets
       .withColumn("__n", count(lit(1)).over(Window.partitionBy("table_id", "bucket")))
       .filter(col("__n") <= maxBucket)
       .drop("__n")
 
-  private def cappedBuckets(embeddings: DataFrame, maxBucket: Int): DataFrame =
-    cappedFrom(withBuckets(embeddings), maxBucket)
-
-  /** The buckets the cap drops — the overflow accounting a production run
-    * monitors (a sudden spike means degenerate content flooding one bucket). */
-  def overflowBuckets(embeddings: DataFrame, maxBucket: Int = MaxBucketSize): DataFrame =
-    lshBuckets(withBuckets(embeddings)).filter(col("n_vectors") > maxBucket)
-
   /** Candidate pairs from shared buckets in ANY table: equi-join on
     * (table_id, bucket), never all-pairs; collisions, not n², drive the
-    * shuffle volume, and the size cap bounds the worst bucket. */
-  def lshCandidates(embeddings: DataFrame, maxBucket: Int = MaxBucketSize): DataFrame =
-    candidatesFrom(cappedBuckets(embeddings, maxBucket))
-
-  private def candidatesFrom(b: DataFrame): DataFrame =
+    * shuffle volume, and the size cap (`cappedFrom`) bounds the worst
+    * bucket. */
+  private[graft] def candidatesFrom(b: DataFrame): DataFrame =
     b.as("x").join(b.as("y"),
         col("x.table_id") === col("y.table_id") && col("x.bucket") === col("y.bucket") &&
         col("x.vec_id") < col("y.vec_id"))

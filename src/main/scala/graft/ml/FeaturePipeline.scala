@@ -52,7 +52,7 @@ object FeaturePipeline {
       .fit(vectorized).transform(vectorized)
 
   /** MLlib MinHashLSH near-dup candidates over token sets (library
-    * counterpart of graft.ext.Dedup.minhashPairs; seeded). At scale the
+    * counterpart of graft.ext.Dedup.minhashPairsPre; seeded). At scale the
     * approxSimilarityJoin is the same band-bucket join shape. */
   def lshNearDup(docs: DataFrame, jaccardDistance: Double): DataFrame = {
     val tf = new HashingTF().setInputCol("tokens").setOutputCol("tf")

@@ -41,7 +41,7 @@ import org.json4s.jackson.JsonMethods.{compact, parse, render}
   * (cache.py:167-196) and nothing else — an unrelated user's next read
   * pays nothing. One honest delta remains: the reference's post-DELETE
   * read hits Postgres (always current), while here the re-probe reads
-  * the cached group tables — a computed snapshot. Upstream-data
+  * the checkpointed group tier — a computed snapshot. Upstream-data
   * freshness is the PIPELINE's duty (the streaming ST3 path calls
   * service.invalidate() when events change features), not DELETE's; the
   * API deliberately exposes no table-refresh route because api.py has

@@ -20,19 +20,21 @@ import graft.jobs.{RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
   *   - data_freshness_minutes is the age of the OLDEST group
   *     (store.py:189-201);
   *   - batch requests are capped at 100 (models.py:84-89) and served by ONE
-  *     probe execution — a union of the requested groups' filtered scans,
-  *     each row struct-packed into its group's column — not the reference's
+  *     probe execution — one filtered scan of the group tier, which holds
+  *     every group's row for a user on one row — not the reference's
   *     100-per-chunk sequential loop (database.py:120-134) nor one Spark
   *     job per group.
   *
   * TWO cache tiers, mirroring the reference's Redis-over-Postgres split:
   *
-  *   1. the GROUP tier — each feature table locally checkpointed to disk and
-  *     `.cache()`d over that checkpoint (the "database" a probe computes
-  *     from), refreshed by `invalidate`. The checkpoint cuts the build
-  *     lineage: a probe plans over a one-node RDD scan instead of the
-  *     feature build's parquet scans and exchanges, and an evicted in-memory
-  *     copy rebuilds from the disk blocks, not from the sources;
+  *   1. the GROUP tier — ONE table keyed by user_id: the three feature
+  *     tables full-outer-joined on user_id, each group's row packed into
+  *     its own struct column (null where the group has no row for the
+  *     user), locally checkpointed to disk with no in-memory copy (the
+  *     "database" a probe computes from), refreshed by `invalidate`. The
+  *     checkpoint cuts the build lineage: a probe plans over a one-node RDD
+  *     scan instead of the feature builds' parquet scans and exchanges, and
+  *     one scan serves every requested group;
   *   2. the per-user ROW tier — a driver-side (user, group) → row memo,
   *     the actual Redis analogue (cache.py:85-165: per-user keys, TTL,
   *     per-user DELETE). A request whose users are all memoized costs no
@@ -41,7 +43,7 @@ import graft.jobs.{RiskFeaturesJob, TransactionFeaturesJob, UserFeaturesJob}
   *     and `invalidateUser` evicts at the reference's granularity
   *     (cache.py:167-196) without touching anyone else's entries.
   *
-  * Lookups stay declarative (one `array_contains` filter per group scan,
+  * Lookups stay declarative (one `array_contains` filter on the tier scan,
   * its ids a single array literal that generated code references rather
   * than inlines, so every miss reuses the same compiled classes);
   * collection happens only at the API boundary, per looked-up id — never a
@@ -53,17 +55,23 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
 
   val featureGroups: Seq[String] = Seq("user", "transaction", "risk")
 
-  /** One group-tier table: the job's rows, checkpointed to local disk (the
-    * eager job runs here, not in a probe) and cached in memory over the
-    * checkpoint — ext/Dedup's `localCheckpoint` idiom for cutting lineage. */
-  private def computeGroup(g: String): DataFrame = (g match {
+  /** One group's rows as (user_id, g): each row packed into a struct. */
+  private def groupColumn(g: String): DataFrame = (g match {
     case "user"        => UserFeaturesJob(spark, dir)
     case "transaction" => TransactionFeaturesJob(spark, dir)
     case "risk"        => RiskFeaturesJob(spark, dir)
-  }).localCheckpoint(true, StorageLevel.DISK_ONLY).cache()
+  }).select(col("user_id"), struct(col("*")).as(g))
 
-  @volatile private var cache: Map[String, DataFrame] =
-    featureGroups.map(g => g -> computeGroup(g)).toMap
+  /** The group tier from one (user_id, g) frame per group: full-outer-joined
+    * on user_id and checkpointed to local disk (the eager join runs here,
+    * not in a probe) — ext/Dedup's `localCheckpoint` idiom for cutting
+    * lineage, without a `.cache()` over it. */
+  private def buildTier(columns: Seq[DataFrame]): DataFrame =
+    columns.reduce(_.join(_, Seq("user_id"), "full_outer"))
+      .select(col("user_id") +: featureGroups.map(col): _*)
+      .localCheckpoint(true, StorageLevel.DISK_ONLY)
+
+  @volatile private var tier: DataFrame = buildTier(featureGroups.map(groupColumn))
 
   /** Row tier: (userId, group) → (row-if-present, bornAtNanos). Bounded by
     * `rowTierMaxEntries` (evict expired first, then oldest — the Redis
@@ -71,10 +79,10 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
   private val rowMemo = TrieMap.empty[(Long, String), (Option[Row], Long)]
 
   /** Group-tier generation, bumped by `invalidate` under the service lock
-    * together with the swap of the group tables. A probe snapshots it with
-    * the tables and memoizes ONLY if it is unchanged (checked under the same
+    * together with the swap of the group tier. A probe snapshots it with
+    * the tier and memoizes ONLY if it is unchanged (checked under the same
     * lock): with concurrent dispatch, a probe that raced an invalidation may
-    * have read the PRE-invalidation tables, and inserting those rows after
+    * have read the PRE-invalidation tier, and inserting those rows after
     * the row tier was cleared would serve stale features until TTL — the
     * probe's own response still carries the old rows (indistinguishable
     * from a request that completed just before the invalidation), but
@@ -111,11 +119,10 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
 
   /** Batch lookup (store.py:80-141). Row-tier hits are served straight from
     * the memo; only ids with a missing/stale (user, group) entry go to the
-    * ONE fused probe: each requested group's scan keeps the rows whose
-    * user_id is in the miss-id array literal and packs them into that
-    * group's struct column (null in the other groups' columns); the scans'
-    * union is one collect — no join, no exchange — however many groups
-    * were requested, and the rows are assembled by (id, group). */
+    * ONE probe: the tier scan keeps the rows whose user_id is in the
+    * miss-id array literal and projects the requested groups' struct
+    * columns — one collect, no join, no exchange, however many groups were
+    * requested — and the rows are assembled by (id, group). */
   def getBatch(userIds: Seq[Long], types: Seq[String], now: Instant): Seq[FeatureResult] = {
     require(userIds.size <= 100, "batch size cap is 100 (models.py:84-89)")
     val wanted = normalizeTypes(types)
@@ -133,16 +140,12 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
       wanted.exists(g => !snap.contains((id, g))))
     val probed = scala.collection.mutable.Map.empty[(Long, String), Option[Row]]
     if (missIds.nonEmpty) {
-      val (gen0, tables) = synchronized((groupGeneration, cache))
-      val ids = typedLit(missIds.toArray)
-      val fused = wanted.map { g =>
-        tables(g).filter(array_contains(ids, col("user_id")))
-          .select(col("user_id") +: wanted.map(h =>
-            (if (h == g) struct(col("*")) else lit(null).cast(tables(h).schema)).as(h)): _*)
-      }.reduce(_ union _)
+      val (gen0, current) = synchronized((groupGeneration, tier))
+      val probe = current.filter(array_contains(typedLit(missIds.toArray), col("user_id")))
+        .select(col("user_id") +: wanted.map(col): _*)
       val born = tierNow()
       for (id <- missIds; g <- wanted) probed((id, g)) = None
-      fused.collect().foreach { r =>
+      probe.collect().foreach { r =>
         wanted.indices.filterNot(i => r.isNullAt(i + 1)).foreach(i =>
           probed((r.getLong(0), wanted(i))) = Some(r.getStruct(i + 1)))
       }
@@ -185,15 +188,16 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
     * keep reporting healthy after the session died). */
   def alive: Boolean = !spark.sparkContext.isStopped
 
-  /** Per-group cached row counts — the stats/health probe's view of the
-    * cache tier (api.py:190-210's get_feature_store_stats analogue).
-    * MEMOIZED: a load balancer polls health every few seconds, and three
-    * count jobs per poll would serialize behind real lookups; the first
-    * call pays (and materializes the caches), later calls are free until
-    * `invalidate` clears the memo with the tables. */
+  /** Per-group row counts of the group tier — the stats/health probe's
+    * view of the cache tier (api.py:190-210's get_feature_store_stats
+    * analogue), one `count(group)` aggregate over the tier. MEMOIZED: a
+    * load balancer polls health every few seconds, and a job per poll would
+    * serialize behind real lookups; the first call pays, later calls are
+    * free until `invalidate` clears the memo with the tier. */
   def groupCounts: Map[String, Long] = {
     countsMemo.getOrElse {
-      val c = featureGroups.map(g => g -> cache(g).count()).toMap
+      val r = tier.select(featureGroups.map(g => count(col(g))): _*).head()
+      val c = featureGroups.zipWithIndex.map { case (g, i) => g -> r.getLong(i) }.toMap
       countsMemo = Some(c)
       c
     }
@@ -212,8 +216,8 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
   /** Per-user invalidation at the REFERENCE's granularity (cache.py:
     * 167-196: DELETE removes the user's Redis keys; the database is
     * untouched and the next read re-fetches). Here: drop the user's row-
-    * tier entries; the group tables stay cached, so an unrelated user's
-    * next read pays nothing. */
+    * tier entries; the group tier stays, so an unrelated user's next read
+    * pays nothing. */
   def invalidateUser(userId: Long): Unit =
     featureGroups.foreach(g => rowMemo.remove((userId, g)))
 
@@ -221,29 +225,28 @@ class FeatureStoreService(spark: SparkSession, dir: String) {
   private val invalidation = new Object
 
   /** Group-tier invalidation (the streaming pipeline's ST3 target): rebuild
-    * the named groups from their sources — FeatureCache's persisted tables
-    * are dropped first, or the rebuild would re-read the old snapshot — the
-    * Spark analogue of a table-wide refresh after an upstream batch lands.
-    * The rebuild runs outside the service lock, so probes keep serving the
-    * old tables meanwhile; the swap, the generation bump and the eviction
-    * of the row-tier entries derived from the old tables happen together
-    * under it. The superseded in-memory copies are unpersisted; their
+    * the tier from the named groups recomputed from their sources —
+    * FeatureCache's persisted tables are dropped first, or the rebuild would
+    * re-read the old snapshot — and the other groups' columns of the old
+    * tier, so those keep their snapshot: the Spark analogue of a table-wide
+    * refresh after an upstream batch lands. The rebuild runs outside the
+    * service lock, so probes keep serving the old tier meanwhile; the swap,
+    * the generation bump and the eviction of the row-tier entries derived
+    * from the named groups happen together under it. The superseded tier's
     * checkpoint blocks are left to the ContextCleaner, so a probe still
-    * running over an old copy recomputes from them. */
+    * running over it reads them. */
   def invalidate(groups: Seq[String] = featureGroups): Unit = invalidation.synchronized {
     val named = normalizeTypes(groups)
-    val rebuilt = named.map { g =>
-      graft.core.FeatureCache.invalidate(spark, dir, s"${g}_features")
-      g -> computeGroup(g)
-    }
-    val superseded = synchronized {
+    named.foreach(g => graft.core.FeatureCache.invalidate(spark, dir, s"${g}_features"))
+    val old = tier
+    val rebuilt = buildTier(featureGroups.map(g =>
+      if (named.contains(g)) groupColumn(g)
+      else old.filter(col(g).isNotNull).select(col("user_id"), col(g))))
+    synchronized {
       groupGeneration += 1 // with the clear: see the generation scaladoc
-      val old = named.map(cache)
-      cache = cache ++ rebuilt
+      tier = rebuilt
       rowMemo.filterInPlace { case ((_, g), _) => !named.contains(g) }
       countsMemo = None
-      old
     }
-    superseded.foreach(_.unpersist())
   }
 }

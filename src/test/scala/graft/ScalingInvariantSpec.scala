@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.scalatest.Tag
 
 import graft.core.{DataGen, StageMetrics, Tables}
-import graft.ext.{Corpus, Dedup, Similarity}
+import graft.ext.{Corpus, Dedup, LshReference}
 import graft.jobs.{DataQualityJob, SkewMonitorJob, TrainingSetJob}
 
 /** Marker for the heavier empirical-invariant tests (still run in CI; the
@@ -35,7 +35,7 @@ class ScalingInvariantSpec extends SparkSpec {
 
   test("minhash LSH candidate pairs grow linearly with corpus size", SlowTest) {
     val counts = scales.map { s =>
-      Dedup.minhashPairs(DataGen.nearDupCorpus(spark, base * s)).count()
+      LshReference.minhashPairs(DataGen.nearDupCorpus(spark, base * s)).count()
     }
     // every corpus plants 10 true pairs per 5-doc cluster = 2n; banded LSH
     // at jaccard ~0.54 recalls most but not all (measured ~88%)
@@ -48,7 +48,7 @@ class ScalingInvariantSpec extends SparkSpec {
 
   test("embedding LSH candidate pairs grow linearly with corpus size", SlowTest) {
     val counts = scales.map { s =>
-      Similarity.lshCandidates(DataGen.clusteredVectors(spark, base * s)).count()
+      LshReference.lshCandidates(DataGen.clusteredVectors(spark, base * s)).count()
     }
     assert(counts(0) >= 2 * base * 8 / 10,
       s"candidate recall collapsed at 1×: ${counts(0)} of ${2 * base}")
@@ -70,7 +70,7 @@ class ScalingInvariantSpec extends SparkSpec {
       val flood = spark.range(300 * s)
         .select(($"id" + 1000000L).as("doc_id"), lit(boiler).as("text"))
       val docs = DataGen.nearDupCorpus(spark, base * s).unionByName(flood)
-      Dedup.minhashPairs(docs).count()
+      LshReference.minhashPairs(docs).count()
     }
     assert(counts(0) < 4 * base,
       s"flood pairs leaked through the cap at 1×: ${counts(0)}")
@@ -83,7 +83,7 @@ class ScalingInvariantSpec extends SparkSpec {
       DataGen.nearDupCorpus(spark, base).unionByName(
         spark.range(300).select(($"id" + 1000000L).as("doc_id"), lit(boiler).as("text"))))
       .select("doc_id", "sh")
-    val over = Dedup.minhashOverflowBuckets(Dedup.minhashSignaturesPre(sh)).collect()
+    val over = LshReference.minhashOverflowBuckets(Dedup.minhashSignaturesPre(sh)).collect()
     assert(over.length == 4, s"expected the flood bucket in all 4 bands, got ${over.length}")
     assert(over.forall(_.getAs[Long]("n_docs") == 300L))
   }

@@ -201,33 +201,33 @@ class ScanAuditSpec extends SparkSpec {
   test("serving fused probe: a warm batch miss reads only cached group rows, " +
       "never the source tables") {
     // the one query path with no records pin until r11 (VERDICT item 7):
-    // getBatch's fused probe unions filtered scans of the three cached,
-    // checkpointed feature-group tables — a regression that recomputes a
-    // group job per probe (cache lost, or a plan that bypasses
-    // InMemoryTableScan) would re-scan orders/customer/events on EVERY
-    // batch miss, invisible at test sizes, fatal under serving load at
-    // 100 TB
+    // getBatch's probe is one filtered scan of the service's group tier,
+    // the three feature tables joined on user_id and checkpointed to disk
+    // — a regression that recomputes a group job per probe (checkpoint
+    // lost, or a plan that bypasses the checkpointed scan) would re-scan
+    // orders/customer/events on EVERY batch miss, invisible at test sizes,
+    // fatal under serving load at 100 TB
     val svc = new serving.FeatureStoreService(spark, sf0001)
     val now = java.time.Instant.parse("2001-08-02T02:30:00Z")
     val groups = Seq("user", "transaction", "risk")
-    // first call materializes the group tier (the in-memory copies over
-    // the service's own checkpoints)
     svc.getBatch(Seq(1L, 2L, 3L), groups, now): Unit
-    val groupRows = jobs.UserFeaturesJob(spark, sf0001).count() +
-      jobs.TransactionFeaturesJob(spark, sf0001).count() +
-      jobs.RiskFeaturesJob(spark, sf0001).count()
-    // warm miss on FRESH ids (row tier can't serve them): the fused probe
-    // must read at most one pass over the cached group rows — cached-block
-    // reads DO count in inputMetrics.recordsRead, so 0 would mean the
+    // the tier has one row per user present in any group
+    val tierRows = Seq(jobs.UserFeaturesJob(spark, sf0001),
+      jobs.TransactionFeaturesJob(spark, sf0001), jobs.RiskFeaturesJob(spark, sf0001))
+      .map(_.select("user_id")).reduce(_ union _).distinct().count()
+    // warm miss on FRESH ids (row tier can't serve them): the probe must
+    // read at most one pass over the tier's rows — checkpointed-block reads
+    // DO count in inputMetrics.recordsRead, so 0 would mean the
     // measurement lost the job, not that the probe was free. A regression
     // to per-probe group recomputation would read the SOURCE tables
     // (orders/customer/events — an order of magnitude more records than
-    // the group rows at any sf) and blow the budget.
+    // the tier rows at any sf) and blow the budget, and so would a scan
+    // per requested group.
     val warm = sm.measure {
       svc.getBatch(Seq(11L, 12L, 13L, 14L), groups, now): Unit
     }.inputRecords
-    assert(warm > 0 && warm <= groupRows,
-      s"warm probe read $warm records, budget ($groupRows cached group rows)")
+    assert(warm > 0 && warm <= tierRows,
+      s"warm probe read $warm records, budget ($tierRows group-tier rows)")
   }
 
   test("text-analysis family scan budgets") {

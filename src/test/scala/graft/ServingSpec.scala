@@ -283,7 +283,7 @@ class ServingSpec extends SparkSpec {
   }
 
   test("getBatch fuses the probe: one SQL execution for a 3-group batch") {
-    // warm the group caches so the measured probe is the steady-state path
+    // a first probe, so the measured one is the steady-state path
     svc.getBatch(Seq(1L), Seq("user", "transaction", "risk"), now)
     val execs = sqlExecutionsDuring {
       val res = svc.getBatch(Seq(4L, 5L, 9L), Seq("user", "transaction", "risk"), now)
@@ -294,22 +294,30 @@ class ServingSpec extends SparkSpec {
     assert(execs == 1, s"expected one fused probe execution, saw $execs")
   }
 
-  test("a warm miss plans over the checkpointed group copies: no parquet scan, no exchange") {
+  test("a warm miss plans one scan of the checkpointed tier: no union, no exchange") {
     val svc2 = new FeatureStoreService(spark, sf0001)
-    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // materialize the group tier
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // the first probe of the tier
     val starts = sqlExecutionStartsDuring {
       svc2.getBatch(Seq(2L, 3L, 4L), svc2.featureGroups, now): Unit
     }
     assert(starts.size == 1, s"expected one probe execution, saw ${starts.size}")
     def nodes(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[String] =
       p.nodeName +: p.children.flatMap(nodes)
+    def leaves(p: org.apache.spark.sql.execution.SparkPlanInfo): Seq[String] =
+      if (p.children.isEmpty) Seq(p.nodeName) else p.children.flatMap(leaves)
     val names = nodes(starts.head.sparkPlanInfo)
-    // the plan info walks into each cached relation's own plan: over a
+    // the plan info would walk into a cached relation's own plan: over a
     // `.cache()` of the build, that is the whole feature-build lineage
     assert(!names.exists(_.startsWith("Scan parquet")),
       s"the miss carries the build's parquet scans: ${names.mkString(", ")}")
     assert(!names.exists(_.contains("Exchange")),
       s"the miss plans an exchange: ${names.mkString(", ")}")
+    // one user-keyed table: every group rides one scan, not a per-group union
+    assert(!names.exists(_.contains("Union")),
+      s"the miss unions per-group scans: ${names.mkString(", ")}")
+    val scans = leaves(starts.head.sparkPlanInfo)
+    assert(scans.size == 1 && scans.head.startsWith("Scan"),
+      s"expected one scan leaf, saw ${scans.mkString(", ")}")
   }
 
   test("warm misses on fresh ids compile no new code") {
@@ -372,17 +380,62 @@ class ServingSpec extends SparkSpec {
     }
   }
 
-  test("invalidate frees the superseded group copy's blocks") {
-    val svc2 = new FeatureStoreService(spark, sf0001)
+  test("the group tier adds no in-memory RDD: construct, probe, invalidate(user)") {
+    // FeatureCache's own group tables are in memory by design; build them
+    // first, so what the service adds is measured apart from them
+    Seq(jobs.UserFeaturesJob(spark, sf0001), jobs.TransactionFeaturesJob(spark, sf0001),
+      jobs.RiskFeaturesJob(spark, sf0001)).foreach(_.count(): Unit)
     def inMemory = spark.sparkContext.getRDDStorageInfo.filter(_.memSize > 0).map(_.id).toSet
     val before = inMemory
-    svc2.getBatch(Seq(1L), svc2.featureGroups, now) // materialize the group tier
-    val copies = inMemory -- before
-    assert(copies.size == 3, s"expected one in-memory copy per group, saw $copies")
+    val svc2 = new FeatureStoreService(spark, sf0001)
+    svc2.getBatch(Seq(1L), svc2.featureGroups, now)
     svc2.invalidate(Seq("user"))
     svc2.getBatch(Seq(1L), svc2.featureGroups, now)
-    val gone = copies -- inMemory
-    assert(gone.size == 1, s"invalidate(user) should free exactly one copy, freed $gone")
+    val added = inMemory -- before
+    // the one expected addition is FeatureCache's rebuilt user_features,
+    // which the invalidate recomputed from the sources: dropping it must
+    // leave nothing the service put in memory
+    graft.core.FeatureCache.invalidate(spark, sf0001, "user_features")
+    val left = added.intersect(inMemory)
+    assert(left.isEmpty, s"the service holds in-memory copies: RDDs $left")
+  }
+
+  test("invalidate(user) refreshes user; transaction and risk keep their snapshot") {
+    import java.nio.file.{Files, Path}
+    import spark.implicits._
+    val copy = Files.createTempDirectory("serving-snapshot")
+    Files.list(java.nio.file.Paths.get(sf0001))
+      .forEach(f => Files.copy(f, copy.resolve(f.getFileName)): Unit)
+    val dir = copy.toString
+    val groups = Seq("user", "transaction", "risk")
+    try {
+      val svc2 = new FeatureStoreService(spark, dir)
+      // a user with orders and a row in every group
+      val uid = jobs.UserFeaturesJob(spark, dir).filter($"total_orders" > 0).select("user_id")
+        .intersect(jobs.TransactionFeaturesJob(spark, dir).select("user_id"))
+        .intersect(jobs.RiskFeaturesJob(spark, dir).select("user_id"))
+        .as[Long].head()
+      val before = svc2.getFeatures(uid, groups, now).features
+      assert(before.keySet == groups.toSet)
+      assert(before("user").getAs[Long]("total_orders") > 0)
+      // an upstream batch lands: the user's orders are gone from the source
+      val orders = copy.resolve("orders.parquet")
+      val staged = copy.resolve("orders.staged")
+      spark.read.parquet(orders.toString).filter($"o_custkey" =!= uid)
+        .write.parquet(staged.toString)
+      Files.delete(orders)
+      Files.move(staged, orders)
+      svc2.invalidate(Seq("user"))
+      val after = svc2.getFeatures(uid, groups, now).features
+      assert(after("user").getAs[Long]("total_orders") == 0L,
+        "invalidate(user) served the pre-refresh user row")
+      assert(after("transaction") == before("transaction"),
+        "the transaction group left its snapshot")
+      assert(after("risk") == before("risk"), "the risk group left its snapshot")
+    } finally {
+      groups.map(g => s"${g}_features").foreach(graft.core.FeatureCache.invalidate(spark, dir, _))
+      Files.walk(copy).sorted(java.util.Comparator.reverseOrder[Path]()).forEach(Files.delete(_))
+    }
   }
 
   test("cache anchors consumers on the InMemoryRelation leaf; invalidate still frees the blocks") {

@@ -1,7 +1,7 @@
 package graft
 
 import graft.sinks.MergeByKey
-import graft.ext.{Dedup, Multimodal, Similarity, TextAnalysis}
+import graft.ext.{Dedup, LshReference, Multimodal, Similarity, TextAnalysis}
 import org.apache.spark.sql.functions.{col, explode, expr, length}
 
 /** Merge-by-key upsert semantics (S9) and the ext/ operator sanity beyond
@@ -31,7 +31,7 @@ class SinksAndExtSpec extends SparkSpec {
         Dedup.candidatePairTable(spark, sf0001), 0.5)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assume(verified.nonEmpty, "corpus plants near-duplicates")
-    val candidates = Dedup.minhashPairs(docs)
+    val candidates = LshReference.minhashPairs(docs)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(verified.subsetOf(candidates),
       s"LSH candidates must cover verified pairs; missing ${verified -- candidates}")
@@ -294,7 +294,7 @@ class SinksAndExtSpec extends SparkSpec {
     val buckets = Similarity.withBuckets(emb).collect()
       .map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("table_id")) -> r.getAs[String]("bucket"))
       .toMap
-    val cands = Similarity.lshCandidates(emb).collect()
+    val cands = LshReference.lshCandidates(emb).collect()
     assert(cands.nonEmpty)
     cands.foreach { r =>
       val a = r.getAs[Long]("vec_a"); val b = r.getAs[Long]("vec_b")
@@ -314,7 +314,7 @@ class SinksAndExtSpec extends SparkSpec {
     }
     val emb = (base ++ dups).toDF("vec_id", "embedding")
     val planted = (0L until 50L).map(i => (i, i + 1000L)).toSet
-    val cands = Similarity.lshCandidates(emb).collect()
+    val cands = LshReference.lshCandidates(emb).collect()
       .map(r => (r.getAs[Long]("vec_a"), r.getAs[Long]("vec_b"))).toSet
     val recall = planted.count(cands).toDouble / planted.size
     assert(recall >= 0.8, s"banded-LSH recall on planted near-dups was $recall")
@@ -327,11 +327,11 @@ class SinksAndExtSpec extends SparkSpec {
     // report all four table buckets, and raising the cap restores the pairs.
     val v = Array.tabulate(64)(i => (i % 7 + 1).toFloat)
     val emb = (0L until 100L).map(i => i -> v).toDF("vec_id", "embedding")
-    assert(Similarity.lshCandidates(emb).count() == 0)
-    val over = Similarity.overflowBuckets(emb).collect()
+    assert(LshReference.lshCandidates(emb).count() == 0)
+    val over = LshReference.overflowBuckets(emb).collect()
     assert(over.length == Similarity.NumTables)
     assert(over.forall(_.getAs[Long]("n_vectors") == 100L))
-    assert(Similarity.lshCandidates(emb, maxBucket = 128).count() == 100L * 99 / 2)
+    assert(LshReference.lshCandidates(emb, maxBucket = 128).count() == 100L * 99 / 2)
   }
 
   test("simhash pairs: identical docs collide at hamming 0; disjoint docs don't pair") {
@@ -417,12 +417,12 @@ class SinksAndExtSpec extends SparkSpec {
     val txt = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = (0L until 40L).map(i => (i, txt)).toDF("doc_id", "text")
     val sig = Dedup.simhash64(docs)
-    val over = Dedup.simhashOverflowBuckets(sig, maxBucket = 16).collect()
+    val over = LshReference.simhashOverflowBuckets(sig, maxBucket = 16).collect()
     assert(over.length == 4, s"expected 4 overflowed band buckets, got ${over.length}")
     assert(over.forall(_.getAs[Long]("n_docs") == 40L))
     assert(over.forall(_.getAs[Long]("min_doc_id") == 0L))
     // and with the cap lifted past the bucket size, nothing overflows
-    assert(Dedup.simhashOverflowBuckets(sig, maxBucket = 64).count() == 0)
+    assert(LshReference.simhashOverflowBuckets(sig, maxBucket = 64).count() == 0)
   }
 
   test("clusters keeps block storage bounded across pointer-jumping rounds") {
